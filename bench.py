@@ -409,7 +409,8 @@ def _medallion_stats(spark, sf_dir: str) -> dict:
     """One timed end-to-end run of the orders medallion pipeline (the
     reference's production ETL path) in a throwaway workdir.  ``total`` is
     pipeline-only (raw-CSV re-export of the parquet testdata is setup, not
-    ETL); stages records it anyway for transparency."""
+    ETL); ``stages`` holds the scheduler's seconds per DAG task
+    (``raw_export`` included, for transparency)."""
     import shutil
     import tempfile
 
@@ -420,11 +421,11 @@ def _medallion_stats(spark, sf_dir: str) -> dict:
     spark.catalog.clearCache()
     workdir = tempfile.mkdtemp(prefix="medallion_bench_")
     try:
-        results, _ = e2e_orders_pipeline(spark, sf_dir, workdir)
+        runs, _ = e2e_orders_pipeline(spark, sf_dir, workdir)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
-    stages = {r.name: round(r.seconds, 2) for r in results}
-    total = round(sum(r.seconds for r in results if r.name != "raw_export"), 3)
+    stages = {r.name: round(r.seconds, 2) for r in runs}
+    total = round(sum(r.seconds for r in runs if r.name != "raw_export"), 3)
     return {"total": total, "stages": stages}
 
 

@@ -84,9 +84,3 @@ def testdata_catalog(spark: SparkSession, sf_dir: str) -> Catalog:
         cat.register(TableSpec(name=name, path=f"{sf_dir}/{name}.parquet"))
     return cat
 
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Convenience: load several testdata tables as DataFrames."""
-    cat = testdata_catalog(spark, sf_dir)
-    use = names or TESTDATA_TABLES
-    return {n: cat.load(n) for n in use}

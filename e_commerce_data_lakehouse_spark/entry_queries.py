@@ -10045,7 +10045,7 @@ def streaming_user_sessions_bucketed(
     )
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
         bucketed_session_stream,
-        run_available_now_complete_parquet,
+        run_available_now_parquet,
         stream_events,
     )
 
@@ -10070,11 +10070,11 @@ def streaming_user_sessions_bucketed(
     # frame is ~rows-of-sessions sized and the memory sink materializes
     # all of it on the driver (maxResultSize aborted the gen-sf10 run)
     sink = tempfile.mkdtemp(prefix=f"sess_bkt_{uuid.uuid4().hex[:8]}_")
-    run_available_now_complete_parquet(
+    drained = run_available_now_parquet(
         local, tempfile.mkdtemp(prefix="ckpt_"), sink
     )
     stitched = agg_ops.stitch_sessions(
-        spark.read.parquet(sink),
+        drained,
         "user_id",
         "__day",
         gap="30 minutes",

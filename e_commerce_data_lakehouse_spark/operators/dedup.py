@@ -477,15 +477,6 @@ def token_containment_pairs(
 # ---------------------------------------------------------------------------
 # MinHash + LSH (the scale path for fuzzy dedup)
 # ---------------------------------------------------------------------------
-def shingle_array(text_col: Column, n: int = 12) -> Column:
-    """Distinct character n-grams of the normalized text, built with
-    sequence+transform (pure Catalyst expressions, whole-stage codegen)."""
-    s = normalize_text(text_col)
-    length = F.length(s)
-    idx = F.sequence(F.lit(1), F.greatest(length - (n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: s.substr(i, F.lit(n))))
-
-
 # Mersenne prime 2^31-1: with a_i, h < 2^31 the product a_i*h stays below
 # 2^62, so the universal family g_i = (a_i*h + b_i) mod p never overflows a
 # long even under ANSI mode.
@@ -518,28 +509,6 @@ def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     for _ in range(num_hashes):
         out.append((rng.randrange(1, _MINHASH_P), rng.randrange(_MINHASH_P)))
     return out
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> list[Column]:
-    """num_hashes min-hash values of a shingle array (array-expression form;
-    :func:`minhash_lsh_pairs` uses the faster explode+hash-agg form).
-
-    One xxhash64 per shingle, then the universal family
-    ``g_i = (a_i*h + b_i) mod p`` (see :func:`_minhash_coeffs` for why NOT
-    Kirsch-Mitzenmacher) — one mul+mod per (shingle, i), no rehash."""
-    base = F.transform(shingles, lambda sh: F.pmod(F.xxhash64(sh), F.lit(_MINHASH_P)))
-    coeffs = _minhash_coeffs(num_hashes)
-
-    def seeded_min(i: int) -> Column:
-        a, b = coeffs[i]
-        return F.array_min(
-            F.transform(
-                base,
-                lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_MINHASH_P),
-            )
-        )
-
-    return [seeded_min(i).alias(f"mh_{i}") for i in range(num_hashes)]
 
 
 def _signature_mins(

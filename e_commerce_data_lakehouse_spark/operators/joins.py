@@ -55,18 +55,6 @@ def date_key_lookup(
     )
 
 
-def enrich_flag(
-    df: DataFrame,
-    other: DataFrame,
-    on: list[str],
-    flag_col: str,
-) -> DataFrame:
-    """J4: left join a key-set and materialize presence as a boolean flag,
-    fillna(false) — e.g. customer ``has_images`` (``create_global_dw.py:130``)."""
-    marked = other.select(*on).distinct().withColumn(flag_col, F.lit(True))
-    return df.join(F.broadcast(marked), on, "left").fillna({flag_col: False})
-
-
 def fold_left_join(
     base: DataFrame,
     others: list[DataFrame],

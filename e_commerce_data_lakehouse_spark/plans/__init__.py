@@ -1,7 +1,6 @@
 """Pipeline-composition layer (SURVEY §7.1 item 5): medallion stages."""
 
 from e_commerce_data_lakehouse_spark.plans.medallion import (
-    Pipeline,
     StageResult,
     bronze_to_silver,
     gold_daily_rollup,
@@ -10,7 +9,6 @@ from e_commerce_data_lakehouse_spark.plans.medallion import (
 )
 
 __all__ = [
-    "Pipeline",
     "StageResult",
     "bronze_to_silver",
     "gold_daily_rollup",

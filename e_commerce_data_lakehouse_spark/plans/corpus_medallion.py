@@ -42,7 +42,6 @@ commits (SCALING.md §6).
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,14 +60,43 @@ QUALITY_FLOOR = 0.5
 DECON_NGRAM = 4  # word n-gram size (synthetic corpus: 4, prod default 8)
 
 
-def _stage(name: str, table: ManagedTable, t0: float) -> StageResult:
+def _written(table: ManagedTable) -> StageResult:
     # row_count() = parquet-footer metadata (Delta: txn-log stats) — the
     # old read().count() launched a Spark job per stage just to report
     # the row count the storage layer already knows (guide §1.2: these
     # pipelines are JOB-COUNT bound — profiled 28-31 sequential jobs with
     # 1.7-2.3 s of pure scheduling gap per run)
-    return StageResult(
-        name, table.row_count(), round(time.monotonic() - t0, 3)
+    return StageResult(table.row_count())
+
+
+# The batch stages and the incremental per-batch body share the three
+# definitions below: the incremental path's claim to produce tables
+# bit-identical to the batch rebuild rests on both using the same ones.
+def _annotate(docs: DataFrame) -> DataFrame:
+    """The bronze projection: the stateless per-row facts every later
+    stage reads (quality score, normalized-content fingerprint,
+    whitespace token count) — map-only codegen expressions."""
+    text = F.col("text")
+    return docs.select(
+        "doc_id",
+        "lang",
+        "text",
+        tx.quality_score(text).alias("quality"),
+        tx.fingerprint(text).alias("fp"),
+        tx.whitespace_token_count(text).alias("n_tok"),
+    )
+
+
+def _benchmark(df: DataFrame) -> DataFrame:
+    """The held-out benchmark docs (``doc_id % 97 = 0``)."""
+    return df.filter(F.col("doc_id") % BENCH_MOD == 0)
+
+
+def _curation_gate(df: DataFrame) -> DataFrame:
+    """Hold out the benchmark and drop docs under the quality floor."""
+    return df.filter(
+        (F.col("doc_id") % BENCH_MOD != 0)
+        & (F.col("quality") >= QUALITY_FLOOR)
     )
 
 
@@ -99,19 +127,8 @@ def _keep_min_doc(df: DataFrame) -> DataFrame:
 def ingest_bronze(docs: DataFrame, bronze: ManagedTable) -> StageResult:
     """Raw → bronze: annotate once (quality, fingerprint, token count) —
     stateless codegen expressions, map-only."""
-    t0 = time.monotonic()
-    text = F.col("text")
-    bronze.overwrite(
-        docs.select(
-            "doc_id",
-            "lang",
-            "text",
-            tx.quality_score(text).alias("quality"),
-            tx.fingerprint(text).alias("fp"),
-            tx.whitespace_token_count(text).alias("n_tok"),
-        )
-    )
-    return _stage("ingest_bronze", bronze, t0)
+    bronze.overwrite(_annotate(docs))
+    return _written(bronze)
 
 
 def curate_silver(
@@ -119,13 +136,8 @@ def curate_silver(
 ) -> StageResult:
     """Bronze → silver_curated: hold out the benchmark, gate on quality,
     collapse exact near-copies to the lowest doc_id per fingerprint."""
-    t0 = time.monotonic()
-    src = bronze.read().filter(
-        (F.col("doc_id") % BENCH_MOD != 0)
-        & (F.col("quality") >= QUALITY_FLOOR)
-    )
-    silver_curated.overwrite(_keep_min_doc(src))
-    return _stage("curate_silver", silver_curated, t0)
+    silver_curated.overwrite(_keep_min_doc(_curation_gate(bronze.read())))
+    return _written(silver_curated)
 
 
 def decontaminate_silver(
@@ -136,14 +148,13 @@ def decontaminate_silver(
     """silver_curated → silver_clean: drop every doc sharing a distinct
     word 4-gram with the benchmark set (GPT-3 appendix-C shape via
     ``corpus.ngram_overlap`` — gram equi-join, then one anti join)."""
-    t0 = time.monotonic()
-    bench = bronze.read().filter(F.col("doc_id") % BENCH_MOD == 0)
+    bench = _benchmark(bronze.read())
     curated = silver_curated.read()
     contaminated = cp.ngram_overlap(curated, bench, n=DECON_NGRAM).select(
         "doc_id"
     )
     silver_clean.overwrite(curated.join(contaminated, "doc_id", "left_anti"))
-    return _stage("decontaminate", silver_clean, t0)
+    return _written(silver_clean)
 
 
 def publish_gold(
@@ -153,12 +164,11 @@ def publish_gold(
     written ``partitionBy(split, lang)`` (the table is constructed with
     ``GOLD_PARTITION``) so downstream training readers prune to their
     split/language without touching the rest of the corpus."""
-    t0 = time.monotonic()
     gold.overwrite(
         cp.dataset_split(silver_clean.read(), "doc_id", val_pct=10,
                          test_pct=10)
     )
-    return _stage("publish_gold", gold, t0)
+    return _written(gold)
 
 
 def build_catalog(
@@ -166,7 +176,6 @@ def build_catalog(
 ) -> StageResult:
     """Stage catalog: (stage, n_docs, n_tokens) — six 1-row aggregates
     (bounded), unioned and snapshotted; the corpus owner's dashboard."""
-    t0 = time.monotonic()
 
     def stat(stage: str, df: DataFrame) -> DataFrame:
         return df.agg(
@@ -206,7 +215,7 @@ def build_catalog(
         .unionByName(gold_rows)
     )
     catalog.overwrite(out)
-    return _stage("catalog", catalog, t0)
+    return _written(catalog)
 
 
 _CORPUS_TABLE_NAMES = (
@@ -307,40 +316,22 @@ def ingest_corpus_batch(
     ``append_once(txn)``: a re-delivered ``txn`` short-circuits every
     stage to a no-op.  Returns the batch's TaskRun list."""
     state: dict[str, object] = {}
-    text = F.col("text")
-    annotated = batch.select(
-        "doc_id",
-        "lang",
-        "text",
-        tx.quality_score(text).alias("quality"),
-        tx.fingerprint(text).alias("fp"),
-        tx.whitespace_token_count(text).alias("n_tok"),
-    )
+    annotated = _annotate(batch)
 
     def ingest() -> StageResult:
-        t0 = time.monotonic()
         fresh = tables["bronze"].append_once(annotated, txn)
         # a re-delivered batch short-circuits the whole chain: no
         # stored-table reads, checkpoints, or rewrites for an empty
         # delta (the O(delta) contract includes delta = 0)
         state["skip"] = not fresh
         state["delta"] = annotated if fresh else None
-        return StageResult(
-            "ingest_bronze",
-            annotated.count() if fresh else 0,  # BATCH rows, not table
-            round(time.monotonic() - t0, 3),
-        )
+        return StageResult(annotated.count() if fresh else 0)  # BATCH rows
+
+    def unless_replayed(fn):
+        return lambda: StageResult(0) if state["skip"] else fn()
 
     def curate() -> StageResult:
-        t0 = time.monotonic()
-        if state["skip"]:
-            return StageResult("curate_silver", 0, 0.0)
-        delta = state["delta"]
-        gated = delta.filter(
-            (F.col("doc_id") % BENCH_MOD != 0)
-            & (F.col("quality") >= QUALITY_FLOOR)
-        )
-        in_batch = _keep_min_doc(gated)
+        in_batch = _keep_min_doc(_curation_gate(state["delta"]))
         sc_t = tables["silver_curated"]
         # localCheckpoint (eager), NOT persist: the append below
         # writes INTO the directory these plans read, and Spark's
@@ -366,24 +357,13 @@ def ingest_corpus_batch(
         n_surv = survivors.count()
         if n_surv > 0 or not sc_t.exists():
             sc_t.append(survivors)
-        return StageResult(
-            "curate_silver",
-            n_surv,  # delta rows, not table size
-            round(time.monotonic() - t0, 3),
-        )
+        return StageResult(n_surv)  # delta rows, not table size
 
     def decontaminate() -> StageResult:
-        t0 = time.monotonic()
-        if state["skip"]:
-            return StageResult("decontaminate", 0, 0.0)
         new_curated = state["new_curated"]
         prev = state["prev_curated"]
-        bench_all = tables["bronze"].read().filter(
-            F.col("doc_id") % BENCH_MOD == 0
-        )
-        bench_new = state["delta"].filter(
-            F.col("doc_id") % BENCH_MOD == 0
-        )
+        bench_all = _benchmark(tables["bronze"].read())
+        bench_new = _benchmark(state["delta"])
         found = cp.ngram_overlap(
             new_curated, bench_all, n=DECON_NGRAM
         ).select("doc_id")
@@ -408,16 +388,12 @@ def ingest_corpus_batch(
                 ct.read(), "doc_id", "left_anti"
             )
         )
-        return _stage("decontaminate", tables["silver_clean"], t0)
+        return _written(tables["silver_clean"])
 
-    def gold_task(state=state) -> StageResult:
-        if state["skip"]:
-            return StageResult("publish_gold", 0, 0.0)
+    def gold_task() -> StageResult:
         return publish_gold(tables["silver_clean"], tables["gold"])
 
-    def catalog_task(state=state) -> StageResult:
-        if state["skip"]:
-            return StageResult("catalog", 0, 0.0)
+    def catalog_task() -> StageResult:
         return build_catalog(
             {
                 k: tables[k]
@@ -431,35 +407,34 @@ def ingest_corpus_batch(
             tables["catalog"],
         )
 
+    # retries=0: these stages append to stored tables, so a re-run is
+    # not idempotent (a retried ingest finds its own txn marker and
+    # would skip the batch)
     dag = Dag(f"corpus_incremental_b{label}", schedule="0 2 * * *")
-    dag.add("ingest_bronze", ingest, retries=0, timeout=1800)
+    dag.add("ingest_bronze", ingest, retries=0)
     dag.add(
         "curate_silver",
-        curate,
+        unless_replayed(curate),
         deps=["ingest_bronze"],
         retries=0,
-        timeout=1800,
     )
     dag.add(
         "decontaminate",
-        decontaminate,
+        unless_replayed(decontaminate),
         deps=["curate_silver"],
         retries=0,
-        timeout=1800,
     )
     dag.add(
         "publish_gold",
-        gold_task,
+        unless_replayed(gold_task),
         deps=["decontaminate"],
         retries=0,
-        timeout=1800,
     )
     dag.add(
         "catalog",
-        catalog_task,
+        unless_replayed(catalog_task),
         deps=["publish_gold"],
         retries=0,
-        timeout=1800,
     )
     return dag.run(spark)
 
@@ -520,8 +495,9 @@ def corpus_dag(
     spark: SparkSession, sf_dir: str, workdir: str
 ) -> tuple[Dag, dict[str, ManagedTable]]:
     """The corpus curation chain as a scheduler DAG (same contract as
-    ``medallion.orders_dag``: retries=1, 1800 s per-task timeout,
-    linear dependencies, every stage an idempotent overwrite commit)."""
+    ``medallion.orders_dag``: the scheduler's retries=1 / 1800 s task
+    defaults, linear dependencies, every stage an idempotent overwrite
+    commit)."""
     from e_commerce_data_lakehouse_spark.entry_queries import load
 
     tables = _corpus_tables(
@@ -532,18 +508,11 @@ def corpus_dag(
     )
     docs = load(spark, sf_dir, "documents")["documents"]
     dag = Dag("corpus_lakehouse", schedule="0 2 * * *")
-    dag.add(
-        "ingest_bronze",
-        lambda: ingest_bronze(docs, tables["bronze"]),
-        retries=1,
-        timeout=1800,
-    )
+    dag.add("ingest_bronze", lambda: ingest_bronze(docs, tables["bronze"]))
     dag.add(
         "curate_silver",
         lambda: curate_silver(tables["bronze"], tables["silver_curated"]),
         deps=["ingest_bronze"],
-        retries=1,
-        timeout=1800,
     )
     dag.add(
         "decontaminate",
@@ -551,21 +520,15 @@ def corpus_dag(
             tables["bronze"], tables["silver_curated"], tables["silver_clean"]
         ),
         deps=["curate_silver"],
-        retries=1,
-        timeout=1800,
     )
     dag.add(
         "publish_gold",
         lambda: publish_gold(tables["silver_clean"], tables["gold"]),
         deps=["decontaminate"],
-        retries=1,
-        timeout=1800,
     )
     dag.add(
         "catalog",
         lambda: build_catalog(tables, tables["catalog"]),
         deps=["publish_gold"],
-        retries=1,
-        timeout=1800,
     )
     return dag, tables

@@ -26,9 +26,8 @@ same, the write mode changes).
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +39,7 @@ from e_commerce_data_lakehouse_spark.operators.dedup import (
 )
 from e_commerce_data_lakehouse_spark.operators.joins import date_key_lookup
 from e_commerce_data_lakehouse_spark.operators.merge import incremental_rows
+from e_commerce_data_lakehouse_spark.plans.scheduler import Dag, TaskRun
 from e_commerce_data_lakehouse_spark.sources.backends import (
     contains_map_type,
 )
@@ -53,29 +53,11 @@ from e_commerce_data_lakehouse_spark.sources.sinks import ManagedTable
 
 @dataclass
 class StageResult:
-    name: str
+    """What a stage reports.  The task name, attempts and seconds live
+    on the scheduler's :class:`plans.scheduler.TaskRun`, which times
+    every attempt, so stages never time themselves."""
+
     rows_written: int
-    seconds: float
-    checks: list = field(default_factory=list)
-
-
-@dataclass
-class Pipeline:
-    """Linear chain of named stages (one reference DAG)."""
-
-    name: str
-    stages: list[tuple[str, Callable[[], StageResult]]] = field(default_factory=list)
-
-    def add(self, name: str, fn: Callable[[], StageResult]) -> "Pipeline":
-        self.stages.append((name, fn))
-        return self
-
-    def run(self) -> list[StageResult]:
-        return [fn() for _, fn in self.stages]
-
-
-def _timed(name: str, df_count: int, t0: float, checks=()) -> StageResult:
-    return StageResult(name, df_count, round(time.monotonic() - t0, 3), list(checks))
 
 
 def ingest_raw_to_bronze(
@@ -88,16 +70,15 @@ def ingest_raw_to_bronze(
 ) -> StageResult:
     """Raw→bronze: ledger-gated ingest + lineage + partition columns
     (``csv_to_deltalake_table.py`` minus the driver-side file loop)."""
-    t0 = time.monotonic()
     new = ledger.new_files(discovered)
     if not new:
-        return _timed("raw_to_bronze", 0, t0)
+        return StageResult(0)
     df = with_partition_columns(with_lineage(read_fn(new)), ts_col)
     bronze.append(df)
     ledger.mark_processed(new)
     # row_count() = storage metadata (parquet footers / Delta txn-log
     # stats) — no Spark job for a number the storage layer knows
-    return _timed("raw_to_bronze", bronze.row_count(), t0)
+    return StageResult(bronze.row_count())
 
 
 def bronze_to_silver(
@@ -107,59 +88,39 @@ def bronze_to_silver(
     ts_col: str,
     clean_fn: Callable[[DataFrame], DataFrame] | None = None,
     min_retention: float = 0.5,
-    dedup: str = "agg",
 ) -> StageResult:
     """Bronze→silver: watermark incremental (T2) + clean + dedup-keep-latest
     (W1) + keyed MERGE (cross-batch dedup, unlike the reference's T4 gap).
 
-    The dedup defaults to the SKEW-ROBUST ``keep_latest_agg`` form
-    (``max(struct)``, partially aggregated map-side: ~n_partitions rows
-    per key at the reducer no matter how hot the key — the window form
-    sorts every row of a key in one task, 1.2× task skew on the planted
-    20%-hot key and growing with data, r10 sweep).  Equivalence is
-    hash-proven (``dedup_latest_events_agg`` carries the window oracle
-    verbatim); pass ``dedup="window"`` for schemas with non-orderable
-    (map-typed) payload columns, which ``max(struct)`` rejects — and when
-    the default "agg" meets such a schema it FALLS BACK to the window
-    form with a warning instead of raising at analysis (r11 ADVICE: the
-    r11 default flip would otherwise break existing map-payload callers)."""
-    if dedup not in ("agg", "window"):
-        raise ValueError(f"dedup must be 'agg' or 'window', got {dedup!r}")
-    t0 = time.monotonic()
+    The dedup form follows from the schema.  Orderable payloads take the
+    SKEW-ROBUST ``keep_latest_agg`` form (``max(struct)``, partially
+    aggregated map-side: ~n_partitions rows per key at the reducer no
+    matter how hot the key — the window form sorts every row of a key in
+    one task, 1.2× task skew on the planted 20%-hot key and growing with
+    data, r10 sweep).  Equivalence is hash-proven
+    (``dedup_latest_events_agg`` carries the window oracle verbatim).
+    A map-typed (non-orderable) payload column, which ``max(struct)``
+    rejects at analysis, takes the window form ``keep_latest``."""
     src = bronze.read()
     if silver.exists():
         batch = incremental_rows(src, silver.read(), ts_col)
     else:
         batch = src
     if batch.limit(1).count() == 0:
-        return _timed("bronze_to_silver", 0, t0)
+        return StageResult(0)
     cleaned = clean_fn(batch) if clean_fn else batch
-    if dedup == "agg":
-        non_orderable = [
-            f.name
-            for f in cleaned.schema.fields
-            if contains_map_type(f.dataType)
-        ]
-        if non_orderable:
-            import warnings
-
-            warnings.warn(
-                "bronze_to_silver: payload columns "
-                f"{non_orderable} are map-typed (non-orderable) — "
-                "max(struct) can't carry them; falling back to the "
-                "window dedup form (pass dedup='window' to silence)",
-                stacklevel=2,
-            )
-            dedup = "window"
-    dedup_fn = keep_latest_agg if dedup == "agg" else keep_latest
+    dedup_fn = (
+        keep_latest
+        if any(contains_map_type(f.dataType) for f in cleaned.schema.fields)
+        else keep_latest_agg
+    )
     deduped = dedup_fn(cleaned, key, ts_col)
-    retention = q.retention_rate(batch, deduped, warn_below=min_retention)
-    retention.expect()
+    q.retention_rate(batch, deduped, warn_below=min_retention).expect()
     silver.merge_scd1(deduped, key)
     out = silver.read()
     q.uniqueness(out, key).expect()
     # metadata-only count of the just-committed snapshot (== out.count())
-    return _timed("bronze_to_silver", silver.row_count(), t0, [retention])
+    return StageResult(silver.row_count())
 
 
 def with_date_key_parts(
@@ -270,81 +231,6 @@ def measure_fact_partition_grain(
     )
 
 
-def _trunc_div(a: int, b: int) -> int:
-    """Truncate-toward-zero division — Spark's integer ``div`` (Python's
-    ``//`` floors: ``-1 // 10000 == -1`` where Spark says 0, which made
-    the -1 sentinel's predicate miss its own partition — r11 review)."""
-    return -(-a // b) if (a < 0) != (b < 0) else a // b
-
-
-def _trunc_mod(a: int, b: int) -> int:
-    """Remainder with the dividend's sign — Spark's ``%``."""
-    return a - _trunc_div(a, b) * b
-
-
-def _grain_columns(grain: tuple[str, ...]) -> dict[str, str]:
-    """Resolve a fact grain tuple to its year/month/day column names.
-
-    Grains are minted by :func:`choose_fact_partition_grain` /
-    :func:`with_date_key_parts` as ``(f"{prefix}year", f"{prefix}month"
-    [, f"{prefix}day"])`` — the prefix varies per fact (the global-DW
-    activity fact uses ``activity_``), so anything that builds
-    predicates over grain columns must resolve names by suffix instead
-    of hardcoding the unprefixed trio (r12 review: the rollup passed a
-    prefixed grain into a predicate over ``F.col("year")`` —
-    AnalysisException on prefixed facts, and ``"day" in grain`` never
-    matched ``activity_day``, silently dropping day-level pruning)."""
-    cols: dict[str, str] = {}
-    for c in grain:
-        for part in ("year", "month", "day"):
-            if c == part or c.endswith(part):
-                cols[part] = c
-                break
-    missing = {"year", "month"} - cols.keys()
-    if missing:
-        raise ValueError(
-            f"grain {grain!r} lacks year/month columns ({sorted(missing)})"
-        )
-    return cols
-
-
-def date_key_partition_predicate(
-    keys: list[int], grain: tuple[str, ...] = FACT_PARTITION_GRAIN
-):
-    """Partition predicate covering a set of yyyymmdd date keys at the
-    fact's grain — arithmetic over partition columns IS a
-    PartitionFilter, so a touched-days read lists only touched months
-    (and, at day grain, only touched days).  Grain column names are
-    resolved by suffix (:func:`_grain_columns`), so prefixed grains
-    (``activity_year`` …) build predicates over the columns the fact
-    actually carries.  The Python arithmetic
-    mirrors Spark's truncate-toward-zero div/% exactly so the ``-1``
-    sentinel (year=0/month=0/day=-1) prunes to its own partition instead
-    of silently matching nothing; NULL keys are excluded here AND by the
-    caller's day-key IN list (neither an isin nor an equi semi join
-    matches NULL — the pre-r11 semi-join behavior, unchanged)."""
-    gc = _grain_columns(grain)
-    ks = [k for k in keys if k is not None]
-    ym = sorted(
-        {_trunc_div(k, 10000) * 100 + _trunc_mod(_trunc_div(k, 100), 100)
-         for k in ks}
-    )
-    pred = (F.col(gc["year"]) * 100 + F.col(gc["month"])).isin(ym)
-    if "day" in gc:
-        ymd = sorted(
-            {_trunc_div(k, 10000) * 10000
-             + _trunc_mod(_trunc_div(k, 100), 100) * 100
-             + _trunc_mod(k, 100)
-             for k in ks}
-        )
-        pred = pred & (
-            F.col(gc["year"]) * 10000
-            + F.col(gc["month"]) * 100
-            + F.col(gc["day"])
-        ).isin(ymd)
-    return pred
-
-
 def silver_to_gold_star(
     silver: ManagedTable,
     dim_specs: dict[str, tuple[ManagedTable, list[str], list[str]]],
@@ -362,7 +248,6 @@ def silver_to_gold_star(
     ``dim_specs``: name → (table, key_cols, attr_cols); each dim is the
     distinct projection of its columns (A9) merged SCD-1 on the key.
     """
-    t0 = time.monotonic()
     s = silver.read().cache()
     try:
         for _, (dim_table, keys, attrs) in dim_specs.items():
@@ -378,7 +263,7 @@ def silver_to_gold_star(
         n = fact.row_count()  # footer metadata, no Spark job
     finally:
         s.unpersist()
-    return _timed("silver_to_gold", n, t0)
+    return StageResult(n)
 
 
 def gold_daily_rollup(
@@ -390,7 +275,6 @@ def gold_daily_rollup(
 ) -> StageResult:
     """Gold aggregate: daily operational rollup (A4), full recompute +
     overwrite (the reference's T5 semantics)."""
-    t0 = time.monotonic()
     df = (
         fact.read()
         .groupBy(date_key_name)
@@ -401,75 +285,7 @@ def gold_daily_rollup(
         )
     )
     agg_table.overwrite(df)
-    return _timed("gold_daily_rollup", agg_table.row_count(), t0)
-
-
-def gold_daily_rollup_incremental(
-    fact_batch: DataFrame,
-    fact: ManagedTable,
-    agg_table: ManagedTable,
-    date_key_name: str,
-    value_col: str,
-    id_col: str,
-) -> StageResult:
-    """Gold aggregate maintenance, partition-wise: recompute ONLY the date
-    keys touched by ``fact_batch`` and MERGE them over the standing rollup.
-
-    This is the 100 TB form of :func:`gold_daily_rollup`: a day's
-    increment touches a handful of date keys, so the full-table recompute
-    (scan-everything, every run) becomes scan-the-affected-partitions —
-    keeping the recompute exact for non-decomposable aggregates like
-    ``avg`` (no drift from merging partial averages).  The fact IS
-    written partitioned by the date key (``orders_dag``, r11 — the
-    reference's universal fact layout), and the touched-key set is
-    pushed as a LITERAL partition filter: one bounded-metadata collect
-    of the batch's distinct days (≤ days-per-batch rows — the same
-    class as a watermark read), which gives static PartitionFilters
-    pruning at the scan — provable in the plan, no reliance on DPP
-    heuristics (probed: Spark only plans dynamic pruning when the build
-    side carries a selective Filter, which a distinct-projection frame
-    does not).  A pathological backfill touching more days than
-    ``max_literal_keys`` falls back to the broadcast semi join (full
-    scan, still exact).
-    """
-    t0 = time.monotonic()
-    max_literal_keys = 10_000  # ~a 27-year daily backfill; IN-list stays cheap
-    keys = [
-        r[0]
-        for r in fact_batch.select(date_key_name)
-        .distinct()
-        .limit(max_literal_keys + 1)
-        .collect()
-    ]
-    src = fact.read()
-    if len(keys) <= max_literal_keys:
-        day_filter = F.col(date_key_name).isin(keys)
-        # prune at the fact's ACTUAL grain (computed per-table since r12
-        # — choose_fact_partition_grain — so a day-partitioned fact gets
-        # day-level PartitionFilters, a month-partitioned one month-level)
-        grain = tuple(fact.partition_by) or FACT_PARTITION_GRAIN
-        if set(grain) <= set(src.columns):
-            # touched partitions reach PartitionFilters; the day IN-list
-            # prunes row groups via parquet min/max stats inside them
-            day_filter = day_filter & date_key_partition_predicate(
-                keys, grain=grain
-            )
-        src = src.filter(day_filter)
-    else:
-        touched = fact_batch.select(date_key_name).distinct()
-        src = src.join(F.broadcast(touched), date_key_name, "left_semi")
-    df = (
-        src.groupBy(date_key_name)
-        .agg(
-            F.sum(value_col).alias("total_value"),
-            F.count(id_col).alias("record_count"),
-            F.avg(value_col).alias("avg_value"),
-        )
-    )
-    agg_table.merge_scd1(df, [date_key_name])
-    return _timed(
-        "gold_daily_rollup_incremental", agg_table.row_count(), t0
-    )
+    return StageResult(agg_table.row_count())
 
 
 def build_catalog_table(
@@ -496,15 +312,15 @@ def build_catalog_table(
 
 def orders_dag(
     spark: SparkSession, sf_dir: str, workdir: str
-) -> tuple["object", dict[str, ManagedTable]]:
+) -> tuple[Dag, dict[str, ManagedTable]]:
     """The orders chain as a :class:`plans.scheduler.Dag` — the
     reference's Airflow chain (``lakehouse_pipeline_dag.py:31-71``:
     raw → kafka/minio → bronze → silver → gold, ``retries=1``,
-    ``cmd_timeout=1800``) rebuilt on the in-process scheduler, so the
-    dependency/retry/timeout contract is executable and testable instead
-    of deferred to an external orchestrator.  Returns the UN-RUN dag
-    plus the table handles; each task's ``fn`` yields the stage's
-    :class:`StageResult`.  Tasks communicate through the tables on disk
+    ``cmd_timeout=1800``, the scheduler's task defaults) rebuilt on the
+    in-process scheduler, so the dependency/retry/timeout contract is
+    executable and testable instead of deferred to an external
+    orchestrator.  Returns the UN-RUN dag plus the table handles; each
+    task's ``fn`` yields the stage's :class:`StageResult`.  Tasks communicate through the tables on disk
     (exactly like the reference's stages) — the only in-memory handoff
     is the raw file list."""
     import glob
@@ -530,7 +346,6 @@ def orders_dag(
             StructField("o_orderdate", DateType()),
         ]
     )
-    from e_commerce_data_lakehouse_spark.plans.scheduler import Dag
 
     ledger = FileLedger(spark, f"{workdir}/ledger")
     tables = {
@@ -546,10 +361,9 @@ def orders_dag(
         # inside the gold_star TASK, not here: orders_dag returns an
         # UN-RUN dag, and an eager count at construction would be a
         # full-scan job before any task is scheduled (r12 review).
-        # The incremental rollup's touched-keys read then prunes at the
-        # scan instead of reading the whole fact (r10 VERDICT missing
-        # #3); optimized_write bin-packs each commit's files per
-        # partition directory.
+        # Date-keyed reads then prune at the scan instead of reading
+        # the whole fact (r10 VERDICT missing #3); optimized_write
+        # bin-packs each commit's files per partition directory.
         "fact_orders": ManagedTable(
             spark,
             f"{workdir}/fact_orders",
@@ -560,7 +374,6 @@ def orders_dag(
     state: dict[str, object] = {}
 
     def raw_export() -> StageResult:
-        t0 = time.monotonic()
         # raw deliveries are external inputs: export once, reuse on
         # re-runs (a fresh Spark CSV write mints new part-file names,
         # which the ledger would rightly treat as new deliveries and
@@ -586,7 +399,7 @@ def orders_dag(
                     f"{workdir}/raw/{name}"
                 )
         state["raw_files"] = sorted(glob.glob(f"{workdir}/raw/drop_*/*.csv"))
-        return _timed("raw_export", len(state["raw_files"]), t0)
+        return StageResult(len(state["raw_files"]))
 
     def bronze() -> StageResult:
         return ingest_raw_to_bronze(
@@ -647,24 +460,21 @@ def orders_dag(
         )
 
     def catalog() -> StageResult:
-        t5 = time.monotonic()
-        n_cat = build_catalog_table(spark, tables).count()
-        return _timed("catalog", n_cat, t5)
+        return StageResult(build_catalog_table(spark, tables).count())
 
     dag = Dag("orders_lakehouse", schedule="0 0 * * *")
-    # retries=1 + 1800 s timeout = the reference DAG's default_args
-    dag.add("raw_export", raw_export, retries=1, timeout=1800)
-    dag.add("bronze", bronze, deps=("raw_export",), retries=1, timeout=1800)
-    dag.add("silver", silver, deps=("bronze",), retries=1, timeout=1800)
-    dag.add("gold_star", gold_star, deps=("silver",), retries=1, timeout=1800)
-    dag.add("rollup", rollup, deps=("gold_star",), retries=1, timeout=1800)
-    dag.add("catalog", catalog, deps=("rollup",), retries=1, timeout=1800)
+    dag.add("raw_export", raw_export)
+    dag.add("bronze", bronze, deps=("raw_export",))
+    dag.add("silver", silver, deps=("bronze",))
+    dag.add("gold_star", gold_star, deps=("silver",))
+    dag.add("rollup", rollup, deps=("gold_star",))
+    dag.add("catalog", catalog, deps=("rollup",))
     return dag, tables
 
 
 def e2e_orders_pipeline(
     spark: SparkSession, sf_dir: str, workdir: str
-) -> tuple[list[StageResult], dict[str, ManagedTable]]:
+) -> tuple[list[TaskRun], dict[str, ManagedTable]]:
     """The reference's production path as ONE call: raw CSV drops →
     bronze (file-ledger ingest) → silver (watermark + clean + dedup +
     MERGE) → gold star (dims + date-key fact) → daily rollup → catalog.
@@ -674,13 +484,15 @@ def e2e_orders_pipeline(
     a per-stage breakdown (VERDICT r3 #6) against the reference's
     1800 s/stage Airflow budget.  Raw-file creation (re-exporting the
     parquet testdata as two CSV deliveries with ~1% cross-file duplicates)
-    is part of the returned ``raw_export`` stage; callers benching only
-    the pipeline can drop that stage's seconds.
+    is the ``raw_export`` task; callers benching only the pipeline can
+    drop that task's seconds.
 
     Since r8 this is a thin wrapper over :func:`orders_dag` run through
     the in-process scheduler (dependency order + retries + timeouts —
     the reference's Airflow contract); a non-success task raises with
-    the scheduler's report so promotion failures stay loud.
+    the scheduler's report so promotion failures stay loud.  Returns
+    the scheduler's :class:`TaskRun` list (name, attempts, seconds and
+    the stage's :class:`StageResult`) plus the table handles.
     """
     dag, tables = orders_dag(spark, sf_dir, workdir)
     runs = dag.run(spark)
@@ -690,4 +502,4 @@ def e2e_orders_pipeline(
             "pipeline failed: "
             + "; ".join(f"{r.name}={r.status} ({r.error})" for r in bad)
         )
-    return [r.result for r in runs], tables
+    return runs, tables

@@ -45,13 +45,18 @@ class Task:
     name: str
     fn: Callable[[], object]
     deps: tuple[str, ...] = ()
+    # the reference DAG's default_args: retries=1, cmd_timeout=1800
     retries: int = 1
     retry_delay: float = 0.0
-    timeout: float | None = None
+    timeout: float | None = 1800
 
 
 @dataclass
 class TaskRun:
+    """The one run record of a task: the scheduler times every attempt,
+    so ``seconds`` covers retries and ``result`` is the task's return
+    value (a stage's :class:`plans.medallion.StageResult`)."""
+
     name: str
     status: str  # success | failed | timeout | upstream_failed
     attempts: int
@@ -79,7 +84,7 @@ class Dag:
         deps: tuple[str, ...] | list[str] = (),
         retries: int = 1,
         retry_delay: float = 0.0,
-        timeout: float | None = None,
+        timeout: float | None = 1800,
     ) -> "Dag":
         if name in self.tasks:
             raise ValueError(f"duplicate task {name!r}")

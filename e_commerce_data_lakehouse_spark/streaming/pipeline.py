@@ -162,29 +162,6 @@ def run_available_now_append(
     q.awaitTermination()
 
 
-def run_available_now_complete_parquet(
-    result: DataFrame, checkpoint_dir: str, path: str
-) -> None:
-    """Drain a COMPLETE-mode streaming aggregate into a parquet
-    directory via ``foreachBatch`` overwrite — the scalable complete
-    vehicle: each micro-batch rewrites the complete-so-far result
-    executor-side, so NOTHING materializes on the driver (the memory
-    sink collects the whole result there, which caps it at ~sf3 driver
-    heap / spark.driver.maxResultSize — the r12 sf10 sweep hit exactly
-    that on the bucketed session drain).  After ``awaitTermination`` the
-    directory holds the final complete result."""
-    q = (
-        result.writeStream.foreachBatch(
-            lambda batch, _id: batch.write.mode("overwrite").parquet(path)
-        )
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def run_available_now_parquet(
     result: DataFrame,
     checkpoint_dir: str,

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from e_commerce_data_lakehouse_spark.operators.ranking import (
@@ -178,6 +179,23 @@ def test_exact_values_at_ranks_brute_force(spark):
             got = vals[(g,)][i]
             assert isinstance(got, Decimal)
             assert got == lst[i], (g, i)
+
+
+@pytest.mark.parametrize("key_type", ["float", "double"])
+def test_exact_values_at_rejects_float_group_keys(spark, key_type):
+    """NaN != NaN breaks every driver-side dict keyed by group, so a
+    FloatType or DoubleType group column fails loudly up front instead
+    of silently losing the NaN group."""
+    from e_commerce_data_lakehouse_spark.operators.ranking import (
+        exact_values_at,
+    )
+
+    df = spark.createDataFrame(
+        [(1.0, 1.0), (float("nan"), 2.0), (None, 3.0)],
+        f"g {key_type}, v double",
+    )
+    with pytest.raises(ValueError, match="float group column"):
+        exact_values_at(df, "v", lambda n: {0}, group_cols=["g"])
 
 
 def test_null_group_key_kept(spark):

@@ -118,7 +118,7 @@ def test_medallion_end_to_end_idempotent(spark, tmp_path, raw_drops):
 
     # run 2: same raw files — ledger skips them; nothing changes
     results2, tables2 = _build(spark, tmp_path, raw_files)
-    assert results2[0].name == "raw_to_bronze" and results2[0].rows_written == 0
+    assert results2[0].rows_written == 0
     assert results2[1].rows_written == 0  # no rows past the watermark
     assert tables2[1].read().count() == n_orders
 
@@ -132,16 +132,6 @@ def test_medallion_end_to_end_idempotent(spark, tmp_path, raw_drops):
     assert agg.read().count() == expected
 
 
-def test_pipeline_runner_orders_stages(spark, tmp_path, raw_drops):
-    raw_files, _ = raw_drops
-    calls = []
-    p = m.Pipeline("demo")
-    p.add("a", lambda: calls.append("a") or m.StageResult("a", 0, 0.0))
-    p.add("b", lambda: calls.append("b") or m.StageResult("b", 0, 0.0))
-    out = p.run()
-    assert calls == ["a", "b"] and [r.name for r in out] == ["a", "b"]
-
-
 def test_catalog_table(spark, tmp_path):
     a = ManagedTable(spark, str(tmp_path / "a"))
     a.create(spark.range(5).toDF("id"))
@@ -151,51 +141,16 @@ def test_catalog_table(spark, tmp_path):
     assert got == {"a": (5, "active"), "b": (0, "missing")}
 
 
-def test_incremental_rollup_equals_full_recompute(spark, tmp_path):
-    """Partition-wise gold maintenance: applying the rollup incrementally
-    per fact batch must land on exactly the full-recompute result, and the
-    second increment must only touch its own date keys."""
-    fact = ManagedTable(spark, str(tmp_path / "fact"))
-    agg = ManagedTable(spark, str(tmp_path / "agg"))
-    orders = spark.read.parquet(f"{SF}/orders.parquet").select(
-        F.col("o_orderkey"),
-        F.col("o_totalprice"),
-        F.date_format("o_orderdate", "yyyyMMdd").cast("int").alias("date_key"),
-    )
-    b1 = orders.filter(F.col("date_key") < 19960101)
-    b2 = orders.filter(F.col("date_key") >= 19960101)
-
-    fact.create(b1)
-    m.gold_daily_rollup_incremental(
-        b1, fact, agg, "date_key", "o_totalprice", "o_orderkey"
-    )
-    n_after_b1 = agg.read().count()
-    fact.append(b2)
-    m.gold_daily_rollup_incremental(
-        b2, fact, agg, "date_key", "o_totalprice", "o_orderkey"
-    )
-
-    full = ManagedTable(spark, str(tmp_path / "full"))
-    m.gold_daily_rollup(fact, full, "date_key", "o_totalprice", "o_orderkey")
-
-    got = sorted(map(tuple, agg.read().collect()))
-    want = sorted(map(tuple, full.read().collect()))
-    assert got == want
-    # first increment produced only pre-1996 keys
-    assert n_after_b1 == b1.select("date_key").distinct().count()
-
-
 def test_e2e_orders_pipeline_composition(spark, tmp_path):
     """The one-call composition (bench's medallion entry) runs the whole
     chain and lands on the same invariants as the hand-assembled build:
     silver == distinct orders, no -1 date keys, rollup == one row per
     order date, catalog sees every table active."""
-    results, tables = m.e2e_orders_pipeline(spark, SF, str(tmp_path))
-    names = [r.name for r in results]
-    assert names == [
-        "raw_export", "raw_to_bronze", "bronze_to_silver",
-        "silver_to_gold", "gold_daily_rollup", "catalog",
+    runs, tables = m.e2e_orders_pipeline(spark, SF, str(tmp_path))
+    assert [r.name for r in runs] == [
+        "raw_export", "bronze", "silver", "gold_star", "rollup", "catalog",
     ]
+    assert all(r.status == "success" and r.seconds > 0 for r in runs)
     n_orders = spark.read.parquet(f"{SF}/orders.parquet").count()
     assert tables["silver_orders"].read().count() == n_orders
     fact = tables["fact_orders"].read()
@@ -206,20 +161,18 @@ def test_e2e_orders_pipeline_composition(spark, tmp_path):
         .select(F.to_date("o_orderdate")).distinct().count()
     )
     assert tables["agg_daily"].read().count() == n_days
-    assert results[-1].rows_written == len(tables)
+    assert runs[-1].result.rows_written == len(tables)
     # idempotent: nothing new on a second pass over the same raw files
-    results2, _ = m.e2e_orders_pipeline(spark, SF, str(tmp_path))
-    assert results2[1].rows_written == 0 and results2[2].rows_written == 0
+    runs2, _ = m.e2e_orders_pipeline(spark, SF, str(tmp_path))
+    assert runs2[1].result.rows_written == 0
+    assert runs2[2].result.rows_written == 0
 
 
 def test_date_key_parts_and_predicate_sentinel_and_day_grain(spark):
-    """r11 review pins: (1) the -1 sentinel's partition predicate must
-    match the partition with_date_key_parts actually writes it to —
-    Python // floors (-1//10000 == -1) where Spark div truncates
-    (-1 div 10000 == 0), so the predicate uses truncate-toward-zero
-    arithmetic; (2) the documented day-grain flip really works: all
-    three hierarchy columns exist and the day-grain predicate prunes
-    per day."""
+    """r11 review pins: (1) the -1 sentinel lands in its own partition
+    (Spark's div/% truncate toward zero: year=0/month=0/day=-1);
+    (2) the documented day-grain flip really works: all three hierarchy
+    columns exist and a day-partitioned write round-trips."""
     df = spark.createDataFrame(
         [(19980321,), (19980322,), (-1,), (None,)], "date_key int"
     )
@@ -229,53 +182,11 @@ def test_date_key_parts_and_predicate_sentinel_and_day_grain(spark):
     assert got[19980321] == (1998, 3, 21)
     assert got[-1] == (0, 0, -1)  # Spark truncating div/%
     assert got[None] == (None, None, None)
-
-    # month-grain predicate keeps the sentinel row (the r11 review bug:
-    # floor division computed ym=-1 and silently excluded it); it keeps
-    # the whole touched MONTH by design — the caller's day-key IN list
-    # does the day-level filtering inside it
-    kept = parts.filter(
-        m.date_key_partition_predicate([-1, 19980321])
-    ).collect()
-    assert sorted(r.date_key for r in kept) == [-1, 19980321, 19980322]
-    exact = parts.filter(
-        m.date_key_partition_predicate([-1, 19980321])
-        & F.col("date_key").isin([-1, 19980321])
-    ).collect()
-    assert sorted(r.date_key for r in exact) == [-1, 19980321]
-
-    # day-grain predicate prunes to exactly the named days
-    kept_day = parts.filter(
-        m.date_key_partition_predicate(
-            [19980321, -1], grain=("year", "month", "day")
-        )
-    ).collect()
-    assert sorted(r.date_key for r in kept_day) == [-1, 19980321]
-
-    # None keys are excluded (consistent with the day-key IN list and
-    # the pre-r11 semi join — neither matches NULL), not a crash; the
-    # surviving month predicate still covers the whole touched month
-    kept_none = parts.filter(
-        m.date_key_partition_predicate([None, 19980322])
-    ).collect()
-    assert sorted(r.date_key for r in kept_none) == [19980321, 19980322]
-
-    # PREFIXED grains (the global-DW activity fact's measured grain is
-    # ("activity_year", ...)) resolve by suffix — the r12 review found
-    # the predicate hardcoded unprefixed columns, so a prefixed fact hit
-    # AnalysisException and "day" in grain never matched activity_day
+    # prefixed hierarchy columns (the global-DW activity fact)
     pparts = m.with_date_key_parts(df, "date_key", prefix="activity_")
-    kept_pref = pparts.filter(
-        m.date_key_partition_predicate(
-            [19980321, -1],
-            grain=("activity_year", "activity_month", "activity_day"),
-        )
-    ).collect()
-    assert sorted(r.date_key for r in kept_pref) == [-1, 19980321]
-    import pytest as pt
-
-    with pt.raises(ValueError, match="year/month"):
-        m.date_key_partition_predicate([19980321], grain=("activity_day",))
+    assert {"activity_year", "activity_month", "activity_day"} <= set(
+        pparts.columns
+    )
 
     # the one-tuple day-grain flip: a day-partitioned write round-trips
     import tempfile
@@ -288,15 +199,50 @@ def test_date_key_parts_and_predicate_sentinel_and_day_grain(spark):
     assert t.read().count() == 3
 
 
-def test_bronze_to_silver_rejects_unknown_dedup(spark, tmp_path):
-    import pytest as pt
+def test_bronze_to_silver_dedup_form_follows_payload_schema(
+    spark, tmp_path, monkeypatch
+):
+    """max(struct) cannot order a map, so a map-typed payload takes the
+    window form (keep_latest) without a warning; an orderable payload
+    takes the skew-robust agg form (keep_latest_agg)."""
+    import warnings
 
-    with pt.raises(ValueError, match="dedup"):
-        m.bronze_to_silver(
-            ManagedTable(spark, str(tmp_path / "b")),
-            ManagedTable(spark, str(tmp_path / "s")),
-            key=["k"], ts_col="ts", dedup="AGG",
+    used = []
+    for name in ("keep_latest", "keep_latest_agg"):
+        fn = getattr(m, name)
+        monkeypatch.setattr(
+            m, name,
+            lambda *a, _n=name, _f=fn, **k: used.append(_n) or _f(*a, **k),
         )
+    rows = [
+        (1, "2024-01-01 00:00:00", {"v": "old"}),
+        (1, "2024-01-02 00:00:00", {"v": "new"}),
+        (2, "2024-01-01 00:00:00", {"v": "only"}),
+    ]
+    mapped = spark.createDataFrame(
+        rows, "k long, ts string, payload map<string,string>"
+    ).withColumn("ts", F.to_timestamp("ts"))
+    for label, df, form in (
+        ("map", mapped, "keep_latest"),
+        ("flat", mapped.withColumn("payload", F.col("payload")["v"]),
+         "keep_latest_agg"),
+    ):
+        bronze = ManagedTable(spark, str(tmp_path / f"b_{label}"))
+        bronze.create(df)
+        silver = ManagedTable(spark, str(tmp_path / f"s_{label}"))
+        used.clear()
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", UserWarning)
+            r = m.bronze_to_silver(bronze, silver, key=["k"], ts_col="ts")
+        assert used == [form], label
+        assert r.rows_written == 2
+        got = {
+            row["k"]: row["payload"] for row in silver.read().collect()
+        }
+        latest = {1: "new", 2: "only"}
+        assert {
+            k: v["v"] if label == "map" else v for k, v in got.items()
+        } == latest, label
 
 
 def test_fact_orders_partitioned_and_pruned(spark, tmp_path):
@@ -304,10 +250,8 @@ def test_fact_orders_partitioned_and_pruned(spark, tmp_path):
     date hierarchy (the reference's universal fact layout,
     ``csv_to_deltalake_table.py:520``, ``create_global_dw.py:263,345``)
     at the volume-aware month grain, a date-keyed read prunes at the
-    scan (PartitionFilters), the optimized write clusters each month
-    into ONE file per commit, and the incremental rollup's touched-days
-    predicate prunes statically — its docstring's promise, now
-    physical."""
+    scan (PartitionFilters), and the optimized write clusters each
+    month into ONE file per commit."""
     import collections
     import contextlib
     import glob
@@ -335,13 +279,14 @@ def test_fact_orders_partitioned_and_pruned(spark, tmp_path):
     per_dir = collections.Counter(f.rsplit("/", 1)[0] for f in part_files)
     assert max(per_dir.values()) <= cap, per_dir.most_common(3)
 
-    # static pruning: the touched-days predicate the incremental rollup
-    # pushes (year*100+month IN ...) reaches PartitionFilters, and the
-    # day-key IN list prunes row groups inside the touched months
-    some_key = fact.read().select("date_key").first()[0]
+    # static pruning: a date-keyed read that also names the key's
+    # (year, month) reaches PartitionFilters, and the date-key filter
+    # prunes row groups inside that month
+    some = fact.read().select("date_key", "year", "month").first()
     pred = (
-        F.col("date_key").isin([some_key])
-        & m.date_key_partition_predicate([some_key])
+        (F.col("date_key") == some["date_key"])
+        & (F.col("year") == some["year"])
+        & (F.col("month") == some["month"])
     )
     df = fact.read().filter(pred)
     buf = io.StringIO()
@@ -351,18 +296,7 @@ def test_fact_orders_partitioned_and_pruned(spark, tmp_path):
     assert "year" in pf and "month" in pf, pf
     n = df.count()
     assert n > 0
-    assert n == fact.read().filter(f"date_key = {some_key}").count()
-
-    # the incremental rollup itself (which pushes that predicate when
-    # the grain columns are present — probed r11: Spark plans NO dynamic
-    # pruning for a bare distinct-projection build side, so the literal
-    # push is the only plan that avoids rescanning the whole fact)
-    batch = fact.read().filter(F.col("date_key") == some_key)
-    agg_t = ManagedTable(spark, str(tmp_path / "agg_incr"))
-    m.gold_daily_rollup_incremental(
-        batch, fact, agg_t, "date_key", "o_totalprice", "o_orderkey"
-    )
-    assert agg_t.read().count() == 1
+    assert n == fact.read().filter(f"date_key = {some['date_key']}").count()
 
 
 def test_partition_grain_is_computed_from_volume(spark):

@@ -110,9 +110,8 @@ def test_replayed_micro_batch_is_noop(spark, tmp_path):
     batch1 = spark.read.parquet(f"{src}/batch_1.parquet")
     replay = ingest_corpus_batch(spark, tables, batch1, "b1", label="replay")
     assert all(r.status == "success" for r in replay)
-    by_name = {r.name: r.result for r in replay}
-    assert by_name["ingest_bronze"].rows_written == 0  # short-circuited
-    assert by_name["curate_silver"].seconds == 0.0
+    # every stage short-circuited
+    assert all(r.result.rows_written == 0 for r in replay)
     assert _catalog_rows(tables) == before
     assert {n: t._versions() for n, t in tables.items()} == versions_before
 

@@ -288,13 +288,13 @@ def test_stitch_sessions_rejects_temp_collisions(spark):
 
 def test_complete_parquet_drain_matches_memory_sink(spark, tmp_path):
     """r12: the executor-side complete-mode drain
-    (run_available_now_complete_parquet) must leave exactly the final
+    (run_available_now_parquet, complete mode) must leave exactly the final
     complete result in the directory — across MULTIPLE micro-batches
     (each foreachBatch overwrite replaces the previous), since the
     entry-query swap away from the memory sink exists precisely because
     the driver-side collect aborted at gen-sf10 (maxResultSize)."""
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
-        run_available_now_complete_parquet,
+        run_available_now_parquet,
     )
 
     rows = [
@@ -334,11 +334,11 @@ def test_complete_parquet_drain_matches_memory_sink(spark, tmp_path):
         .load(src)
         .withWatermark("ts", "1 hour")
     )
-    sink = str(tmp_path / "sink")
-    run_available_now_complete_parquet(
+    drained = run_available_now_parquet(
         agg.sessionize(stream, "user_id", "ts", gap="30 minutes"),
         str(tmp_path / "ck"),
-        sink,
+        str(tmp_path / "sink"),
+        output_mode="complete",
     )
-    got = sorted(map(tuple, spark.read.parquet(sink).collect()), key=repr)
+    got = sorted(map(tuple, drained.collect()), key=repr)
     assert got == want

@@ -187,11 +187,10 @@ def _streaming_stateful_totals(spark, sf_dir: str):
     sharded by the grouping key, Arrow-batched input — which the batch
     queries never exercise."""
     import tempfile
-    import uuid
 
     from e_commerce_data_lakehouse_spark.streaming import stateful as st
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
-        run_available_now,
+        run_available_now_parquet,
         stream_events,
     )
 
@@ -199,12 +198,13 @@ def _streaming_stateful_totals(spark, sf_dir: str):
     schema = eq._events_stream_schema(spark, sf_dir)
     stream = stream_events(spark, sf_dir, schema, glob="events.parquet")
     totals = st.running_totals_per_key(stream, "user_id", "ts")
-    table = f"stateful_scale_{uuid.uuid4().hex[:8]}"
-    run_available_now(
-        totals, tempfile.mkdtemp(prefix="ckpt_"), table,
+    # executor-side drain: no driver collect, no session-lifetime table
+    return run_available_now_parquet(
+        totals,
+        tempfile.mkdtemp(prefix="ckpt_"),
+        tempfile.mkdtemp(prefix="stateful_scale_"),
         output_mode="update",
     )
-    return spark.table(table)
 
 
 def _medallion_e2e(spark, sf_dir: str):

@@ -1605,9 +1605,10 @@ GROUP BY 1, 2
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A genuine Structured Streaming query: file-source stream over the
     events parquet (stand-in for the reference's Kafka topic), watermarked
-    tumbling 1-hour window, AvailableNow trigger draining to a memory sink —
-    the idiomatic replacement for the reference's hand-rolled offset
-    checkpointing + full recompute (T1/T5,
+    tumbling 1-hour window, AvailableNow trigger drained executor-side
+    into parquet (``run_available_now_parquet``) — the idiomatic
+    replacement for the reference's hand-rolled offset checkpointing +
+    full recompute (T1/T5,
     ``transactions_processor.py:27-116``)."""
     import tempfile
 
@@ -9857,12 +9858,12 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization as a GENUINE Structured Streaming query: the same
     30-minute-gap ``session_window`` expression as the batch
     ``user_sessions``, but run over a watermarked file-source stream
-    (AvailableNow trigger draining to a memory sink) — the state-merging
-    path a live clickstream pipeline runs, where Spark's session-window
-    state store merges windows as events arrive instead of recomputing
-    history.  Oracle: the batch gaps-and-islands SQL — streaming output
-    must equal the batch fixpoint once the stream drains (T4/T5
-    semantics: the reference recomputes sessions per nightly batch,
+    (AvailableNow trigger drained executor-side into parquet) — the
+    state-merging path a live clickstream pipeline runs, where Spark's
+    session-window state store merges windows as events arrive instead of
+    recomputing history.  Oracle: the batch gaps-and-islands SQL —
+    streaming output must equal the batch fixpoint once the stream drains
+    (T4/T5 semantics: the reference recomputes sessions per nightly batch,
     ``transactions_processor.py:27-116``)."""
     import tempfile
 
@@ -10538,14 +10539,13 @@ def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = ManagedTable(
         spark, tempfile.mkdtemp(prefix=f"merge_upsert_{run_id}_")
     )
-    q = foreach_batch_merge(
+    foreach_batch_merge(
         stream,
         target,
         keys=["l_orderkey"],
         checkpoint_dir=tempfile.mkdtemp(prefix="ckpt_"),
         order_col="ord",
     )
-    q.awaitTermination()
     return target.read().select(
         "l_orderkey", "l_linenumber", "l_partkey", "quantity"
     )

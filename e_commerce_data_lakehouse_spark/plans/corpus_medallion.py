@@ -51,6 +51,9 @@ from e_commerce_data_lakehouse_spark.operators import corpus as cp
 from e_commerce_data_lakehouse_spark.plans.medallion import StageResult
 from e_commerce_data_lakehouse_spark.plans.scheduler import Dag
 from e_commerce_data_lakehouse_spark.sources.sinks import ManagedTable
+from e_commerce_data_lakehouse_spark.streaming.pipeline import (
+    drain_available_now,
+)
 
 BENCH_MOD = 97  # doc_id % 97 == 0 -> held-out benchmark (repo convention)
 # Gold's physical layout: training readers filter on (split, lang), so
@@ -481,13 +484,7 @@ def run_streaming(
                 f"corpus streaming batch {batch_id} stages failed: {bad}"
             )
 
-    q = (
-        docs_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_available_now(docs_stream, checkpoint_dir, _sink)
     return all_runs, tables
 
 

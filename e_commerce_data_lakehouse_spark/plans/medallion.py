@@ -425,11 +425,16 @@ def orders_dag(
     def gold_star() -> StageResult:
         fact = tables["fact_orders"]
         if not fact.partition_by:
-            # grain from the measured batch volume, on the SILVER table
-            # the fact is actually built from (one column-pruned
-            # count+distinct-months aggregate, deferred to run time)
+            # a committed fact keeps the grain it was first written at
+            # (re-measuring costs jobs on every run, and a silver grown
+            # past the flip point would make the re-grain raise); a new
+            # fact takes its grain from the measured volume of the SILVER
+            # table it is built from (one column-pruned count +
+            # distinct-months aggregate, deferred to run time)
+            grain = fact._on_disk_grain() if fact.exists() else ()
             fact.set_partition_by(
-                measure_fact_partition_grain(
+                grain
+                or measure_fact_partition_grain(
                     tables["silver_orders"].read(),
                     "o_orderdate",
                     sample_fraction=0.01,

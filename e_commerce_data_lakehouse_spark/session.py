@@ -12,6 +12,12 @@ Scale notes (100 TB target):
 - ``spark.sql.shuffle.partitions`` is only the *initial* shuffle width; AQE
   re-plans it.  On a real cluster you'd raise the default via
   ``shuffle_partitions=2000+``.
+- AQE does not re-plan a stateful streaming shuffle: its width is the
+  number of state-store partitions, fixed at the query's first start and
+  recorded in its checkpoint.  The engine's one AvailableNow start path
+  (``streaming.pipeline.drain_available_now``) takes that width from
+  ``defaultParallelism`` (the cores), not from this setting, so small
+  micro-batches do not pay one state load and commit per idle partition.
 - Arrow is enabled so any pandas-UDF path (multimodal / ANN rerank) is
   batch-vectorized instead of row-pickled.
 - Session timezone is pinned to UTC so timestamp semantics are deterministic

@@ -59,9 +59,9 @@ def read_kafka_batch(
 def read_kafka_stream(
     spark: SparkSession, bootstrap_servers: str, topic: str
 ) -> DataFrame:
-    """S1 (streaming form): unbounded source; pair with
-    ``writeStream.trigger(availableNow=True).option("checkpointLocation", …)``
-    for the run-as-batch pattern that replaces S2 entirely."""
+    """S1 (streaming form): unbounded source; drain it with
+    ``streaming.pipeline.drain_available_now`` (AvailableNow trigger +
+    checkpoint) for the run-as-batch pattern that replaces S2 entirely."""
     return (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)

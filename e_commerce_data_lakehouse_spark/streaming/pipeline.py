@@ -17,8 +17,11 @@ source (identical semantics: source → watermark → window agg → sink).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 
 def stream_events(
@@ -127,6 +130,55 @@ def hourly_event_counts(
     )
 
 
+def drain_available_now(
+    result: DataFrame,
+    checkpoint_dir: str,
+    sink: Callable[[DataFrame, int], None] | str,
+    output_mode: str = "append",
+    query_name: str | None = None,
+) -> StreamingQuery:
+    """Start ``result`` under ``Trigger.AvailableNow`` with its
+    checkpoint, wait until it has drained everything available, and
+    return the terminated query.  ``sink`` is a ``foreachBatch``
+    function or a sink format name (``"memory"``, ``"noop"``).
+
+    Stateful width: AQE never re-plans a stateful streaming shuffle, so
+    every micro-batch runs all ``spark.sql.shuffle.partitions``
+    state-store partitions — each one a state load and commit — however
+    little data the batch holds.  The width is pinned to
+    ``defaultParallelism`` (the cores) for the ``start()`` call only and
+    the session's own value is restored right after: the stream clones
+    the session at ``start()`` and records the width in its offset log,
+    so the caller's later work is untouched.  The width is fixed at a
+    query's first start; a restart from an existing checkpoint keeps the
+    width recorded there.  A ``foreachBatch`` sink's batch frame belongs
+    to the cloned session, so batch work derived from it starts its
+    (AQE-coalesced) shuffles at the same width."""
+    writer = (
+        result.writeStream.outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
+    writer = (
+        writer.foreachBatch(sink) if callable(sink) else writer.format(sink)
+    )
+    if query_name is not None:
+        writer = writer.queryName(query_name)
+    spark = result.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        q = writer.start()
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    q.awaitTermination()
+    return q
+
+
 def run_available_now_append(
     result: DataFrame, checkpoint_dir: str, target
 ) -> None:
@@ -148,18 +200,11 @@ def run_available_now_append(
     flushed — the drained sink therefore holds every session whose end
     ≤ max(event time) − watermark delay, which is what the oracle
     checks."""
-    q = (
-        result.writeStream.foreachBatch(
-            lambda batch, batch_id: target.append_once(
-                batch, f"b{batch_id}"
-            )
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        result,
+        checkpoint_dir,
+        lambda batch, batch_id: target.append_once(batch, f"b{batch_id}"),
     )
-    q.awaitTermination()
 
 
 def run_available_now_parquet(
@@ -191,16 +236,12 @@ def run_available_now_parquet(
     import shutil
 
     mode = "overwrite" if output_mode == "complete" else "append"
-    q = (
-        result.writeStream.foreachBatch(
-            lambda batch, _id: batch.write.mode(mode).parquet(path)
-        )
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        result,
+        checkpoint_dir,
+        lambda batch, _id: batch.write.mode(mode).parquet(path),
+        output_mode,
     )
-    q.awaitTermination()
     shutil.rmtree(checkpoint_dir, ignore_errors=True)
     # explicit schema: exact streaming result types (and a valid empty
     # frame even if no batch produced rows)
@@ -214,12 +255,6 @@ def run_available_now(
     """Drain everything currently available and stop — the streaming
     equivalent of the reference's nightly bounded Kafka read (T1).
     ``complete`` suits windowed aggs; joins use ``append``."""
-    q = (
-        result.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        result, checkpoint_dir, "memory", output_mode, query_name=table_name
     )
-    q.awaitTermination()

@@ -34,6 +34,9 @@ from pyspark.sql.types import (
 )
 
 from e_commerce_data_lakehouse_spark.sources.sinks import ManagedTable
+from e_commerce_data_lakehouse_spark.streaming.pipeline import (
+    drain_available_now,
+)
 
 
 def foreach_batch_merge(
@@ -46,7 +49,9 @@ def foreach_batch_merge(
     """Exactly-once streaming upsert: every micro-batch is deduped within
     itself (keep-latest on ``order_col``) then MERGEd into ``target`` on
     ``keys``.  Checkpoint + idempotent MERGE = effective exactly-once even
-    when a batch is replayed.  Returns the started query (AvailableNow).
+    when a batch is replayed.  Drains everything available
+    (:func:`~e_commerce_data_lakehouse_spark.streaming.pipeline.drain_available_now`)
+    and returns the terminated query.
 
     With ``order_col`` the merge is *order-aware* (``merge_latest``): a
     micro-batch carrying a stale re-delivery cannot clobber a newer silver
@@ -63,12 +68,7 @@ def foreach_batch_merge(
             batch = batch.dropDuplicates(keys)
             target.merge_scd1(batch, keys)
 
-    return (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_available_now(stream, checkpoint_dir, _merge)
 
 
 def streaming_dedup(

@@ -347,3 +347,28 @@ def test_partition_grain_is_computed_from_volume(spark):
     assert m.measure_fact_partition_grain(orders, "o_orderdate") == (
         "year", "month",
     )
+
+
+def test_rerun_over_committed_fact_keeps_its_grain(
+    spark, tmp_path, monkeypatch
+):
+    """Each ``orders_dag`` run builds a fresh grainless fact handle; once
+    the fact has committed versions, ``gold_star`` takes the committed
+    grain instead of measuring silver again.  A measurement that would
+    now pick day grain (silver grown past the flip point) must neither
+    run nor make the re-run fail."""
+    m.e2e_orders_pipeline(spark, SF, str(tmp_path))
+    grain = ManagedTable(spark, str(tmp_path / "fact_orders"))._on_disk_grain()
+    assert grain == ("year", "month")
+    calls = []
+
+    def measure(*args, **kwargs):
+        calls.append(args)
+        return ("year", "month", "day")
+
+    monkeypatch.setattr(m, "measure_fact_partition_grain", measure)
+    runs, tables = m.e2e_orders_pipeline(spark, SF, str(tmp_path))
+    assert calls == []
+    assert all(r.status == "success" for r in runs)
+    assert tables["fact_orders"].partition_by == grain
+    assert tables["fact_orders"]._on_disk_grain() == grain

@@ -41,6 +41,9 @@ from e_commerce_data_lakehouse_spark.operators.joins import (  # noqa: E402
     salted_join,
 )
 from e_commerce_data_lakehouse_spark.session import get_spark  # noqa: E402
+from e_commerce_data_lakehouse_spark.streaming.pipeline import (  # noqa: E402
+    drain_available_now,
+)
 
 
 def _rest(base: str, path: str):
@@ -137,14 +140,7 @@ def _run_streaming_sessions(
             )
             .agg(F.count("*").alias("n"))
         )
-        q = (
-            res.writeStream.format("noop")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain_available_now(res, ckpt, "noop")
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
 

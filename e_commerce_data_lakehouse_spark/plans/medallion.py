@@ -29,7 +29,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from e_commerce_data_lakehouse_spark import quality as q
@@ -100,22 +100,41 @@ def bronze_to_silver(
     data, r10 sweep).  Equivalence is hash-proven
     (``dedup_latest_events_agg`` carries the window oracle verbatim).
     A map-typed (non-orderable) payload column, which ``max(struct)``
-    rejects at analysis, takes the window form ``keep_latest``."""
+    rejects at analysis, takes the window form ``keep_latest``.
+
+    The deduped delta is materialized ONCE (eager ``localCheckpoint``)
+    and everything downstream reads that: the row counts come from
+    ``DataFrame.observe`` metrics of the same materializing job (n_in =
+    watermark-passed bronze rows before ``clean_fn``, n_out = deduped
+    rows), the no-new-rows exit and the ``min_retention`` gate read
+    (n_in, n_out) before anything is committed, and the MERGE reads the
+    checkpoint (:meth:`ManagedTable.merge_scd1` does not materialize it
+    again).  bronze → clean → dedup runs once per increment instead of
+    once per count, gate and merge read."""
     src = bronze.read()
     if silver.exists():
         batch = incremental_rows(src, silver.read(), ts_col)
     else:
         batch = src
-    if batch.limit(1).count() == 0:
-        return StageResult(0)
-    cleaned = clean_fn(batch) if clean_fn else batch
+    seen, kept = Observation("bronze_to_silver_in"), Observation(
+        "bronze_to_silver_out"
+    )
+    observed = batch.observe(seen, F.count(F.lit(1)).alias("n"))
+    cleaned = clean_fn(observed) if clean_fn else observed
     dedup_fn = (
         keep_latest
         if any(contains_map_type(f.dataType) for f in cleaned.schema.fields)
         else keep_latest_agg
     )
-    deduped = dedup_fn(cleaned, key, ts_col)
-    q.retention_rate(batch, deduped, warn_below=min_retention).expect()
+    deduped = (
+        dedup_fn(cleaned, key, ts_col)
+        .observe(kept, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    n_in, n_out = seen.get["n"], kept.get["n"]
+    if n_in == 0:
+        return StageResult(0)
+    q.retention_from_counts(n_in, n_out, warn_below=min_retention).expect()
     silver.merge_scd1(deduped, key)
     out = silver.read()
     q.uniqueness(out, key).expect()

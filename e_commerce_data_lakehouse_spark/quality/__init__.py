@@ -4,6 +4,7 @@ from e_commerce_data_lakehouse_spark.quality.checks import (
     CheckResult,
     extraction_coverage,
     null_counts,
+    retention_from_counts,
     retention_rate,
     run_all,
     sentinel_share,
@@ -15,6 +16,7 @@ __all__ = [
     "CheckResult",
     "extraction_coverage",
     "null_counts",
+    "retention_from_counts",
     "retention_rate",
     "run_all",
     "sentinel_share",

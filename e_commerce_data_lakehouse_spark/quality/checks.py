@@ -80,7 +80,17 @@ def retention_rate(
     """Silver/bronze retention thresholds (``verify_dbt_results.py:142-169``):
     <50% fails (cleaning dropped too much), >95% is healthy, in between is a
     pass-with-warning."""
-    s, t = source.count(), target.count()
+    return retention_from_counts(
+        source.count(), target.count(), warn_below, ok_above
+    )
+
+
+def retention_from_counts(
+    s: int, t: int, warn_below: float = 0.5, ok_above: float = 0.95
+) -> CheckResult:
+    """:func:`retention_rate` over row counts the caller already has
+    (e.g. ``DataFrame.observe`` metrics of the job that materialized
+    the target), so the gate costs no count job."""
     rate = t / s if s else 1.0
     return CheckResult(
         name="retention_rate",

@@ -13,6 +13,20 @@ create/append/overwrite/merge/compact — with the Delta call noted per method
 as the drop-in physical replacement on a cluster.  MERGE is a full-table
 rewrite here (the relational definition); Delta/Iceberg MERGE rewrites only
 matched files, which is why it's the scale path.
+
+A MERGE reads its ``updates`` twice (the uniqueness probe, then the
+snapshot commit, whose union and anti join each scan it), so
+:meth:`ManagedTable.merge_scd1` materializes ``updates`` once with an
+eager ``localCheckpoint`` and runs both from that: the delta's lineage
+(bronze scan, clean, dedup shuffle) runs once per merge.  ``persist()``
+is the wrong tool here: AQE may not coalesce the shuffle partitions of
+a cached plan (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
+is false by default), so a cached ``updates`` keeps all
+``spark.sql.shuffle.partitions`` partitions and the commit's union
+writes that many more files — on one gen-sf1 orders increment, silver
+4 -> 34 parquet files and ``dim_customer_ids`` 1 -> 32.  The
+checkpoint keeps the AQE-coalesced partitioning (4 and 1, as without
+materialization).
 """
 
 from __future__ import annotations
@@ -23,6 +37,20 @@ from e_commerce_data_lakehouse_spark.operators.merge import (
     insert_only_merge,
     scd1_merge,
 )
+
+
+def _materialized(df: DataFrame) -> DataFrame:
+    """``df`` run once into executor storage (eager ``localCheckpoint``),
+    or ``df`` itself when it already reads such a checkpoint, so a caller
+    that materialized its delta (to gate on its counts) and the merge
+    that reads it share one materialization."""
+    plan = df._jdf.queryExecution().analyzed()
+    if (
+        plan.getClass().getSimpleName() == "LogicalRDD"
+        and plan.rdd().isCheckpointed()
+    ):
+        return df
+    return df.localCheckpoint(eager=True)
 
 
 def write_raw_csv(
@@ -230,9 +258,23 @@ class ManagedTable:
     def merge_scd1(self, updates: DataFrame, keys: list[str]) -> None:
         """S14: ``whenMatchedUpdateAll().whenNotMatchedInsertAll()``
         (``silver_to_gold_transactions.py:71``).  Snapshot rewrite from the
-        merged result; Delta's MERGE rewrites only matched files."""
-        merged = scd1_merge(self.read(), updates, keys) if self.exists() else updates
-        self._commit(merged)
+        merged result; Delta's MERGE rewrites only matched files.
+
+        Into an existing table, ``updates`` is materialized ONCE with an
+        eager ``localCheckpoint`` (skipped when it already reads one) and
+        both the ``scd1_merge`` duplicate probe and the commit read that,
+        so the lineage behind ``updates`` is evaluated once per merge,
+        not once per consumer.  Not ``persist()``: a cached plan keeps
+        its un-coalesced shuffle partitions, so the commit would write
+        ~``spark.sql.shuffle.partitions`` extra files (silver 4 -> 34,
+        ``dim_customer_ids`` 1 -> 32 on a gen-sf1 orders increment; see
+        the module docstring).  The first commit has one consumer and
+        writes ``updates`` as is."""
+        if not self.exists():
+            self._commit(updates)
+            return
+        updates = _materialized(updates)
+        self._commit(scd1_merge(self.read(), updates, keys))
 
     def merge_latest(
         self, updates: DataFrame, keys: list[str], ts_col: str
@@ -267,15 +309,21 @@ class ManagedTable:
         ``.option("txnAppId", ...).option("txnVersion", ...)`` there."""
         import os
 
-        marker_dir = f"{self.path}/_txn"
-        marker = f"{marker_dir}/{txn_id}"
-        if os.path.exists(marker):
+        if self.has_txn(txn_id):
             return False
         self.append(df)
-        os.makedirs(marker_dir, exist_ok=True)
-        with open(marker, "w") as fh:
+        os.makedirs(f"{self.path}/_txn", exist_ok=True)
+        with open(f"{self.path}/_txn/{txn_id}", "w") as fh:
             fh.write(txn_id)
         return True
+
+    def has_txn(self, txn_id: str) -> bool:
+        """Whether :meth:`append_once` already committed ``txn_id`` — a
+        marker-file lookup, no Spark job, so a caller can skip building
+        a replayed batch before it costs anything."""
+        import os
+
+        return os.path.exists(f"{self.path}/_txn/{txn_id}")
 
     def delete_where(self, condition) -> int:
         """Delta ``DELETE FROM table WHERE cond`` — the GDPR-erasure /
@@ -283,12 +331,16 @@ class ManagedTable:
         commits a new snapshot, so the deletion is itself versioned
         (auditable, and reversible until vacuum via time travel — exactly
         Delta's contract).  Snapshot rewrite here; Delta rewrites only the
-        files whose stats overlap the predicate."""
+        files whose stats overlap the predicate.
+
+        SQL semantics: a row whose ``condition`` is NULL is kept, as in
+        ``DELETE`` (``~condition`` alone would drop it too)."""
+        from pyspark.sql import functions as _F
+
         cur = self.read()
-        keep = cur.filter(~condition)
-        deleted = cur.count() - keep.count()
+        deleted = cur.filter(condition).count()
         if deleted:
-            self._commit(keep)
+            self._commit(cur.filter(~_F.coalesce(condition, _F.lit(False))))
         return deleted
 
     def update_where(self, condition, assignments: dict) -> int:

@@ -160,6 +160,61 @@ def test_incremental_redelivery_is_noop(spark, tmp_path):
     assert n_clean == t["silver_clean"].read().count()
 
 
+def test_incremental_batch_is_annotated_once(spark, tmp_path):
+    """The bronze append, the ingest row count, curation and the
+    new-benchmark side of decontamination all read one checkpoint of the
+    annotated batch: each batch row's lineage (a counting UDF) is
+    evaluated exactly once — for a first batch and for a batch merged
+    into stored tables."""
+    from e_commerce_data_lakehouse_spark.plans.corpus_medallion import (
+        run_incremental,
+    )
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def seen(_doc_id):
+        evaluated.add(1)
+        return True
+
+    counted = F.udf(seen, "boolean")
+    b1, b2 = (b.filter(counted("doc_id")) for b in _split_batches(spark))
+    n1, n2 = b1.count(), b2.count()
+    evaluated.value = 0
+    runs, _ = run_incremental(spark, str(tmp_path), [b1, b2])
+    assert all(r.status == "success" for batch in runs for r in batch)
+    assert [batch[0].result.rows_written for batch in runs] == [n1, n2]
+    assert evaluated.value == n1 + n2
+
+
+def test_replayed_txn_launches_no_spark_job(spark, tmp_path):
+    """O(delta) with delta = 0: a replayed txn is recognised from its
+    marker before the batch is annotated or materialized, so no stage
+    launches a Spark job (statusTracker job ids under the test's and
+    every stage's job group)."""
+    from e_commerce_data_lakehouse_spark.plans.corpus_medallion import (
+        ingest_corpus_batch,
+        run_incremental,
+    )
+
+    b1, _ = _split_batches(spark)
+    _, tables = run_incremental(spark, str(tmp_path), [b1], txn_ids=["b1"])
+    sc = spark.sparkContext
+    sc.setJobGroup("replayed_txn", "replayed corpus txn")
+    try:
+        runs = ingest_corpus_batch(spark, tables, b1, "b1", label="replay")
+    finally:
+        sc.setJobGroup("", "")
+    assert [r.status for r in runs] == ["success"] * 5
+    assert all(r.result.rows_written == 0 for r in runs)
+    groups = ["replayed_txn"] + [
+        f"dag:corpus_incremental_breplay:{r.name}" for r in runs
+    ]
+    tracker = sc.statusTracker()
+    assert {g: list(tracker.getJobIdsForGroup(g)) for g in groups} == {
+        g: [] for g in groups
+    }
+
+
 def test_incremental_empty_first_batch(spark):
     """A first batch containing only benchmark docs must not wedge the
     pipeline: silver tables commit empty and the next batch proceeds."""

@@ -245,6 +245,85 @@ def test_bronze_to_silver_dedup_form_follows_payload_schema(
         } == latest, label
 
 
+def _keyed(spark, rows):
+    return spark.createDataFrame(rows, "k long, ts long, v string")
+
+
+def test_bronze_to_silver_evaluates_clean_fn_once(spark, tmp_path):
+    """The silver stage materializes its delta once: the early exit, the
+    retention gate, the merge probe and the commit all read it, so each
+    bronze row passes ``clean_fn`` exactly once per increment — on the
+    first commit and on a merge into an existing silver."""
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def seen(_k):
+        evaluated.add(1)
+        return True
+
+    def clean(df):
+        return df.filter(F.udf(seen, "boolean")("k"))
+
+    bronze = ManagedTable(spark, str(tmp_path / "bronze"))
+    silver = ManagedTable(spark, str(tmp_path / "silver"))
+    bronze.create(_keyed(spark, [(k, 1, "a") for k in range(6)]))
+    r = m.bronze_to_silver(bronze, silver, ["k"], "ts", clean_fn=clean)
+    assert (r.rows_written, evaluated.value) == (6, 6)
+    # the second increment passes the watermark with 4 rows (2 updates)
+    bronze.append(_keyed(spark, [(k, 2, "b") for k in range(4, 8)]))
+    r = m.bronze_to_silver(bronze, silver, ["k"], "ts", clean_fn=clean)
+    assert (r.rows_written, evaluated.value) == (8, 10)
+    got = {row.k: row.v for row in silver.read().collect()}
+    assert got == {k: "a" if k < 4 else "b" for k in range(8)}
+
+
+def test_bronze_to_silver_without_new_rows_returns_promptly(spark, tmp_path):
+    """No bronze rows past the silver watermark: the stage reads n_in = 0
+    from its observed metrics and returns ``StageResult(0)`` without a
+    commit.  ``Observation.get`` blocks until its metric arrives, so the
+    call runs in a thread joined with a bound."""
+    import threading
+
+    bronze = ManagedTable(spark, str(tmp_path / "bronze"))
+    silver = ManagedTable(spark, str(tmp_path / "silver"))
+    bronze.create(_keyed(spark, [(1, 1, "a"), (2, 1, "b")]))
+    m.bronze_to_silver(bronze, silver, ["k"], "ts")
+    history = silver.history()
+    out: list = []
+    t = threading.Thread(
+        target=lambda: out.append(
+            m.bronze_to_silver(bronze, silver, ["k"], "ts")
+        ),
+        daemon=True,
+    )
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "bronze_to_silver did not return within 120 s"
+    assert out == [m.StageResult(0)]
+    assert silver.history() == history
+
+
+def test_bronze_to_silver_retention_gate_fails_before_commit(spark, tmp_path):
+    """A delta whose cleaning keeps under ``min_retention`` of its rows
+    raises, and silver gains no version: the gate runs before the MERGE,
+    on the counts of the one materializing job."""
+    bronze = ManagedTable(spark, str(tmp_path / "bronze"))
+    silver = ManagedTable(spark, str(tmp_path / "silver"))
+    bronze.create(_keyed(spark, [(k, 1, "ok") for k in range(4)]))
+    m.bronze_to_silver(bronze, silver, ["k"], "ts")
+    history = silver.history()
+    # 4 new rows past the watermark, one survives cleaning: 25% retained
+    rows = [(10, 2, "ok")] + [(k, 2, "bad") for k in range(11, 14)]
+    bronze.append(_keyed(spark, rows))
+    with pytest.raises(AssertionError, match="retention_rate"):
+        m.bronze_to_silver(
+            bronze, silver, ["k"], "ts",
+            clean_fn=lambda df: df.filter(F.col("v") == "ok"),
+            min_retention=0.5,
+        )
+    assert silver.history() == history
+    assert sorted(r.k for r in silver.read().collect()) == [0, 1, 2, 3]
+
+
 def test_fact_orders_partitioned_and_pruned(spark, tmp_path):
     """r10 VERDICT missing #3: fact_orders is PHYSICALLY laid out by its
     date hierarchy (the reference's universal fact layout,

@@ -102,6 +102,37 @@ def test_delete_update_where(make_table, spark):
     assert got == {1: "a", 3: "C"}
 
 
+def test_delete_where_keeps_rows_whose_condition_is_null(make_table, spark):
+    """SQL/Delta ``DELETE``: only rows whose condition is TRUE go; a NULL
+    condition keeps the row and is not counted as deleted."""
+    t = make_table()
+    t.create(_df(spark, [(1, "a", 10), (2, None, 20), (3, "c", 30)]))
+    assert t.delete_where(F.col("v") == "a") == 1
+    assert sorted(r.k for r in t.read().collect()) == [2, 3]
+    assert t.delete_where(F.col("v") == "zzz") == 0
+
+
+def test_merge_scd1_evaluates_updates_once(make_table, spark):
+    """The duplicate probe and the commit both read one materialization
+    of ``updates``: every row of its lineage is evaluated exactly once
+    (a counting UDF in the lineage)."""
+    t = make_table()
+    t.create(_df(spark, [(1, "a", 10), (2, "b", 20)]))
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def seen(_k):
+        evaluated.add(1)
+        return True
+
+    updates = _df(spark, [(2, "B", 21), (3, "c", 30), (4, "d", 40)]).filter(
+        F.udf(seen, "boolean")("k")
+    )
+    t.merge_scd1(updates, ["k"])
+    assert evaluated.value == 3
+    got = dict((r.k, r.v) for r in t.read().collect())
+    assert got == {1: "a", 2: "B", 3: "c", 4: "d"}
+
+
 def test_restore_to_version(make_table, spark):
     t = make_table()
     t.create(_df(spark, [(1, "a", 10)]))

@@ -23,11 +23,12 @@ import json
 import os
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from e_commerce_data_lakehouse_spark import entry_queries as eq
-from e_commerce_data_lakehouse_spark.session import get_spark
+from tools.measure import Meter, boot, funnel_stats
 
 HEADLINE = [
     "pricing_summary",
@@ -271,61 +272,26 @@ def main() -> None:
                                                     "quiet": None}
     )
     host_start = _host_snapshot()
-    spark = get_spark(app_name="bench")
-
-    # warm the JVM/session so the first measured query isn't paying startup:
-    # codegen + parquet reader classes load here, data is NOT cached.
-    # These are SESSION-level one-time costs a long-lived cluster pays once
-    # (not per query), so excluding them from per-query cold numbers is the
-    # honest accounting; the remaining cold-vs-warm delta is per-PLAN Janino
-    # compilation, which amortizes to zero over a 100 TB-sized input.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").limit(1).count()
-    # fork the Arrow Python-worker pool (first pandas_udf otherwise pays
-    # worker spin-up inside a measured query)
-    from pyspark.sql.functions import pandas_udf
-
-    _warm = pandas_udf(lambda s: s, "long")
-    spark.range(32).repartition(32).select(_warm("id")).collect()
-    # touch every table's footer + first row group once: parquet reader
-    # class loading and file-handle setup, NOT data caching (clearCache()
-    # below drops nothing because nothing is persisted here)
-    for t in ("region nation customer supplier part orders lineitem "
-              "events documents embeddings").split():
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            spark.read.parquet(p).limit(1).count()
+    spark = boot("bench", sf_dir)
+    meter = Meter(spark)
 
     cold = os.environ.get("SPARK_GRAFT_BENCH_COLD") == "1"
-    runs = 1 if cold else 2
     timings: dict[str, float] = {}
     cold_timings: dict[str, float] = {}
+    breakdown: dict[str, dict] = {}
     per_query_host: dict[str, dict] = {}
     for name in HEADLINE:
-        # Each query is an independent job: drop DataFrames persisted by the
-        # PREVIOUS query (the minhash/simhash family caches signatures and
-        # cannot unpersist them itself — the returned frame still reads
-        # them).  Leaked entries accumulated across ~48 queries in round 2
-        # and showed up as 0.5-1 s session-level "regressions" on unrelated
-        # queries (memory/GC pressure), reproducible in the full bench but
-        # absent when queries ran in isolation.  The cache stays live
-        # BETWEEN a query's two runs, so warm numbers keep their meaning.
-        spark.catalog.clearCache()
-        fn = eq.QUERIES[name].spark_fn
-        for i in range(runs):
-            t0 = time.monotonic()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = round(time.monotonic() - t0, 3)
-            if i == 0:
-                cold_timings[name] = elapsed
-            timings[name] = elapsed
-        # sampled AFTER the timed runs — evidence, not overhead
+        # an independent job: what the previous query persisted is
+        # dropped (leaked entries once cost unrelated queries 0.5-1 s)
+        build = partial(eq.QUERIES[name].spark_fn, spark, sf_dir)
+        runs = meter.runs(build, 1 if cold else 2)
+        cold_timings[name] = round(runs[0].seconds, 3)
+        timings[name] = round(runs[-1].seconds, 3)
+        # read and sampled AFTER the timed runs — evidence, not overhead
+        breakdown[name] = runs[-1].record()
         per_query_host[name] = _proc_snapshot()
 
     total = round(sum(timings.values()), 3)
-    funnel = _funnel_stats(spark, sf_dir)
-    medallion = _medallion_stats(spark, sf_dir)
     # The driver records only the LAST ~2000 chars of stdout (BENCH_r02's
     # "parsed": null came from a line that outgrew that window and lost its
     # head).  Keep the printed line compact — 2-decimal timings, no spaces
@@ -340,11 +306,11 @@ def main() -> None:
         # achieved candidate-cut ratio of the minhash estimate funnel
         # (band-join candidates -> exact-verify input), measured, not
         # claimed — counted outside the timed runs
-        "funnel": funnel,
+        "funnel": funnel_stats(spark, sf_dir),
         # end-to-end medallion ETL (raw CSV -> bronze -> silver -> gold ->
         # rollup -> catalog) at this sf, per-stage seconds — the reference's
         # production path, vs its 1800 s/stage Airflow budget (VERDICT r3 #6)
-        "medallion": medallion,
+        "medallion": _medallion_stats(spark, sf_dir),
         "value_cold": round(sum(cold_timings.values()), 3),
         # host-contention evidence: 1-min load + process count at
         # start/end (+ cpu count); a vintage where load1 >> cpus at
@@ -380,6 +346,10 @@ def main() -> None:
         out,
         queries=timings,
         queries_cold=cold_timings,
+        # the reported run's Spark jobs, completed stages, job time vs
+        # the gap between jobs (job_s + gap_s = the query's seconds),
+        # shuffle written and spill
+        queries_spark=breakdown,
         # per-query host evidence (load1 / driver-JVM RSS / python-worker
         # pool) — the r12 late-run-collapse forensics, full record only
         per_query_host=per_query_host,
@@ -411,44 +381,16 @@ def _medallion_stats(spark, sf_dir: str) -> dict:
     pipeline-only (raw-CSV re-export of the parquet testdata is setup, not
     ETL); ``stages`` holds the scheduler's seconds per DAG task
     (``raw_export`` included, for transparency)."""
-    import shutil
-    import tempfile
-
     from e_commerce_data_lakehouse_spark.plans.medallion import (
         e2e_orders_pipeline,
     )
+    from e_commerce_data_lakehouse_spark.session import scratch_dir
 
     spark.catalog.clearCache()
-    workdir = tempfile.mkdtemp(prefix="medallion_bench_")
-    try:
-        runs, _ = e2e_orders_pipeline(spark, sf_dir, workdir)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+    runs, _ = e2e_orders_pipeline(spark, sf_dir, scratch_dir("medallion_"))
     stages = {r.name: round(r.seconds, 2) for r in runs}
     total = round(sum(r.seconds for r in runs if r.name != "raw_export"), 3)
     return {"total": total, "stages": stages}
-
-
-def _funnel_stats(spark, sf_dir: str) -> dict:
-    """Measured cut ratio of the MinHash estimate funnel on the documents
-    table: band-join candidate pairs vs pairs that reach the exact verify
-    UDF (VERDICT r2 #6 — the docstring used to claim ~50×; record reality
-    instead)."""
-    from e_commerce_data_lakehouse_spark.operators.dedup import (
-        minhash_lsh_parts,
-    )
-
-    spark.catalog.clearCache()
-    docs = eq.load(spark, sf_dir, "documents")["documents"]
-    parts = minhash_lsh_parts(docs, "doc_id", "text")
-    n_band = parts["band_candidates"].count()
-    n_funneled = parts["funneled"].count()
-    spark.catalog.clearCache()
-    return {
-        "band_candidates": n_band,
-        "verify_input": n_funneled,
-        "cut_ratio": round(n_band / n_funneled, 3) if n_funneled else None,
-    }
 
 
 def _load_previous_round(timings: dict[str, float]) -> dict | None:

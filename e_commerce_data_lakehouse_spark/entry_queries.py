@@ -35,6 +35,7 @@ from e_commerce_data_lakehouse_spark.operators import (
 from e_commerce_data_lakehouse_spark.operators import dedup as dd
 from e_commerce_data_lakehouse_spark.operators import joins as jn
 from e_commerce_data_lakehouse_spark.operators import topk as tk
+from e_commerce_data_lakehouse_spark.session import scratch_dir
 
 SparkFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1610,7 +1611,6 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     replacement for the reference's hand-rolled offset checkpointing +
     full recompute (T1/T5,
     ``transactions_processor.py:27-116``)."""
-    import tempfile
 
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
         hourly_event_counts,
@@ -1623,8 +1623,7 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_events(spark, sf_dir, schema, glob="events.parquet")
     result = hourly_event_counts(stream, watermark="2 hours")
     out = run_available_now_parquet(
-        result, tempfile.mkdtemp(prefix="ckpt_"),
-        tempfile.mkdtemp(prefix="drain_"),
+        result, scratch_dir("ckpt_"), scratch_dir("drain_"),
     )
     return out.withColumn(
         "hour_start", F.col("hour_start").cast("timestamp_ntz")
@@ -2326,11 +2325,10 @@ def dag_orders_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     every task succeeded on its first attempt and wrote rows — so a
     task that silently starts retrying or writing nothing breaks the
     hash, not just a log line."""
-    import tempfile
 
     from e_commerce_data_lakehouse_spark.plans.medallion import orders_dag
 
-    dag, _tables = orders_dag(spark, sf_dir, tempfile.mkdtemp(prefix="dag_"))
+    dag, _tables = orders_dag(spark, sf_dir, scratch_dir("dag_"))
     runs = dag.run(spark)
     return spark.createDataFrame(
         [
@@ -2379,14 +2377,13 @@ def global_dw_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     built from ONE persisted activity union, written as snapshot-versioned
     tables; returns the ``_catalog`` monitoring table (T6).  The oracle
     recomputes every table's expected cardinality from the sources."""
-    import tempfile
 
     from e_commerce_data_lakehouse_spark.plans.global_dw import build_global_dw
 
     t = load(spark, sf_dir, "orders", "events", "customer", "part")
     dw = build_global_dw(
         spark,
-        tempfile.mkdtemp(prefix="gdw_"),
+        scratch_dir("gdw_"),
         orders=t["orders"],
         events=t["events"],
         customer=t["customer"],
@@ -2902,7 +2899,6 @@ def streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark + interval width per user key.  The oracle is the identical
     batch join — AvailableNow over a bounded source must produce exactly
     the batch answer."""
-    import tempfile
 
     from e_commerce_data_lakehouse_spark.streaming.joins import interval_join
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
@@ -2934,8 +2930,8 @@ def streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_watermark="3 hours",
     ).select("purchase_id", "view_id", F.col("l.user_id").alias("user_id"))
     return run_available_now_parquet(
-        joined, tempfile.mkdtemp(prefix="ckpt_"),
-        tempfile.mkdtemp(prefix="drain_"), output_mode="append",
+        joined, scratch_dir("ckpt_"),
+        scratch_dir("drain_"), output_mode="append",
     )
 
 
@@ -3125,13 +3121,12 @@ def dag_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, this oracle RECOMPUTES the whole curation in SQL, so a
     wrong row anywhere in the four-stage pipeline breaks the hash —
     the strongest end-to-end answer check in the registry."""
-    import tempfile
 
     from e_commerce_data_lakehouse_spark.plans.corpus_medallion import (
         corpus_dag,
     )
 
-    dag, tables = corpus_dag(spark, sf_dir, tempfile.mkdtemp(prefix="cdag_"))
+    dag, tables = corpus_dag(spark, sf_dir, scratch_dir("cdag_"))
     runs = dag.run(spark)
     bad = [r.name for r in runs if r.status != "success"]
     if bad:
@@ -3154,7 +3149,6 @@ def dag_corpus_pipeline_incremental(
     hash-match proves the incremental maintenance converges to the
     batch answer — the `incremental_dup_clusters` fixpoint pattern
     applied to the whole pipeline."""
-    import tempfile
 
     from e_commerce_data_lakehouse_spark.plans.corpus_medallion import (
         run_incremental,
@@ -3172,7 +3166,7 @@ def dag_corpus_pipeline_incremental(
         ]
     all_runs, tables = run_incremental(
         spark,
-        tempfile.mkdtemp(prefix="cdagi_"),
+        scratch_dir("cdagi_"),
         batches,
     )
     bad = [
@@ -3196,7 +3190,6 @@ def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch answer; the crash-replay pytest
     (tests/test_streaming_corpus.py) proves a re-delivered micro-batch
     is a recorded no-op."""
-    import tempfile
 
     from e_commerce_data_lakehouse_spark.plans.corpus_medallion import (
         run_streaming,
@@ -3212,9 +3205,9 @@ def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     all_runs, tables = run_streaming(
         spark,
-        tempfile.mkdtemp(prefix="cstream_"),
+        scratch_dir("cstream_"),
         stream,
-        tempfile.mkdtemp(prefix="cstream_ckpt_"),
+        scratch_dir("cstream_ckpt_"),
     )
     bad = [
         r.name for runs in all_runs for r in runs if r.status != "success"
@@ -3276,13 +3269,12 @@ def corpus_gold_train_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     range, so the hash proves the partitioned write + pruned read
     round-trips every row and value exactly (a lost partition directory,
     a mistyped partition value, or a pruning bug all break it)."""
-    import tempfile
 
     from e_commerce_data_lakehouse_spark.plans.corpus_medallion import (
         corpus_dag,
     )
 
-    dag, tables = corpus_dag(spark, sf_dir, tempfile.mkdtemp(prefix="cgtr_"))
+    dag, tables = corpus_dag(spark, sf_dir, scratch_dir("cgtr_"))
     runs = dag.run(spark)
     bad = [r.name for r in runs if r.status != "success"]
     if bad:
@@ -5006,6 +4998,10 @@ def incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# incremental_near_dup_stored: one signature store per sf_dir per process
+_SIGNATURE_STORES: dict[str, str] = {}
+
+
 @register("incremental_near_dup_stored", None)  # Spark hashing -> rows-only
 def incremental_near_dup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stored-signature incremental dedup — the shape a daily corpus build
@@ -5016,10 +5012,6 @@ def incremental_near_dup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     new batch.  Same results as ``incremental_near_dup`` (signatures are
     deterministic; pinned by
     ``test_incremental_lsh_stored_signatures_equal``)."""
-    import hashlib
-    import os
-    import tempfile
-
     from e_commerce_data_lakehouse_spark.sources.sinks import ManagedTable
 
     docs = load(spark, sf_dir, "documents")["documents"]
@@ -5028,11 +5020,9 @@ def incremental_near_dup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-process store: reused across this process's runs (bench runs each
     # query twice — the second run exercises the pure read path) while two
     # concurrent drivers can never interleave writes into one directory
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    table = ManagedTable(
-        spark,
-        f"{tempfile.gettempdir()}/minhash_sig_store_{tag}_{os.getpid()}",
-    )
+    if sf_dir not in _SIGNATURE_STORES:
+        _SIGNATURE_STORES[sf_dir] = scratch_dir("minhash_sig_store_")
+    table = ManagedTable(spark, _SIGNATURE_STORES[sf_dir])
     if not table.exists():
         # bands=8: store the 8 band keys alongside the 32 mins so the
         # corpus side skips the banding projection at read time too
@@ -7728,7 +7718,6 @@ def streaming_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     events.  Same bound-based oracle: the drained estimates must land
     within ±5% (~3σ at lg_k=12) of the exact batch COUNT(DISTINCT); the
     pinned boolean plus the exact counts are what DuckDB reproduces."""
-    import tempfile
 
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
         run_available_now_parquet,
@@ -7749,8 +7738,7 @@ def streaming_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     est_out = run_available_now_parquet(
-        est, tempfile.mkdtemp(prefix="ckpt_"),
-        tempfile.mkdtemp(prefix="drain_"),
+        est, scratch_dir("ckpt_"), scratch_dir("drain_"),
     )
     ev = load(spark, sf_dir, "events")["events"]
     # cast to ntz BEFORE the join/output: an LTZ hour would re-render in
@@ -8549,7 +8537,6 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``SELECT DISTINCT`` — which is exactly what the oracle checks.
     Watermark set past the table's full time span so no duplicate pair
     straddles a state expiry in this bounded replay."""
-    import tempfile
 
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
         run_available_now_parquet,
@@ -8567,8 +8554,8 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         keyed, ["user_id", "event_type", "day"], "ts", watermark="24 hours"
     ).select("user_id", "event_type", "day")
     return run_available_now_parquet(
-        deduped, tempfile.mkdtemp(prefix="ckpt_"),
-        tempfile.mkdtemp(prefix="drain_"), output_mode="append",
+        deduped, scratch_dir("ckpt_"),
+        scratch_dir("drain_"), output_mode="append",
     )
 
 
@@ -8944,7 +8931,6 @@ def streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_streaming_sessions.py``.  This is the GroupState code
     path no batch query exercises, promoted from scale-bench-only to a
     driver-checked registry entry."""
-    import tempfile
 
     from e_commerce_data_lakehouse_spark.streaming import stateful as st
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
@@ -8957,8 +8943,8 @@ def streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_events(spark, sf_dir, schema, glob="events.parquet")
     totals = st.running_totals_per_key(stream, "user_id", "ts")
     return run_available_now_parquet(
-        totals, tempfile.mkdtemp(prefix="ckpt_"),
-        tempfile.mkdtemp(prefix="drain_"), output_mode="update",
+        totals, scratch_dir("ckpt_"),
+        scratch_dir("drain_"), output_mode="update",
     )
 
 
@@ -9865,7 +9851,6 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming output must equal the batch fixpoint once the stream drains
     (T4/T5 semantics: the reference recomputes sessions per nightly batch,
     ``transactions_processor.py:27-116``)."""
-    import tempfile
 
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
         run_available_now_parquet,
@@ -9895,8 +9880,7 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = run_available_now_parquet(
-        sessions, tempfile.mkdtemp(prefix="ckpt_"),
-        tempfile.mkdtemp(prefix="drain_"),
+        sessions, scratch_dir("ckpt_"), scratch_dir("drain_"),
     )
     return out.select(
         "user_id",
@@ -9951,8 +9935,6 @@ def streaming_sessions_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     (AvailableNow runs a final empty batch to flush windows finalized by
     the last watermark advance).  Reference behavior: T5 full-recompute
     (``silver_to_gold_iot_sensors.py:98-115``)."""
-    import tempfile
-    import uuid
 
     from e_commerce_data_lakehouse_spark.sources.sinks import ManagedTable
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
@@ -9982,11 +9964,9 @@ def streaming_sessions_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    target = ManagedTable(
-        spark, tempfile.mkdtemp(prefix=f"sess_append_{uuid.uuid4().hex[:8]}_")
-    )
+    target = ManagedTable(spark, scratch_dir("sess_append_"))
     run_available_now_append(
-        sessions, tempfile.mkdtemp(prefix="ckpt_"), target
+        sessions, scratch_dir("ckpt_"), target
     )
     return target.read().select(
         "user_id",
@@ -10038,8 +10018,6 @@ def streaming_user_sessions_bucketed(
     first/last session can merge across midnight, ≤ 2 rows per
     user·day).  Carries the batch gaps-and-islands oracle VERBATIM —
     the hash proves the two-pass plan assigns identical sessions."""
-    import tempfile
-    import uuid
 
     from e_commerce_data_lakehouse_spark.operators import (
         aggregates as agg_ops,
@@ -10070,9 +10048,9 @@ def streaming_user_sessions_bucketed(
     # executor-side parquet drain, NOT the memory sink: the local-session
     # frame is ~rows-of-sessions sized and the memory sink materializes
     # all of it on the driver (maxResultSize aborted the gen-sf10 run)
-    sink = tempfile.mkdtemp(prefix=f"sess_bkt_{uuid.uuid4().hex[:8]}_")
+    sink = scratch_dir("sess_bkt_")
     drained = run_available_now_parquet(
-        local, tempfile.mkdtemp(prefix="ckpt_"), sink
+        local, scratch_dir("ckpt_"), sink
     )
     stitched = agg_ops.stitch_sessions(
         drained,
@@ -10412,7 +10390,6 @@ def streaming_enriched_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     take the −1 sentinel (P10).  Oracle: the same join in batch SQL —
     stream-static left join over a drained AvailableNow stream must equal
     the batch join exactly."""
-    import tempfile
 
     from e_commerce_data_lakehouse_spark.functions.dates import build_dim_date
     from e_commerce_data_lakehouse_spark.streaming.joins import enrich_with_dim
@@ -10443,8 +10420,8 @@ def streaming_enriched_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("double").alias("value"),
     )
     out = run_available_now_parquet(
-        enriched, tempfile.mkdtemp(prefix="ckpt_"),
-        tempfile.mkdtemp(prefix="drain_"), output_mode="append",
+        enriched, scratch_dir("ckpt_"),
+        scratch_dir("drain_"), output_mode="append",
     )
     return out.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
@@ -10498,8 +10475,6 @@ def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01 — a bare linenumber order made the survivor nondeterministic,
     caught by the driver compare).  The drained table must equal the
     batch keep-latest fixpoint (the oracle's ROW_NUMBER window)."""
-    import tempfile
-    import uuid
 
     from e_commerce_data_lakehouse_spark.sources.sinks import ManagedTable
     from e_commerce_data_lakehouse_spark.streaming.stateful import (
@@ -10535,15 +10510,12 @@ def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    run_id = uuid.uuid4().hex[:8]
-    target = ManagedTable(
-        spark, tempfile.mkdtemp(prefix=f"merge_upsert_{run_id}_")
-    )
+    target = ManagedTable(spark, scratch_dir("merge_upsert_"))
     foreach_batch_merge(
         stream,
         target,
         keys=["l_orderkey"],
-        checkpoint_dir=tempfile.mkdtemp(prefix="ckpt_"),
+        checkpoint_dir=scratch_dir("ckpt_"),
         order_col="ord",
     )
     return target.read().select(

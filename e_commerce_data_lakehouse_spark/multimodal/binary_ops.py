@@ -81,15 +81,6 @@ def decode_metadata(df: DataFrame, id_col: str, binary_col: str) -> DataFrame:
     )
 
 
-def frame_sample_plan(df: DataFrame, id_col: str, binary_col: str, every_n: int):
-    """Video frame-sampling plumbing: NOT implemented in this container
-    (no ffmpeg).  Raises immediately rather than pretending."""
-    raise NotImplementedError(
-        "frame sampling requires a video codec library; wire a real decoder "
-        "into the mapInPandas kernel (same shape as decode_metadata)"
-    )
-
-
 FEATURES_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -129,61 +120,6 @@ def extract_features(
             yield pd.DataFrame({"doc_id": pdf[idc].astype("int64"), "embedding": out})
 
     return df.select(F.col(idc), F.col(binc)).mapInPandas(kernel, FEATURES_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame,
-    id_col: str,
-    binary_col: str,
-    target_w: int = 64,
-    target_h: int = 64,
-) -> DataFrame:
-    """Image resize plumbing via Arrow-batched mapInPandas: binary in,
-    binary out, with the typed size metadata updated.
-
-    The kernel is a deterministic stand-in (payload re-sampled by byte
-    striding to a ``target_w*target_h``-byte buffer — a real pipeline swaps
-    in ``PIL.Image.resize``; no imaging library exists in this container).
-    The engine-relevant parts are real: batch shape (binary column through
-    Arrow both directions), output schema, and partition preservation — a
-    resize never shuffles."""
-    import numpy as np
-
-    idc, binc = id_col, binary_col
-    n_out = target_w * target_h
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for p in pdf[binc]:
-                b = np.frombuffer(bytes(p), dtype=np.uint8)
-                if len(b) == 0:
-                    payloads.append(bytes(n_out))
-                    continue
-                idx = (np.arange(n_out) * len(b)) // n_out
-                payloads.append(b[idx].tobytes())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[idc].astype("int64"),
-                    "payload": payloads,
-                    "width": target_w,
-                    "height": target_h,
-                }
-            )
-
-    return df.select(F.col(idc), F.col(binc)).mapInPandas(
-        kernel, RESIZED_SCHEMA
-    )
 
 
 def hash_embed(payload: Column, dim: int = 8) -> Column:

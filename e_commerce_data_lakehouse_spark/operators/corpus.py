@@ -645,48 +645,6 @@ def quota_sample(
     )
 
 
-def bloom_contaminated_grams(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits_per_item: int = 16,
-    k_hashes: int = 7,
-) -> DataFrame:
-    """Benchmark decontamination via a broadcast Bloom filter — the shape
-    that scales when the corpus is 100 TB and the benchmark is small.
-
-    :func:`ngram_overlap` (the exact path) shuffles every corpus gram into
-    an equi-join.  Here the benchmark's gram *hashes* (bounded — the
-    premise of decontamination) are collected once, packed into a Bloom
-    bit array a few hundred KB large, and shipped inside an Arrow UDF
-    closure (the moral equivalent of a broadcast variable); corpus grams
-    are hashed JVM-side (``xxhash64``, codegen) and membership-tested as
-    pure vectorized int64 math per Arrow batch.  The corpus is touched
-    map-side only; the lone shuffle is the final per-doc count aggregate.
-
-    Bloom semantics: NO false negatives (every exactly-contaminated gram
-    is flagged), false positives at ~0.02% with the defaults (16 bits/item
-    × 7 probes) — callers route flagged docs to the exact join for
-    confirmation (:func:`bloom_confirmed_contamination`), so the filter's
-    job is to keep 99.9% of the corpus away from that join.  Returns
-    (id, n_flagged_grams) per doc with >= 1 hit.
-
-    Bit array: ``m`` is rounded UP to a power of two, so (a) the per-probe
-    ``mod`` is a bitmask ``& (m-1)`` and (b) the odd step ``h2`` is coprime
-    with ``m`` — all ``k`` probes are distinct (an even gcd would revisit
-    slots and degrade the FP rate).  Bits are ``np.packbits``-packed — 1
-    bit/slot, so the closure each task deserializes is m/8 bytes, e.g.
-    ~0.5 MB for a 250k-gram benchmark — not numpy's 1 byte/bool.
-    """
-    return _bloom_flagged(
-        corpus, benchmark, n, id_col, text_col, bits_per_item, k_hashes
-    ).groupBy(id_col).agg(
-        F.count_distinct("gh").cast("long").alias("n_flagged_grams")
-    )
-
-
 def _gram_frame(
     df: DataFrame, n: int, id_col: str, text_col: str, with_text: bool
 ) -> DataFrame:
@@ -733,8 +691,17 @@ def _bloom_flagged(
     with_text: bool = False,
 ) -> DataFrame:
     """Corpus (id, gh[, gram]) rows whose gram hash passes the benchmark's
-    Bloom filter — the shared map-side stage of the flag-count and
-    exact-confirm paths."""
+    Bloom filter — the map-side pre-filter of
+    :func:`bloom_confirmed_contamination`.
+
+    The benchmark's gram hashes (bounded — the premise of
+    decontamination) are collected once and packed into a Bloom bit
+    array; corpus grams are hashed JVM-side (``xxhash64``) and
+    membership-tested map-side, so the corpus never shuffles here.  No
+    false negatives (every exactly-contaminated gram passes); false
+    positives at ~0.02% with 16 bits/item × 7 probes.  ``m`` is rounded
+    UP to a power of two, so the per-probe ``mod`` is a bitmask and the
+    odd step ``h2`` is coprime with ``m``: all ``k`` probes are distinct."""
     bench_hashes = np.array(
         [
             r["gh"]

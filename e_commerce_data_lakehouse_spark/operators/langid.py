@@ -65,19 +65,6 @@ def trigram_counts(df: DataFrame, key_cols: list[str], text_col: str) -> DataFra
     )
 
 
-def language_profiles(
-    doc_trigrams: DataFrame, lang_col: str, top_n: int = 50
-) -> DataFrame:
-    """Top-N trigrams per language from a per-doc trigram count table.
-
-    Deterministic rank tiebreak: count desc, then trigram asc.
-    """
-    by_lang = doc_trigrams.groupBy(lang_col, "trigram").agg(
-        F.sum("tg_count").alias("lang_count")
-    )
-    return _rank_profiles(by_lang, lang_col, top_n)
-
-
 def language_profiles_from_corpus(
     df: DataFrame, lang_col: str, text_col: str, top_n: int = 50
 ) -> DataFrame:

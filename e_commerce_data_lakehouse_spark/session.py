@@ -26,11 +26,16 @@ Scale notes (100 TB target):
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "e_commerce_data_lakehouse_spark"
+
+_scratch_root: str | None = None
 
 
 def get_spark(
@@ -72,3 +77,16 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for a drain, a checkpoint or a throwaway
+    lakehouse.  All of them live under one root per process in
+    ``tempfile.gettempdir()``, which is removed when the interpreter
+    exits: a frame a query returns reads its drain lazily, so the
+    directory can only go once nothing will read it again."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="lakehouse_scratch_")
+        atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)

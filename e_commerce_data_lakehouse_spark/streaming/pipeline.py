@@ -231,7 +231,11 @@ def run_available_now_parquet(
 
     The one-shot checkpoint is deleted after the drain: each invocation
     passes a FRESH checkpoint dir (the bounded replay is per-call), so
-    keeping it would only leak disk across a many-query session.
+    keeping it would only leak disk across a many-query session.  In
+    append/update mode the zero-row files are deleted too, once, after
+    the drain: the batch AvailableNow runs after the data to flush the
+    watermark usually emits nothing, yet its write leaves an empty file
+    that every read of the drain would open.
     """
     import shutil
 
@@ -243,9 +247,26 @@ def run_available_now_parquet(
         output_mode,
     )
     shutil.rmtree(checkpoint_dir, ignore_errors=True)
+    if mode == "append":
+        _delete_empty_parquet_files(path)
     # explicit schema: exact streaming result types (and a valid empty
     # frame even if no batch produced rows)
     return result.sparkSession.read.schema(result.schema).parquet(path)
+
+
+def _delete_empty_parquet_files(path: str) -> None:
+    """Remove every zero-row parquet file (and its checksum) in ``path``."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    for f in glob.glob(os.path.join(path, "*.parquet")):
+        if pq.read_metadata(f).num_rows == 0:
+            os.remove(f)
+            crc = os.path.join(path, f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
 
 
 def run_available_now(

@@ -487,9 +487,10 @@ def test_dup_ngram_fraction_known_values(spark):
 
 
 def test_bloom_contamination_superset_of_exact(spark):
-    """Bloom decontamination must have NO false negatives: every doc the
-    exact gram join flags appears in the bloom output with at least as
-    many flagged grams; and the false-positive overhead stays small."""
+    """The Bloom pre-filter of ``bloom_confirmed_contamination`` must have
+    NO false negatives: every doc the exact gram join flags passes the
+    filter with at least as many distinct grams; and the false-positive
+    overhead stays small."""
     from e_commerce_data_lakehouse_spark import entry_queries as eq
 
     docs = eq.load(spark, "/root/testdata/sf0.01", "documents")["documents"]
@@ -500,9 +501,14 @@ def test_bloom_contamination_superset_of_exact(spark):
         r["doc_id"]: r["n_shared_grams"]
         for r in cp.ngram_overlap(corpus, bench, n=4).collect()
     }
+    flagged = cp._bloom_flagged(
+        corpus, bench, 4, "doc_id", "text", bits_per_item=16, k_hashes=7
+    )
     bloom = {
         r["doc_id"]: r["n_flagged_grams"]
-        for r in cp.bloom_contaminated_grams(corpus, bench, n=4).collect()
+        for r in flagged.groupBy("doc_id")
+        .agg(F.count_distinct("gh").alias("n_flagged_grams"))
+        .collect()
     }
     assert exact, "exact contamination must be non-vacuous on this corpus"
     for doc, n_exact in exact.items():

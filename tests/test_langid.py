@@ -30,8 +30,8 @@ def test_trigram_counts_lowercases_and_skips_short(spark):
 def test_profile_rank_tiebreak_is_trigram_asc(spark):
     # both trigrams occur once -> rank decided by trigram name
     df = _df(spark, [(1, "en", "xyza")])  # xyz, yza each once
-    tg = lid.trigram_counts(df, ["doc_id", "lang"], "text")
-    prof = lid.language_profiles(tg, "lang", top_n=1).collect()
+    prof = lid.language_profiles_from_corpus(df, "lang", "text", top_n=1)
+    prof = prof.collect()
     assert len(prof) == 1 and prof[0]["trigram"] == "xyz"
 
 
@@ -44,7 +44,7 @@ def test_classify_argmax_and_tiebreak(spark):
         ],
     )
     tg = lid.trigram_counts(corpus, ["doc_id", "lang"], "text")
-    prof = lid.language_profiles(tg, "lang", top_n=50)
+    prof = lid.language_profiles_from_corpus(corpus, "lang", "text", top_n=50)
     pred = {
         r["doc_id"]: r["predicted_lang"]
         for r in lid.classify(tg, prof, ["doc_id", "lang"]).collect()
@@ -55,7 +55,7 @@ def test_classify_argmax_and_tiebreak(spark):
 def test_classify_drops_docs_with_no_profile_overlap(spark):
     corpus = _df(spark, [(1, "aa", "hello hello")])
     tg = lid.trigram_counts(corpus, ["doc_id", "lang"], "text")
-    prof = lid.language_profiles(tg, "lang", top_n=50)
+    prof = lid.language_profiles_from_corpus(corpus, "lang", "text", top_n=50)
     stranger = _df(spark, [(9, "??", "zzzqqq")])
     stg = lid.trigram_counts(stranger, ["doc_id", "lang"], "text")
     assert lid.classify(stg, prof, ["doc_id", "lang"]).count() == 0
@@ -66,7 +66,7 @@ def test_predictions_learn_corpus_bias(spark):
     (every doc >= 3 chars classified exactly once) and deterministic."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     tg = lid.trigram_counts(docs, ["doc_id", "lang"], "text")
-    prof = lid.language_profiles(tg, "lang", top_n=50)
+    prof = lid.language_profiles_from_corpus(docs, "lang", "text", top_n=50)
     out = lid.classify(tg, prof, ["doc_id", "lang"])
     n_docs = docs.filter(F.length("text") >= 3).count()
     assert out.count() == n_docs

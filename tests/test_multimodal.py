@@ -39,26 +39,6 @@ def test_extract_features_feeds_ann(spark):
     assert all(r["cosine_sim"] <= 1.000001 for r in got)
 
 
-def test_frame_sample_is_honest_stub(spark):
-    docs = _payloads(spark)
-    with pytest.raises(NotImplementedError):
-        mm.frame_sample_plan(docs, "doc_id", "payload", every_n=10)
-
-
-def test_resize_images_plumbing(spark):
-    docs = _payloads(spark)
-    out = mm.resize_images(docs, "doc_id", "payload", target_w=8, target_h=4)
-    rows = out.collect()
-    assert len(rows) == docs.count()
-    assert all(len(bytes(r["payload"])) == 32 for r in rows)
-    assert all((r["width"], r["height"]) == (8, 4) for r in rows)
-    # deterministic
-    again = mm.resize_images(docs, "doc_id", "payload", 8, 4).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-    # no shuffle: plan has no Exchange
-    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
-
-
 def test_hash_embed_deterministic_and_bounded(spark):
     from e_commerce_data_lakehouse_spark.multimodal import binary_ops as mm
 

@@ -18,7 +18,6 @@ Pins the behaviors the r13 changes introduced:
 from __future__ import annotations
 
 import datetime
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -188,15 +187,13 @@ def test_run_available_now_parquet_matches_memory_sink(spark, tmp_path):
     stream = stream_events(spark, src, schema, ts_from_nanos="ts")
     agg = hourly_event_counts(stream)
     got = run_available_now_parquet(
-        agg,
-        tempfile.mkdtemp(prefix="ckpt_"),
-        tempfile.mkdtemp(prefix="drain_"),
+        agg, str(tmp_path / "ckpt"), str(tmp_path / "drain")
     )
 
     table = f"ref_{uuid.uuid4().hex[:8]}"
     stream2 = stream_events(spark, src, schema, ts_from_nanos="ts")
     run_available_now(
-        hourly_event_counts(stream2), tempfile.mkdtemp(prefix="ckpt_"), table
+        hourly_event_counts(stream2), str(tmp_path / "ckpt_ref"), table
     )
     ref = spark.table(table)
 
@@ -245,8 +242,8 @@ def test_run_available_now_parquet_append_mode(spark, tmp_path):
     ).select("user_id", "day")
     got = run_available_now_parquet(
         deduped,
-        tempfile.mkdtemp(prefix="ckpt_"),
-        tempfile.mkdtemp(prefix="drain_"),
+        str(tmp_path / "ckpt"),
+        str(tmp_path / "drain"),
         output_mode="append",
     )
     assert sorted(map(tuple, got.collect())) == sorted(

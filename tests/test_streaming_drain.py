@@ -2,12 +2,17 @@
 first start sizes the stateful shuffle to ``defaultParallelism``, the
 session's own ``spark.sql.shuffle.partitions`` is left as it was (also when
 ``start()`` raises), and a checkpoint written at another width resumes at
-that width, exactly once."""
+that width, exactly once.  A parquet drain in append mode leaves no
+zero-row file behind."""
 
 from __future__ import annotations
 
+import glob
 import os
+import subprocess
+import sys
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
@@ -16,7 +21,9 @@ from e_commerce_data_lakehouse_spark.sources.sinks import ManagedTable
 from e_commerce_data_lakehouse_spark.streaming.pipeline import (
     drain_available_now,
     hourly_event_counts,
+    run_available_now,
     run_available_now_append,
+    run_available_now_parquet,
 )
 from e_commerce_data_lakehouse_spark.streaming.stateful import (
     streaming_dedup,
@@ -154,3 +161,84 @@ def test_checkpoint_written_at_another_width_resumes_exactly_once(
     # nothing new: a third drain changes nothing
     run_available_now_append(dedup(), ckpt, target)
     assert target.read().count() == 30
+
+
+def _row_counts(path):
+    return [
+        pq.read_metadata(f).num_rows
+        for f in glob.glob(os.path.join(path, "*.parquet"))
+    ]
+
+
+def test_windowed_append_drain_leaves_no_zero_row_file(spark, tmp_path):
+    """The batch that only flushes the watermark writes no rows; its
+    empty file is gone after the drain and the drained rows are the
+    memory sink's rows."""
+    src = str(tmp_path / "ev")
+    _deliver(spark, src, [
+        (i, f"t{i % 3}", float(i), f"2024-01-01 0{i % 8}:00:00")
+        for i in range(48)
+    ])
+    drain = str(tmp_path / "drain")
+    got = run_available_now_parquet(
+        hourly_event_counts(_stream(spark, src)),
+        str(tmp_path / "ck"),
+        drain,
+        output_mode="append",
+    )
+    counts = _row_counts(drain)
+    assert counts and 0 not in counts
+
+    run_available_now(
+        hourly_event_counts(_stream(spark, src)),
+        str(tmp_path / "ck_ref"),
+        "append_drain_ref",
+        output_mode="append",
+    )
+    ref = spark.table("append_drain_ref")
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, ref.collect())
+    )
+    assert got.count() == sum(counts) > 0
+
+
+def test_all_empty_append_drain_returns_typed_empty_frame(spark, tmp_path):
+    src = str(tmp_path / "ev")
+    _deliver(spark, src, [(1, "a", 1.0, "2024-01-01 00:00:00")])
+    result = hourly_event_counts(_stream(spark, src).filter("value < 0"))
+    drain = str(tmp_path / "drain")
+    got = run_available_now_parquet(
+        result, str(tmp_path / "ck"), drain, output_mode="append"
+    )
+    assert _row_counts(drain) == []
+    # the parquet reader relaxes nullability; names and types are kept
+    assert [(f.name, f.dataType) for f in got.schema.fields] == [
+        (f.name, f.dataType) for f in result.schema.fields
+    ]
+    assert got.count() == 0
+
+
+def test_scratch_dirs_are_removed_at_interpreter_exit(tmp_path):
+    """Drains, checkpoints and throwaway lakehouses get their directory
+    from ``session.scratch_dir``: one root per process under TMPDIR,
+    removed when the interpreter exits."""
+    code = (
+        "import os\n"
+        "from e_commerce_data_lakehouse_spark.session import scratch_dir\n"
+        "for prefix in ('drain_', 'ckpt_', 'dag_'):\n"
+        "    d = scratch_dir(prefix)\n"
+        "    open(os.path.join(d, 'part'), 'w').write('x')\n"
+        "    print(d)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    made = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=root,
+        env=dict(os.environ, TMPDIR=str(tmp_path)),
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    assert len(made) == 3 and len({os.path.dirname(d) for d in made}) == 1
+    assert all(d.startswith(str(tmp_path)) for d in made)
+    assert os.listdir(tmp_path) == []

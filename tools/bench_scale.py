@@ -14,9 +14,8 @@ Methodology:
 - Warm timings (second run; cold also recorded): Janino codegen compile
   and Python-worker fork amortize to zero at scale and would otherwise
   dominate the small points.
-- noop sink: full plan execution, no driver collect.
-- clearCache() between queries (the minhash family persists signatures
-  the returned frame still reads).
+- The timed loop is bench.py's (``tools/measure.py``): noop sink,
+  clearCache() between queries.
 
 A query "scales" if time grows <= ~linearly in rows (modulo the shuffle
 log factor and the fixed per-job floor that dominates sub-second points).
@@ -31,14 +30,14 @@ import argparse
 import json
 import os
 import sys
-import time
+from functools import partial
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, ROOT)
 
 from e_commerce_data_lakehouse_spark import entry_queries as eq  # noqa: E402
-from e_commerce_data_lakehouse_spark.session import get_spark  # noqa: E402
+from tools.measure import Meter, boot  # noqa: E402
 
 # the relational/window/sessionization core (r4 extension): measured over
 # the generator's TPC-H-ish star + event stream so the non-dedup half of
@@ -87,7 +86,6 @@ def _cc_over_lsh_pairs(spark, sf_dir: str):
     in block size, so above ~sf1 the honest scale measurement is CC fed
     by the banded-LSH pair generator (linear candidate volume at constant
     dup rate)."""
-    from e_commerce_data_lakehouse_spark import entry_queries as eq
     from e_commerce_data_lakehouse_spark.operators import dedup as dd
     from e_commerce_data_lakehouse_spark.operators import graph as gr
 
@@ -186,8 +184,7 @@ def _streaming_stateful_totals(spark, sf_dir: str):
     (AvailableNow drain).  Measures the GroupState path — per-key state
     sharded by the grouping key, Arrow-batched input — which the batch
     queries never exercise."""
-    import tempfile
-
+    from e_commerce_data_lakehouse_spark.session import scratch_dir
     from e_commerce_data_lakehouse_spark.streaming import stateful as st
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
         run_available_now_parquet,
@@ -201,8 +198,8 @@ def _streaming_stateful_totals(spark, sf_dir: str):
     # executor-side drain: no driver collect, no session-lifetime table
     return run_available_now_parquet(
         totals,
-        tempfile.mkdtemp(prefix="ckpt_"),
-        tempfile.mkdtemp(prefix="stateful_scale_"),
+        scratch_dir("ckpt_"),
+        scratch_dir("stateful_scale_"),
         output_mode="update",
     )
 
@@ -280,17 +277,15 @@ SYNTHETIC = {
 }
 
 
-def run_point(spark, sf_dir: str, runs: int, targets: list[str]) -> dict:
+def run_point(meter, sf_dir: str, runs: int, targets: list[str]) -> dict:
+    spark = meter.spark
     out = {}
     for name in targets:
-        spark.catalog.clearCache()
         fn = SYNTHETIC.get(name) or eq.QUERIES[name].spark_fn
-        timings = []
-        for _ in range(runs):
-            t0 = time.monotonic()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            timings.append(round(time.monotonic() - t0, 3))
+        timings = [
+            round(r.seconds, 3)
+            for r in meter.runs(partial(fn, spark, sf_dir), runs)
+        ]
         # row count outside the timed loop (second job over the same plan)
         rows = fn(spark, sf_dir).count()
         out[name] = {"warm": timings[-1], "cold": timings[0], "rows": rows}
@@ -316,8 +311,8 @@ def main() -> None:
     if args.queries == ["relational"]:
         args.queries = RELATIONAL_TARGETS
 
-    spark = get_spark(app_name="bench_scale")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    spark = boot("bench_scale")
+    meter = Meter(spark)
 
     # merge into an existing record so points can run as separate
     # invocations (bounded wall-clock each) and accumulate
@@ -329,7 +324,7 @@ def main() -> None:
 
     def record(label: str, d: str) -> None:
         print(f"== {label} ({d})", flush=True)
-        got = run_point(spark, d, args.runs, args.queries)
+        got = run_point(meter, d, args.runs, args.queries)
         points.setdefault(label, {}).update(got)
         with open(out_path, "w") as f:
             json.dump({"metric": "scale_series", "points": points}, f, indent=1)

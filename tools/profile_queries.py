@@ -3,32 +3,31 @@
 Usage: python tools/profile_queries.py <query> [<query> ...] [--sf=DIR]
 
 For each named query (default: the bench pair's slowest twelve), runs the
-query cold + warm against the noop sink exactly like ``bench.py``, with the
-Spark UI's REST API enabled, and prints per-run:
+query cold + warm against the noop sink through ``bench.py``'s loop
+(``tools/measure.py``) and prints per-run:
 
 - wall seconds,
-- the jobs the run submitted (duration, description, stage count),
-- per-stage shuffle read/write bytes and task-time breakdown for the
+- the jobs the run submitted (duration, description, completed-stage
+  count), their summed time and the scheduling gap between them,
+- for the warm run, shuffle read/write bytes and task time of the five
   slowest stages.
 
 This is the guide's §1 loop (empirical: find the slowest stage, decide
-whether it is shuffle, compute, or scheduling) made scriptable — the
-sandbox has no live UI, so the REST snapshot is the stage page.
-Profiling only; bench.py remains the timing of record.
+whether it is shuffle, compute, or scheduling) made scriptable.  Job and
+stage figures come from the Spark status store in-process, so the UI
+stays disabled.  Profiling only; bench.py remains the timing of record.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
-import urllib.request
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from e_commerce_data_lakehouse_spark import entry_queries as eq
-from e_commerce_data_lakehouse_spark.session import get_spark
+from tools.measure import Meter, boot
 
 DEFAULT = [
     "streaming_corpus_ingest",
@@ -46,11 +45,6 @@ DEFAULT = [
 ]
 
 
-def _api(base: str, path: str):
-    with urllib.request.urlopen(f"{base}{path}", timeout=10) as r:
-        return json.loads(r.read())
-
-
 def main() -> None:
     sf_dir = "/root/testdata/sf0.1"
     names = []
@@ -61,102 +55,31 @@ def main() -> None:
             names.append(a)
     names = names or DEFAULT
 
-    spark = get_spark(
-        app_name="profile",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "4959",
-            "spark.ui.retainedJobs": "2000",
-            "spark.ui.retainedStages": "4000",
-        },
-    )
-    sc = spark.sparkContext
-    base = f"http://localhost:4959/api/v1/applications/{sc.applicationId}"
-
-    # bench.py's warmup: codegen, python workers, parquet footers
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from pyspark.sql.functions import pandas_udf
-
-    _warm = pandas_udf(lambda s: s, "long")
-    spark.range(32).repartition(32).select(_warm("id")).collect()
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            spark.read.parquet(p).limit(1).count()
-
+    spark = boot("profile", sf_dir)
+    meter = Meter(spark)
     for name in names:
-        spark.catalog.clearCache()
-        fn = eq.QUERIES[name].spark_fn
-        for run in ("cold", "warm"):
-            before_ids = {j["jobId"] for j in _api(base, "/jobs")}
-            t0 = time.monotonic()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            wall = time.monotonic() - t0
-            jobs = [
-                j for j in _api(base, "/jobs") if j["jobId"] not in before_ids
-            ]
-            jobs.sort(key=lambda j: j["jobId"])
-            total_job_ms = 0.0
-            lines = []
-            for j in jobs:
-                sub = j.get("submissionTime", "")
-                done = j.get("completionTime", "")
-                dur = _dur_ms(sub, done)
-                total_job_ms += dur
-                desc = (j.get("description") or j.get("name") or "")[:90]
-                lines.append(
-                    f"    job {j['jobId']:>5} {dur/1000:7.3f}s "
-                    f"stages={len(j.get('stageIds', []))} {desc}"
-                )
+        build = partial(eq.QUERIES[name].spark_fn, spark, sf_dir)
+        for run, r in zip(("cold", "warm"), meter.runs(build, 2)):
+            job_time = sum(j.end - j.start for j in r.jobs)
             print(
-                f"{name} [{run}] wall={wall:.3f}s jobs={len(jobs)} "
-                f"job_time_sum={total_job_ms/1000:.3f}s "
-                f"sched_gap={wall - total_job_ms/1000:.3f}s"
+                f"{name} [{run}] wall={r.seconds:.3f}s jobs={len(r.jobs)} "
+                f"job_time_sum={job_time:.3f}s "
+                f"sched_gap={r.seconds - job_time:.3f}s"
             )
-            for ln in lines:
-                print(ln)
-            if run == "warm":
-                _stage_detail(base, jobs)
+            for j in r.jobs:
+                print(
+                    f"    job {j.id:>5} {j.end - j.start:7.3f}s "
+                    f"stages={j.stages} {meter.describe(j.id)[:90]}"
+                )
+        # shuffle and task time of the warm run's 5 slowest stages
+        for s in sorted(meter.stages(r), key=lambda s: -s.run_s)[:5]:
+            print(
+                f"    stage {s.id:>5} runTime={s.run_s:7.2f}s tasks={s.tasks} "
+                f"in={s.input_mb:8.1f}MB shufR={s.shuffle_read_mb:8.1f}MB "
+                f"shufW={s.shuffle_write_mb:8.1f}MB  {s.name[:70]}"
+            )
         sys.stdout.flush()
     spark.stop()
-
-
-def _dur_ms(sub: str, done: str) -> float:
-    from datetime import datetime
-
-    fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-    try:
-        a = datetime.strptime(sub.replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f")
-        b = datetime.strptime(done.replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f")
-        return (b - a).total_seconds() * 1000
-    except Exception:
-        return 0.0
-
-
-def _stage_detail(base: str, jobs: list) -> None:
-    """Shuffle/task breakdown for the warm run's 5 slowest stages."""
-    stage_ids = sorted({s for j in jobs for s in j.get("stageIds", [])})
-    stages = []
-    for sid in stage_ids:
-        try:
-            for att in _api(base, f"/stages/{sid}"):
-                stages.append(att)
-        except Exception:
-            pass
-    stages.sort(key=lambda s: -(s.get("executorRunTime") or 0))
-    for s in stages[:5]:
-        print(
-            f"    stage {s['stageId']:>5} runTime={s.get('executorRunTime', 0)/1000:7.2f}s "
-            f"tasks={s.get('numCompleteTasks')} "
-            f"in={s.get('inputBytes', 0)/1e6:8.1f}MB "
-            f"shufR={s.get('shuffleReadBytes', 0)/1e6:8.1f}MB "
-            f"shufW={s.get('shuffleWriteBytes', 0)/1e6:8.1f}MB  "
-            f"{(s.get('description') or s.get('name') or '')[:70]}"
-        )
 
 
 if __name__ == "__main__":

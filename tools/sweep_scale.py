@@ -36,6 +36,7 @@ import os
 import sys
 import time
 import traceback
+from functools import partial
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -45,7 +46,7 @@ from e_commerce_data_lakehouse_spark import entry_queries as eq  # noqa: E402
 from e_commerce_data_lakehouse_spark.caching import (  # noqa: E402
     release_persisted,
 )
-from e_commerce_data_lakehouse_spark.session import get_spark  # noqa: E402
+from tools.measure import Meter, boot, funnel_stats  # noqa: E402
 
 
 def main() -> None:
@@ -94,8 +95,8 @@ def main() -> None:
     if args.after:
         names = [n for n in names if n > args.after]
 
-    spark = get_spark(app_name="sweep_scale")
-    spark.range(1000).selectExpr("sum(id)").collect()  # JVM warm
+    spark = boot("sweep_scale")
+    meter = Meter(spark)
 
     log = open(args.log, "a")
 
@@ -110,13 +111,11 @@ def main() -> None:
         # sf0.1), so a blown-up candidate stage is visible in the jsonl
         # even when the query still finishes
         try:
-            import bench as _bench
-
             emit(
                 {
                     "status": "funnel",
                     "sf_dir": args.sf_dir,
-                    **_bench._funnel_stats(spark, args.sf_dir),
+                    **funnel_stats(spark, args.sf_dir),
                 }
             )
         except Exception as e:  # noqa: BLE001 — telemetry, not a gate
@@ -132,18 +131,11 @@ def main() -> None:
         emit({"q": name, "status": "start"})
         t = time.time()
         try:
-            eq.QUERIES[name].spark_fn(spark, args.sf_dir).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            emit(
-                {
-                    "q": name,
-                    "status": "ok",
-                    "secs": round(time.time() - t, 1),
-                }
-            )
+            [run] = meter.runs(partial(eq.QUERIES[name].spark_fn, spark,
+                                       args.sf_dir))
+            emit({"q": name, "status": "ok", "secs": round(run.seconds, 1)})
             n_ok += 1
-            print(f"SWEEP OK  {name} {time.time() - t:.1f}s", flush=True)
+            print(f"SWEEP OK  {name} {run.seconds:.1f}s", flush=True)
         except Exception as e:  # noqa: BLE001 — throw-hunt: record and go on
             emit(
                 {

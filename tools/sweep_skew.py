@@ -24,8 +24,6 @@ import argparse
 import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -40,58 +38,36 @@ from e_commerce_data_lakehouse_spark.operators import (  # noqa: E402
 from e_commerce_data_lakehouse_spark.operators.joins import (  # noqa: E402
     salted_join,
 )
-from e_commerce_data_lakehouse_spark.session import get_spark  # noqa: E402
+from e_commerce_data_lakehouse_spark.session import scratch_dir  # noqa: E402
 from e_commerce_data_lakehouse_spark.streaming.pipeline import (  # noqa: E402
     drain_available_now,
 )
+from tools.measure import Meter, boot  # noqa: E402
 
 
-def _rest(base: str, path: str):
-    with urllib.request.urlopen(f"{base}/api/v1{path}", timeout=10) as r:
-        return json.load(r)
-
-
-def _stage_ratios(base: str, app_id: str, seen: set) -> list[dict]:
-    """max/median executorRunTime for every newly-completed stage with
-    >= 8 tasks and median >= 50 ms."""
+def _stage_ratios(stages: list) -> list[dict]:
+    """max/median executorRunTime for every completed stage with >= 8
+    tasks and median >= 50 ms."""
     out = []
-    for st in _rest(base, f"/applications/{app_id}/stages?status=complete"):
-        sid, att = st["stageId"], st["attemptId"]
-        if (sid, att) in seen:
+    for st in stages:
+        if st.tasks < 8:
             continue
-        if st.get("numCompleteTasks", 0) < 8:
-            seen.add((sid, att))
-            continue
-        # the status store fills in async after a job completes, so the
-        # summary fetch is retried in-call (deferring to the next poll
-        # would attribute the stage to the WRONG op); a stage whose
-        # summary never arrives is recorded visibly rather than silently
-        # dropped — a straggler must not be reported ok by omission
-        summ = None
-        for _ in range(3):
-            try:
-                summ = _rest(
-                    base,
-                    f"/applications/{app_id}/stages/{sid}/{att}/taskSummary"
-                    "?quantiles=0.5,1.0",
-                )
-                break
-            except Exception:
-                time.sleep(1.0)
-        seen.add((sid, att))
-        if summ is None:
+        # a stage without a task summary is recorded visibly rather than
+        # silently dropped — a straggler must not be reported ok by
+        # omission
+        if st.task_ms is None:
             out.append(
-                {"stage": sid, "tasks": st["numCompleteTasks"],
-                 "ratio": None, "summary_error": True}
+                {"stage": st.id, "tasks": st.tasks, "ratio": None,
+                 "summary_error": True}
             )
             continue
-        med, mx = summ["executorRunTime"]
+        med, mx = st.task_ms
         if med < 50.0:
             continue
         out.append(
             {
-                "stage": sid,
-                "tasks": st["numCompleteTasks"],
+                "stage": st.id,
+                "tasks": st.tasks,
                 "median_ms": round(med, 1),
                 "max_ms": round(mx, 1),
                 "ratio": round(mx / med, 2) if med else None,
@@ -110,39 +86,32 @@ def _run_streaming_sessions(
     ``bucketed=True`` runs the day-bucketed grouping key instead (the
     ``streaming_user_sessions_bucketed`` streaming stage, r11 VERDICT
     #2) — the hot key's merge state splits across day partitions."""
-    import shutil
-    import tempfile
-
-    ckpt = tempfile.mkdtemp(prefix="skew_sessions_ckpt_")
-    try:
-        # schema from the batch read of the SAME file — a string literal
-        # here would silently yield NULL columns if the generator schema
-        # drifted, and the sweep would measure near-empty sessions
-        # instead of failing (r11 ADVICE)
-        schema = spark.read.parquet(f"{skew_dir}/events_skew.parquet").schema
-        sdf = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("pathGlobFilter", "events_skew.parquet")
-            .load(skew_dir)
+    # schema from the batch read of the SAME file — a string literal
+    # here would silently yield NULL columns if the generator schema
+    # drifted, and the sweep would measure near-empty sessions
+    # instead of failing (r11 ADVICE)
+    schema = spark.read.parquet(f"{skew_dir}/events_skew.parquet").schema
+    sdf = (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("pathGlobFilter", "events_skew.parquet")
+        .load(skew_dir)
+    )
+    # watermarks require TIMESTAMP; the generator writes NTZ — with
+    # the session pinned to UTC the instant equals the NTZ value
+    # (same contract as streaming/pipeline.stream_events)
+    sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
+    keys = ["user_id"]
+    if bucketed:
+        keys.append(F.to_date("ts").alias("__day"))
+    res = (
+        sdf.withWatermark("ts", "2 hours")
+        .groupBy(
+            *keys, F.session_window("ts", "30 minutes").alias("sw")
         )
-        # watermarks require TIMESTAMP; the generator writes NTZ — with
-        # the session pinned to UTC the instant equals the NTZ value
-        # (same contract as streaming/pipeline.stream_events)
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
-        keys = ["user_id"]
-        if bucketed:
-            keys.append(F.to_date("ts").alias("__day"))
-        res = (
-            sdf.withWatermark("ts", "2 hours")
-            .groupBy(
-                *keys, F.session_window("ts", "30 minutes").alias("sw")
-            )
-            .agg(F.count("*").alias("n"))
-        )
-        drain_available_now(res, ckpt, "noop")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        .agg(F.count("*").alias("n"))
+    )
+    drain_available_now(res, scratch_dir("skew_sessions_ckpt_"), "noop")
 
 
 def main() -> None:
@@ -159,12 +128,8 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    spark = get_spark(
-        app_name="skew_sweep",
-        extra_conf={"spark.ui.enabled": "true"},  # REST task metrics
-    )
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
+    spark = boot("skew_sweep", args.skew_dir)
+    meter = Meter(spark)
 
     events = spark.read.parquet(f"{args.skew_dir}/events_skew.parquet")
     orders = spark.read.parquet(f"{args.skew_dir}/orders_skew.parquet")
@@ -333,17 +298,12 @@ def main() -> None:
             raise SystemExit(f"--only names not in OPS: {sorted(unknown_ops)}")
         OPS = [op for op in OPS if op[0] in wanted]
 
-    seen: set = set()
-    _stage_ratios(base, app_id, seen)  # absorb warmup stages
     rows, failed = [], []
     for name, build, expect_skew in OPS:
-        spark.catalog.clearCache()
-        t0 = time.monotonic()
-        built = build()
-        if built is not None:  # streaming ops execute themselves
-            built.write.format("noop").mode("overwrite").save()
-        wall = round(time.monotonic() - t0, 2)
-        stages = _stage_ratios(base, app_id, seen)
+        # streaming ops return None: they execute themselves
+        [run] = meter.runs(build)
+        wall = round(run.seconds, 2)
+        stages = _stage_ratios(meter.stages(run))
         # a stage whose taskSummary never arrived (ratio=None,
         # summary_error) is UNKNOWN, not in-bar: it must not launder a
         # straggler into 'ok' by omission (r10 ADVICE) — report it as

@@ -33,8 +33,6 @@ from e_commerce_data_lakehouse_spark.operators import aggregates as agg
 from e_commerce_data_lakehouse_spark.operators.union import union_conform
 from e_commerce_data_lakehouse_spark.plans.medallion import (
     build_catalog_table,
-    measure_fact_partition_grain,
-    with_date_key_parts,
 )
 from e_commerce_data_lakehouse_spark.sources.sinks import ManagedTable
 
@@ -49,9 +47,8 @@ class GlobalDW:
 
 def _activity_union(orders: DataFrame, events: DataFrame) -> DataFrame:
     """U1: schema-conformed union of the order and event activity streams,
-    with the per-actor activity_sequence (W2) and the
-    ``activity_date_key`` partition column the fact is physically laid
-    out by (the reference's layout: ``create_global_dw.py:263``
+    with the per-actor activity_sequence (W2) and the date columns the
+    fact is laid out by (the reference: ``create_global_dw.py:263``
     partitions the activity fact by ``activity_date_key``).
 
     The sequence runs the HEAT-ROUTED hybrid since r12
@@ -66,14 +63,10 @@ def _activity_union(orders: DataFrame, events: DataFrame) -> DataFrame:
     both carry the window query's oracle verbatim.
 
     Physical layout columns: ``activity_date_key`` (the reference's
-    column) plus the full (activity_year, activity_month, activity_day)
-    hierarchy; :func:`build_global_dw` partitions the fact at a grain
-    MEASURED from the batch volume (``measure_fact_partition_grain``:
-    month until a month averages ``DAY_GRAIN_ROWS_PER_MONTH`` rows,
-    then day — the reference's literal day grain wrote one directory
-    per distinct day, ~2.4k dirs of 62-row files at sf0.1, a 119 s
-    build).  Any date-keyed predicate over the grain columns is still
-    a partition filter."""
+    column) plus the calendar (activity_year, activity_month,
+    activity_day) of ``activity_ts``; a null timestamp leaves all four
+    null.  :func:`build_global_dw` partitions the fact by year and
+    month."""
     orders_act = orders.select(
         F.col("o_custkey").alias("actor_id"),
         F.col("o_orderkey").alias("activity_id"),
@@ -108,10 +101,12 @@ def _activity_union(orders: DataFrame, events: DataFrame) -> DataFrame:
             "activity_date_key",
             F.date_format(F.to_date("activity_ts"), "yyyyMMdd").cast("int"),
         )
-        .transform(
-            lambda d: with_date_key_parts(
-                d, "activity_date_key", prefix="activity_"
-            )
+        .withColumns(
+            {
+                "activity_year": F.year("activity_ts"),
+                "activity_month": F.month("activity_ts"),
+                "activity_day": F.dayofmonth("activity_ts"),
+            }
         )
     )
 
@@ -131,29 +126,17 @@ def build_global_dw(
     domains: orders/customer/part stand in for the transactions star,
     events for the IoT/social activity streams.
     """
-    # the activity fact is physically partitioned by its date hierarchy —
-    # the reference's universal fact layout (``create_global_dw.py:263``
-    # partitions it by activity_date_key) at a grain DERIVED from the
-    # measured batch volume (r11 VERDICT #3: month until a month averages
-    # DAY_GRAIN_ROWS_PER_MONTH rows, then day), so date-ranged downstream
-    # reads prune at the scan.  The measurement is one column-pruned
-    # aggregate over the SOURCE date columns (not the built union — that
-    # would recompute the window+join upstream).  The daily fact
-    # (``:345`` partitions it by date_key) is left UNPARTITIONED
-    # deliberately: it is one row per day by construction at every scale,
-    # so partitioning it means one directory per row — pure filesystem
-    # overhead with nothing to prune (the whole table is smaller than one
-    # healthy parquet file).
-    activity_dates = orders.select(
-        F.to_date("o_orderdate").alias("d")
-    ).unionByName(events.select(F.to_date("ts").alias("d")))
+    # the activity fact is physically partitioned by its calendar month —
+    # the reference's fact layout (``create_global_dw.py:263`` partitions
+    # it by activity_date_key) at month grain, so date-ranged downstream
+    # reads prune at the scan (see orders_dag's fact_orders for why not
+    # day grain).  The daily fact (``:345`` partitions it by date_key)
+    # is left UNPARTITIONED deliberately: it is one row per day by
+    # construction at every scale, so partitioning it means one
+    # directory per row — pure filesystem overhead with nothing to
+    # prune (the whole table is smaller than one healthy parquet file).
     fact_partitioning = {
-        "global_fact_customer_activity": measure_fact_partition_grain(
-            # 1% seeded sample: the decision threshold (20M rows/month)
-            # is far above anything a uniform sample can misjudge, and
-            # at 100 TB the unsampled one-column scan is a real pass
-            activity_dates, "d", prefix="activity_", sample_fraction=0.01
-        ),
+        "global_fact_customer_activity": ("activity_year", "activity_month"),
     }
     t = {
         name: ManagedTable(

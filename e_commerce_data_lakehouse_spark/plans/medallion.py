@@ -40,9 +40,6 @@ from e_commerce_data_lakehouse_spark.operators.dedup import (
 from e_commerce_data_lakehouse_spark.operators.joins import date_key_lookup
 from e_commerce_data_lakehouse_spark.operators.merge import incremental_rows
 from e_commerce_data_lakehouse_spark.plans.scheduler import Dag, TaskRun
-from e_commerce_data_lakehouse_spark.sources.backends import (
-    contains_map_type,
-)
 from e_commerce_data_lakehouse_spark.sources.files import (
     with_lineage,
     with_partition_columns,
@@ -79,6 +76,21 @@ def ingest_raw_to_bronze(
     # row_count() = storage metadata (parquet footers / Delta txn-log
     # stats) — no Spark job for a number the storage layer knows
     return StageResult(bronze.row_count())
+
+
+def contains_map_type(dtype) -> bool:
+    """True when a MapType is embedded at ANY depth (map, array<map>,
+    struct-of-map, …) — ``max(struct)`` cannot order such a column
+    (maps have no canonical element order)."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    if isinstance(dtype, MapType):
+        return True
+    if isinstance(dtype, ArrayType):
+        return contains_map_type(dtype.elementType)
+    if isinstance(dtype, StructType):
+        return any(contains_map_type(f.dataType) for f in dtype.fields)
+    return False
 
 
 def bronze_to_silver(
@@ -142,114 +154,6 @@ def bronze_to_silver(
     return StageResult(silver.row_count())
 
 
-def with_date_key_parts(
-    df: DataFrame, date_key_name: str = "date_key", prefix: str = ""
-) -> DataFrame:
-    """Derive the (year, month, day) hierarchy columns from a yyyymmdd
-    date key (the ``-1`` sentinel lands in year=0/month=0/day=-1 —
-    Spark's div/% truncate toward zero — its own pruned partition).
-    All three columns always exist so ``FACT_PARTITION_GRAIN`` really is
-    a one-tuple flip (day grain at 100 TB-per-year volumes); facts
-    default to MONTH grain because grain must match data-per-partition:
-    the reference's literal day grain
-    (``create_global_dw.py:263,345``) measured 14,428 files / 2,405
-    directories and a 51 s fact write at sf0.1 (62 rows/day) —
-    over-partitioning that hurts at every tested scale, vs 26 files /
-    2.5 s at month grain.  ``prefix`` names the derived columns (the
-    global-DW activity fact uses ``activity_``)."""
-    return (
-        df.withColumn(
-            f"{prefix}year", F.expr(f"{date_key_name} div 10000").cast("int")
-        )
-        .withColumn(
-            f"{prefix}month",
-            F.expr(f"{date_key_name} div 100 % 100").cast("int"),
-        )
-        .withColumn(
-            f"{prefix}day", F.expr(f"{date_key_name} % 100").cast("int")
-        )
-    )
-
-
-# the physical fact layout (see with_date_key_parts): month grain at the
-# tested volumes — the DEFAULT when no volume measurement is available;
-# pipelines that can see the incoming volume derive the grain instead
-# (:func:`choose_fact_partition_grain`, r11 VERDICT #3)
-FACT_PARTITION_GRAIN: tuple[str, ...] = ("year", "month")
-
-# flip threshold: extend month grain to day once a month averages this
-# many rows.  Calibrated to partition-directory health, the quantity the
-# grain actually controls: at ~100 B/row, 20M rows/month ≈ 2 GB dirs —
-# past the point where day dirs (~70 MB, one healthy parquet file) both
-# prune finer and bound per-directory file listings; below it, day grain
-# is pure overhead (measured at sf0.1: 14,428 files / 51 s vs 26 files /
-# 2.5 s, see with_date_key_parts).
-DAY_GRAIN_ROWS_PER_MONTH: int = 20_000_000
-
-
-def choose_fact_partition_grain(
-    n_rows: int,
-    n_months: int,
-    day_flip_rows_per_month: int = DAY_GRAIN_ROWS_PER_MONTH,
-    prefix: str = "",
-) -> tuple[str, ...]:
-    """Volume-derived fact partition grain (r11 VERDICT #3: the grain was
-    a constant the developer flips; now it's a computed property of the
-    batch).  Month grain until a month averages
-    ``day_flip_rows_per_month`` rows, then day grain — the reference's
-    universal layout (``csv_to_deltalake_table.py:520``) is literal day
-    grain at every volume, which measured 555× the files and 20× the
-    write time at sf0.1 with nothing to prune that month grain doesn't
-    already prune."""
-    months = max(int(n_months), 1)
-    grain = (
-        ("year", "month", "day")
-        if int(n_rows) / months > day_flip_rows_per_month
-        else ("year", "month")
-    )
-    return tuple(f"{prefix}{g}" for g in grain)
-
-
-def measure_fact_partition_grain(
-    df: DataFrame,
-    date_col,
-    day_flip_rows_per_month: int = DAY_GRAIN_ROWS_PER_MONTH,
-    prefix: str = "",
-    sample_fraction: float = 1.0,
-) -> tuple[str, ...]:
-    """:func:`choose_fact_partition_grain` from a DataFrame: ONE
-    column-pruned aggregate over ``date_col`` (count + distinct months —
-    both cheap: the scan reads a single column and the distinct is over
-    ≤ hundreds of month values).  Callers measure the cheap SOURCE
-    frames, not the built fact (counting a fact that embeds windows and
-    joins would recompute the whole build).
-
-    ``sample_fraction`` < 1 measures on a seeded sample (row count
-    scaled back by 1/fraction) — at 100 TB even the one-column scan is
-    a real pass, and the grain decision tolerates sampling by
-    construction: the flip threshold is 20M rows/month, so any month
-    big enough to MATTER appears in any non-degenerate sample, and a
-    tiny month missing from the sample only RAISES the estimated
-    rows/month — erring toward the finer grain exactly when the table
-    is near the flip point.  Tiny frames stay correct too: their
-    estimate lands orders of magnitude under the threshold no matter
-    how sparse the sample."""
-    src = (
-        df
-        if sample_fraction >= 1.0
-        else df.sample(fraction=sample_fraction, seed=42)
-    )
-    row = src.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct(F.trunc(date_col, "month")).alias("m"),
-    ).first()
-    n = int(row["n"] / sample_fraction) if sample_fraction < 1.0 else row["n"]
-    return choose_fact_partition_grain(
-        n, row["m"] or 0,
-        day_flip_rows_per_month=day_flip_rows_per_month, prefix=prefix,
-    )
-
-
 def silver_to_gold_star(
     silver: ManagedTable,
     dim_specs: dict[str, tuple[ManagedTable, list[str], list[str]]],
@@ -260,9 +164,13 @@ def silver_to_gold_star(
     date_key_name: str = "date_key",
 ) -> StageResult:
     """Silver→gold: dim SCD-1 merges + fact build with broadcast date-key
-    lookup and the ``-1`` sentinel (``silver_to_gold_transactions.py:57-118``);
-    the fact carries (year, month) partition columns derived from the
-    date key (:func:`with_date_key_parts`).
+    lookup and the ``-1`` sentinel (``silver_to_gold_transactions.py:57-118``).
+
+    The fact carries silver's calendar ``year``/``month``/``day``
+    columns, which bronze ingest derived from ``fact_ts_col``
+    (:func:`sources.files.with_partition_columns`).  A row without a
+    timestamp gets null ones: ingest's ``current_date`` fallback must
+    not put a wall-clock month into the fact.
 
     ``dim_specs``: name → (table, key_cols, attr_cols); each dim is the
     distinct projection of its columns (A9) merged SCD-1 on the key.
@@ -272,11 +180,16 @@ def silver_to_gold_star(
         for _, (dim_table, keys, attrs) in dim_specs.items():
             dim_df = s.select(*keys, *attrs).distinct()
             dim_table.merge_scd1(dim_df, keys)
-        fact_df = with_date_key_parts(
-            date_key_lookup(
-                s, dim_date, fact_ts_col, out_col=date_key_name
-            ).select(*fact_cols, date_key_name),
+        has_ts = F.col(fact_ts_col).isNotNull()
+        fact_df = date_key_lookup(
+            s, dim_date, fact_ts_col, out_col=date_key_name
+        ).select(
+            *fact_cols,
             date_key_name,
+            *[
+                F.when(has_ts, F.col(c)).alias(c)
+                for c in ("year", "month", "day")
+            ],
         )
         fact.overwrite(fact_df)
         n = fact.row_count()  # footer metadata, no Spark job
@@ -371,21 +284,19 @@ def orders_dag(
         "bronze_orders": ManagedTable(spark, f"{workdir}/bronze_orders"),
         "silver_orders": ManagedTable(spark, f"{workdir}/silver_orders"),
         "dim_customer_ids": ManagedTable(spark, f"{workdir}/dim_customer_ids"),
-        # the fact is PHYSICALLY laid out by its date hierarchy — the
-        # reference's universal fact layout (``csv_to_deltalake_table.py:520``
-        # hive y/m/d; global facts by date key, ``create_global_dw.py:263,345``)
-        # at a grain DERIVED from the measured batch volume (r11 VERDICT
-        # #3: month until a month averages DAY_GRAIN_ROWS_PER_MONTH rows,
-        # then day — one column-pruned aggregate).  The measurement runs
-        # inside the gold_star TASK, not here: orders_dag returns an
-        # UN-RUN dag, and an eager count at construction would be a
-        # full-scan job before any task is scheduled (r12 review).
-        # Date-keyed reads then prune at the scan instead of reading
-        # the whole fact (r10 VERDICT missing #3); optimized_write
-        # bin-packs each commit's files per partition directory.
+        # the fact is PHYSICALLY laid out by its calendar month — the
+        # reference's fact layout (``csv_to_deltalake_table.py:520``
+        # hive y/m/d; global facts by date key, ``create_global_dw.py:263``)
+        # at month grain: the reference's day grain measured 14,428
+        # files and a 51 s fact write at sf0.1, and even gen-sf10
+        # holds ~190k orders per month, far below what one directory
+        # serves well.  Date-ranged reads prune at the scan;
+        # optimized_write bin-packs each commit's files per partition
+        # directory.
         "fact_orders": ManagedTable(
             spark,
             f"{workdir}/fact_orders",
+            partition_by=("year", "month"),
             optimized_write=True,
         ),
         "agg_daily": ManagedTable(spark, f"{workdir}/agg_daily"),
@@ -442,23 +353,6 @@ def orders_dag(
         )
 
     def gold_star() -> StageResult:
-        fact = tables["fact_orders"]
-        if not fact.partition_by:
-            # a committed fact keeps the grain it was first written at
-            # (re-measuring costs jobs on every run, and a silver grown
-            # past the flip point would make the re-grain raise); a new
-            # fact takes its grain from the measured volume of the SILVER
-            # table it is built from (one column-pruned count +
-            # distinct-months aggregate, deferred to run time)
-            grain = fact._on_disk_grain() if fact.exists() else ()
-            fact.set_partition_by(
-                grain
-                or measure_fact_partition_grain(
-                    tables["silver_orders"].read(),
-                    "o_orderdate",
-                    sample_fraction=0.01,
-                )
-            )
         return silver_to_gold_star(
             tables["silver_orders"],
             dim_specs={

@@ -2,8 +2,8 @@
 chains (VERDICT r7 "What's missing" #3).
 
 Reference behavior: ``Airflow Dags/lakehouse_pipeline_dag.py`` defines
-five linear chains of SSH tasks with ``retries=1`` + ``retry_delay``
-(line 17-18), a per-task ``cmd_timeout=1800`` (line 42), and a cron
+five linear chains of SSH tasks with ``retries=1`` (line 17), a
+per-task ``cmd_timeout=1800`` (line 42), and a cron
 ``schedule_interval`` per DAG (line 31).  Airflow itself is environment,
 not engine; what the engine owes a user is the same execution contract,
 in-process and testable:
@@ -11,8 +11,8 @@ in-process and testable:
 - **dependency order** — tasks declare upstream names; execution is a
   deterministic topological order (Kahn with a sorted ready set, so runs
   are reproducible regardless of registration order);
-- **retries with delay** — a failing task re-runs up to ``retries``
-  times before being marked ``failed``;
+- **retries** — a failing task re-runs up to ``retries`` times before
+  being marked ``failed``;
 - **per-task timeout** — each attempt runs under a Spark job group and a
   watchdog; on timeout the job group is cancelled (the cluster stops
   doing the work — a Python thread cannot be killed, but the Spark jobs
@@ -47,7 +47,6 @@ class Task:
     deps: tuple[str, ...] = ()
     # the reference DAG's default_args: retries=1, cmd_timeout=1800
     retries: int = 1
-    retry_delay: float = 0.0
     timeout: float | None = 1800
 
 
@@ -83,14 +82,11 @@ class Dag:
         fn: Callable[[], object],
         deps: tuple[str, ...] | list[str] = (),
         retries: int = 1,
-        retry_delay: float = 0.0,
         timeout: float | None = 1800,
     ) -> "Dag":
         if name in self.tasks:
             raise ValueError(f"duplicate task {name!r}")
-        self.tasks[name] = Task(
-            name, fn, tuple(deps), retries, retry_delay, timeout
-        )
+        self.tasks[name] = Task(name, fn, tuple(deps), retries, timeout)
         return self
 
     def topo_order(self) -> list[str]:
@@ -173,8 +169,6 @@ class Dag:
         attempts = 0
         for attempt in range(1, t.retries + 2):
             attempts = attempt
-            if attempt > 1 and t.retry_delay > 0:
-                time.sleep(t.retry_delay)
             # fresh single-worker executor PER ATTEMPT (r8 ADVICE): a
             # timed-out attempt whose thread never unwinds (pure-Python
             # task, or a hung action the job-group cancel can't stop)

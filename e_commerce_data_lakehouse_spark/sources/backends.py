@@ -33,21 +33,6 @@ class BackendUnavailable(RuntimeError):
     """The backend's runtime dependency is absent in this environment."""
 
 
-def contains_map_type(dtype) -> bool:
-    """True when a MapType is embedded at ANY depth (map, array<map>,
-    struct-of-map, …) — those columns can't feed ``xxhash64`` (maps have
-    no canonical element order, so Spark rejects hashing them)."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    if isinstance(dtype, MapType):
-        return True
-    if isinstance(dtype, ArrayType):
-        return contains_map_type(dtype.elementType)
-    if isinstance(dtype, StructType):
-        return any(contains_map_type(f.dataType) for f in dtype.fields)
-    return False
-
-
 class ParquetSnapshotBackend:
     """Snapshot-versioned parquet directories: ``<path>/v=N`` per commit.
 
@@ -153,55 +138,22 @@ class ParquetSnapshotBackend:
             total += pq.ParquetFile(f).metadata.num_rows
         return total
 
-    # file-split fan-out for the AQE-off salted fallback: a HEAVY
-    # partition key (one month holding most of the data) writes through
-    # up to this many tasks/files instead of serializing through one.
-    OPTIMIZED_WRITE_MAX_FILES = 4
-
     # -- writes ---------------------------------------------------------------
     def _writer(self, df: DataFrame, mode: str):
         if self.optimized_write and self.partition_by:
             # cluster rows by partition key before the partitioned write
-            # (Delta's autoOptimize.optimizeWrite).  Primary strategy:
-            # the REBALANCE hint — AQE's size-based bin packing, which is
-            # the real implementation of what optimizeWrite does: small
-            # partitions coalesce (a small frame writes ~one file per
-            # key instead of paying a fixed salt fan-out — r11 weak #1:
-            # the fixed 4-way salt cost the sf0.1 catalog build ~30% in
-            # tiny-file overhead alone), and a HEAVY key splits into
-            # advisory-sized chunks (optimizeSkewsInRebalancePartitions,
-            # on by default), so file count scales with VOLUME rather
-            # than being a constant the developer guessed.  Fallback
-            # when AQE is off: deterministic xxhash64 row-salt capped at
-            # OPTIMIZED_WRITE_MAX_FILES files per key (stable under task
-            # retries, unlike rand()).
+            # (Delta's autoOptimize.optimizeWrite) with the REBALANCE
+            # hint — AQE's size-based bin packing, the real
+            # implementation of what optimizeWrite does: small partitions
+            # coalesce (a small frame writes ~one file per key), and a
+            # HEAVY key splits into advisory-sized chunks
+            # (optimizeSkewsInRebalancePartitions, on by default), so
+            # file count scales with VOLUME rather than being a constant
+            # the developer guessed.  With AQE off the hint is a plain
+            # hash repartition on the keys: one file per key.
             from pyspark.sql import functions as F
 
-            aqe = (
-                self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-                .lower() == "true"
-            )
-            if aqe:
-                df = df.hint(
-                    "rebalance", *[F.col(c) for c in self.partition_by]
-                )
-            else:
-                hashable = [
-                    f.name
-                    for f in df.schema.fields
-                    if f.name not in self.partition_by
-                    and not contains_map_type(f.dataType)  # xxhash64 can't
-                    # hash maps at ANY nesting depth (array<map>,
-                    # struct-of-map included — r11 ADVICE: a top-level
-                    # test let nested maps fail every commit at analysis)
-                ] or list(self.partition_by)
-                salt = F.pmod(
-                    F.xxhash64(*[df[c] for c in hashable]),
-                    F.lit(self.OPTIMIZED_WRITE_MAX_FILES),
-                )
-                df = df.repartition(
-                    *[df[c] for c in self.partition_by], salt
-                )
+            df = df.hint("rebalance", *[F.col(c) for c in self.partition_by])
         w = df.write.mode(mode)
         if self.partition_by:
             w = w.partitionBy(*self.partition_by)

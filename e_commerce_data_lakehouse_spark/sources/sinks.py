@@ -128,55 +128,6 @@ class ManagedTable:
             optimized_write=optimized_write,
         )
 
-    def set_partition_by(self, partition_by: tuple[str, ...]) -> None:
-        """Set the physical partition grain before the FIRST commit.
-
-        For pipelines that DERIVE the grain from measured batch volume
-        at run time (``plans/medallion.measure_fact_partition_grain``):
-        an un-run dag must not launch a measurement job at construction,
-        so the table is built grainless and the writing task sets the
-        grain just before the first write.  Refuses to re-grain a table
-        that already has committed versions — existing snapshots were
-        laid out under the old grain and a silent flip would make reads
-        see mixed layouts (rewrite through a fresh table instead).  A
-        RECONSTRUCTED grainless handle over an existing table (each
-        ``orders_dag`` call builds fresh ``ManagedTable`` objects — the
-        idempotent re-run path) is accepted when the requested grain
-        matches the committed on-disk hive layout."""
-        new = tuple(partition_by)
-        if self._versions():
-            current = tuple(self.partition_by) or self._on_disk_grain()
-            if current != new:
-                raise ValueError(
-                    f"cannot change partition grain of committed table "
-                    f"{self.path} from {current!r} to {new!r}"
-                )
-        self.partition_by = new
-        self._backend.partition_by = new
-
-    def _on_disk_grain(self) -> tuple[str, ...]:
-        """The hive ``col=value`` directory chain of the latest committed
-        version — the layout ground truth for :meth:`set_partition_by`'s
-        mismatch check on reconstructed handles."""
-        import os
-
-        chain: list[str] = []
-        try:
-            d = self._vpath(self._versions()[-1])
-            while True:
-                subs = [
-                    e for e in os.listdir(d)
-                    if "=" in e and os.path.isdir(os.path.join(d, e))
-                ]
-                if not subs:
-                    break
-                chain.append(subs[0].split("=", 1)[0])
-                d = os.path.join(d, subs[0])
-        except OSError:
-            # non-local storage (object-store backend): trust the caller
-            return tuple(self.partition_by)
-        return tuple(chain)
-
     # -- version bookkeeping ------------------------------------------------
     def _versions(self) -> list[int]:
         return self._backend.versions()

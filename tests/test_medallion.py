@@ -168,35 +168,49 @@ def test_e2e_orders_pipeline_composition(spark, tmp_path):
     assert runs2[2].result.rows_written == 0
 
 
-def test_date_key_parts_and_predicate_sentinel_and_day_grain(spark):
-    """r11 review pins: (1) the -1 sentinel lands in its own partition
-    (Spark's div/% truncate toward zero: year=0/month=0/day=-1);
-    (2) the documented day-grain flip really works: all three hierarchy
-    columns exist and a day-partitioned write round-trips."""
-    df = spark.createDataFrame(
-        [(19980321,), (19980322,), (-1,), (None,)], "date_key int"
-    )
-    parts = m.with_date_key_parts(df, "date_key")
-    assert {"year", "month", "day"} <= set(parts.columns)
-    got = {r.date_key: (r.year, r.month, r.day) for r in parts.collect()}
-    assert got[19980321] == (1998, 3, 21)
-    assert got[-1] == (0, 0, -1)  # Spark truncating div/%
-    assert got[None] == (None, None, None)
-    # prefixed hierarchy columns (the global-DW activity fact)
-    pparts = m.with_date_key_parts(df, "date_key", prefix="activity_")
-    assert {"activity_year", "activity_month", "activity_day"} <= set(
-        pparts.columns
+def test_fact_calendar_columns_keep_sentinel_and_null_dates(
+    spark, tmp_path
+):
+    """The fact's (year, month, day) are the calendar of its timestamp,
+    carried from silver: a date outside ``dim_date`` keeps its real
+    month next to the ``-1`` date-key sentinel, and a null date gets
+    null partition values, never the wall-clock date that bronze
+    ingest's ``current_date`` fallback wrote into silver."""
+    import datetime
+
+    from e_commerce_data_lakehouse_spark.sources.files import (
+        with_partition_columns,
     )
 
-    # the one-tuple day-grain flip: a day-partitioned write round-trips
-    import tempfile
-
-    t = ManagedTable(
-        spark, tempfile.mkdtemp(prefix="daygrain_"),
-        partition_by=("year", "month", "day"), optimized_write=True,
+    rows = [
+        (1, datetime.date(1998, 3, 21)),
+        (2, datetime.date(1991, 6, 1)),  # before dim_date: date_key -1
+        (3, None),
+    ]
+    silver = ManagedTable(spark, str(tmp_path / "silver"))
+    silver.create(
+        with_partition_columns(
+            spark.createDataFrame(rows, "k long, d date"), "d"
+        )
     )
-    t.create(parts.filter(F.col("date_key").isNotNull()))
-    assert t.read().count() == 3
+    fact = ManagedTable(
+        spark, str(tmp_path / "fact"), partition_by=("year", "month"),
+        optimized_write=True,
+    )
+    r = m.silver_to_gold_star(
+        silver, {}, fact, build_dim_date(spark, "1995-01-01", "2001-12-31"),
+        fact_ts_col="d", fact_cols=["k"],
+    )
+    assert r.rows_written == 3
+    got = {
+        row.k: (row.date_key > 0, row.year, row.month, row.day)
+        for row in fact.read().collect()
+    }
+    assert got == {
+        1: (True, 1998, 3, 21),
+        2: (False, 1991, 6, 1),
+        3: (False, None, None, None),
+    }
 
 
 def test_bronze_to_silver_dedup_form_follows_payload_schema(
@@ -328,7 +342,7 @@ def test_fact_orders_partitioned_and_pruned(spark, tmp_path):
     """r10 VERDICT missing #3: fact_orders is PHYSICALLY laid out by its
     date hierarchy (the reference's universal fact layout,
     ``csv_to_deltalake_table.py:520``, ``create_global_dw.py:263,345``)
-    at the volume-aware month grain, a date-keyed read prunes at the
+    at month grain, a date-keyed read prunes at the
     scan (PartitionFilters), and the optimized write clusters each
     month into ONE file per commit."""
     import collections
@@ -344,19 +358,12 @@ def test_fact_orders_partitioned_and_pruned(spark, tmp_path):
     assert part_files, "fact files not under year=/month= directories"
     # optimized write: at THIS volume the AQE rebalance must coalesce
     # each month's write to a handful of files (the r11 fixed 4-way salt
-    # paid that fan-out on every tiny commit).  The cap constant is the
-    # AQE-off salt bound, reused here as the small-frame expectation —
-    # at heavy-key volume the rebalance deliberately splits by advisory
-    # SIZE instead (file count scales with volume, not a constant), so
-    # this assertion is a small-frame coalescing pin, not a universal
-    # cap.
-    from e_commerce_data_lakehouse_spark.sources.backends import (
-        ParquetSnapshotBackend,
-    )
-
-    cap = ParquetSnapshotBackend.OPTIMIZED_WRITE_MAX_FILES
+    # paid that fan-out on every tiny commit).  At heavy-key volume the
+    # rebalance deliberately splits by advisory SIZE instead (file count
+    # scales with volume, not a constant), so this assertion is a
+    # small-frame coalescing pin, not a universal cap.
     per_dir = collections.Counter(f.rsplit("/", 1)[0] for f in part_files)
-    assert max(per_dir.values()) <= cap, per_dir.most_common(3)
+    assert max(per_dir.values()) <= 4, per_dir.most_common(3)
 
     # static pruning: a date-keyed read that also names the key's
     # (year, month) reaches PartitionFilters, and the date-key filter
@@ -378,76 +385,47 @@ def test_fact_orders_partitioned_and_pruned(spark, tmp_path):
     assert n == fact.read().filter(f"date_key = {some['date_key']}").count()
 
 
-def test_partition_grain_is_computed_from_volume(spark):
-    """r11 VERDICT #3: the fact partition grain is a computed property
-    of batch volume, not a constant — month at tested volumes, day once
-    a month averages DAY_GRAIN_ROWS_PER_MONTH rows."""
-    # pure thresholds: a 100 TB-class year (300M rows/month) flips to day
-    assert m.choose_fact_partition_grain(300_000_000 * 12, 12) == (
-        "year", "month", "day",
+def test_fact_orders_partitions_are_order_months(spark, tmp_path):
+    """At sf0.01 every fact_orders row sits in the calendar (year, month)
+    of its order date, the fact has one month directory per distinct
+    silver month, and a ``year = y`` read returns exactly that year's
+    orders."""
+    import glob
+    import re
+
+    sf = "/root/testdata/sf0.01"
+    _runs, tables = m.e2e_orders_pipeline(spark, sf, str(tmp_path))
+    fact_t = tables["fact_orders"]
+    fact = fact_t.read()
+    dated = spark.read.parquet(f"{sf}/orders.parquet").select(
+        "o_orderkey",
+        F.year("o_orderdate").alias("oy"),
+        F.month("o_orderdate").alias("om"),
     )
-    assert m.choose_fact_partition_grain(
-        3_600_000_000, 12, prefix="activity_"
-    ) == ("activity_year", "activity_month", "activity_day")
-    # the tested sf volumes stay month grain
-    assert m.choose_fact_partition_grain(150_000, 28) == ("year", "month")
-    # boundary: exactly AT the threshold stays month; one row past flips
-    assert m.choose_fact_partition_grain(
-        m.DAY_GRAIN_ROWS_PER_MONTH * 3, 3
-    ) == ("year", "month")
-    assert m.choose_fact_partition_grain(
-        m.DAY_GRAIN_ROWS_PER_MONTH * 3 + 3, 3
-    ) == ("year", "month", "day")
-    # empty/degenerate input: month grain, no division by zero
-    assert m.choose_fact_partition_grain(0, 0) == ("year", "month")
-
-    # the DataFrame measurement: one aggregate over the date column
-    df = spark.range(1000).selectExpr(
-        "date_add(date'2024-01-01', CAST(id % 60 AS INT)) AS d"
+    joined = fact.join(dated, "o_orderkey")
+    assert joined.count() == fact.count() > 0
+    bad = joined.filter(
+        (F.col("year") != F.col("oy")) | (F.col("month") != F.col("om"))
     )
-    # 1000 rows / 2 months = 500 rows/month: flips only under a low bar
-    assert m.measure_fact_partition_grain(df, "d") == ("year", "month")
-    assert m.measure_fact_partition_grain(
-        df, "d", day_flip_rows_per_month=400
-    ) == ("year", "month", "day")
-    # SAMPLED measurement (r12: at 100 TB even the one-column scan is a
-    # real pass): the scaled estimate must reproduce the exact decision
-    # on both sides of the bar — the threshold is far coarser than any
-    # sampling error at a meaningful volume
-    assert m.measure_fact_partition_grain(
-        df, "d", sample_fraction=0.5
-    ) == ("year", "month")
-    assert m.measure_fact_partition_grain(
-        df, "d", day_flip_rows_per_month=150, sample_fraction=0.5
-    ) == ("year", "month", "day")
+    assert bad.count() == 0
 
-    # the sf0.1 orders frame chooses month grain with the real threshold
-    orders = spark.read.parquet("/root/testdata/sf0.1/orders.parquet")
-    assert m.measure_fact_partition_grain(orders, "o_orderdate") == (
-        "year", "month",
-    )
+    vdir = fact_t._vpath(fact_t._versions()[-1])
+    on_disk = {
+        tuple(map(int, re.findall(r"year=(-?\d+)/month=(-?\d+)$", d)[0]))
+        for d in glob.glob(f"{vdir}/year=*/month=*")
+    }
+    silver_months = {
+        (r[0], r[1])
+        for r in tables["silver_orders"]
+        .read()
+        .select(F.year("o_orderdate"), F.month("o_orderdate"))
+        .distinct()
+        .collect()
+    }
+    assert on_disk == silver_months
 
-
-def test_rerun_over_committed_fact_keeps_its_grain(
-    spark, tmp_path, monkeypatch
-):
-    """Each ``orders_dag`` run builds a fresh grainless fact handle; once
-    the fact has committed versions, ``gold_star`` takes the committed
-    grain instead of measuring silver again.  A measurement that would
-    now pick day grain (silver grown past the flip point) must neither
-    run nor make the re-run fail."""
-    m.e2e_orders_pipeline(spark, SF, str(tmp_path))
-    grain = ManagedTable(spark, str(tmp_path / "fact_orders"))._on_disk_grain()
-    assert grain == ("year", "month")
-    calls = []
-
-    def measure(*args, **kwargs):
-        calls.append(args)
-        return ("year", "month", "day")
-
-    monkeypatch.setattr(m, "measure_fact_partition_grain", measure)
-    runs, tables = m.e2e_orders_pipeline(spark, SF, str(tmp_path))
-    assert calls == []
-    assert all(r.status == "success" for r in runs)
-    assert tables["fact_orders"].partition_by == grain
-    assert tables["fact_orders"]._on_disk_grain() == grain
+    y = min(yr for yr, _ in silver_months)
+    keys = fact.filter(f"year = {y}").select("o_orderkey")
+    want = dated.filter(F.col("oy") == y).select("o_orderkey")
+    assert keys.count() == want.count() > 0
+    assert keys.exceptAll(want).count() == 0

@@ -1,7 +1,7 @@
 """DAG scheduler contract (plans/scheduler.py): dependency order,
 retries, timeout-with-job-group-cancel, failure propagation, and the
 pure cron parser — the Airflow semantics of the reference's
-``lakehouse_pipeline_dag.py`` (retries=1 / retry_delay / cmd_timeout /
+``lakehouse_pipeline_dag.py`` (retries=1 / cmd_timeout /
 schedule_interval), executable in-process."""
 
 from __future__ import annotations

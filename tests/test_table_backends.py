@@ -195,39 +195,3 @@ def test_delta_backend_unavailable_reason_is_reasoned(spark, tmp_path):
         import importlib.util
 
         assert importlib.util.find_spec("delta") is not None
-
-
-def test_set_partition_by_before_first_commit(make_table, spark):
-    """r12: lazy-grain tables (orders_dag defers the volume measurement
-    to the writing task) set their grain post-construction; the write
-    must land hive-partitioned exactly as if the grain were passed to
-    the constructor."""
-    t = make_table()
-    t.set_partition_by(("k",))
-    t.overwrite(
-        spark.createDataFrame([(1, "a"), (2, "b")], "v long, k string")
-    )
-    got = {(r.v, r.k) for r in t.read().collect()}
-    assert got == {(1, "a"), (2, "b")}
-    assert tuple(t.partition_by) == ("k",)
-
-
-def test_set_partition_by_reconstructed_handle(spark, tmp_path):
-    """A FRESH grainless handle over a committed partitioned table (the
-    idempotent re-run path: each orders_dag call mints new ManagedTable
-    objects) accepts the matching grain and refuses a different one —
-    a silent re-grain would mix layouts across snapshots.  (Parquet
-    backend: the on-disk hive-chain check is its ground truth; a delta
-    deploy carries partitioning in the transaction log instead.)"""
-    t = ManagedTable(spark, str(tmp_path / "regraft"), partition_by=("k",))
-    t.overwrite(
-        spark.createDataFrame([(1, "a"), (2, "b")], "v long, k string")
-    )
-    fresh = ManagedTable(spark, t.path)
-    fresh.set_partition_by(("k",))  # matches on-disk layout: accepted
-    assert tuple(fresh.partition_by) == ("k",)
-    fresh2 = ManagedTable(spark, t.path)
-    with pytest.raises(ValueError, match="partition grain"):
-        fresh2.set_partition_by(("v",))
-    with pytest.raises(ValueError, match="partition grain"):
-        t.set_partition_by(("v", "k"))

@@ -2,7 +2,7 @@
 
 Runs the join/groupBy operator family against the deliberately skewed
 tables from ``tools/gen_skew_data.py`` (one key = 20% of all rows) and
-measures REAL per-task durations from Spark's status REST API: for every
+measures REAL per-task durations from Spark's status store: for every
 stage a swept op executes, the max/median executorRunTime ratio.  The
 pass bar is the verdict's: no task > ``--bar`` (default 8)× the median
 task time of its stage — i.e. AQE's skew split, broadcast planning, map-
@@ -12,7 +12,9 @@ anyway, labeled ``expect_skew``: the artifact shows the failure AND the
 repaired sibling side by side.
 
 Stage filter: ≥ 8 tasks and median run time ≥ 50 ms (tiny-stage jitter
-is not skew evidence).
+is not skew evidence).  An op with no stage through the filter reads
+``unmeasured`` and fails the exit code like ``skewed`` and ``unknown``
+(:func:`row_status`).
 
 Usage: python tools/sweep_skew.py [--skew-dir .scaledata/skew1]
            [--dim-dir .scaledata/sf1] [--out artifacts/sweep_skew.jsonl]
@@ -74,6 +76,33 @@ def _stage_ratios(stages: list) -> list[dict]:
             }
         )
     return out
+
+
+def row_status(
+    stages: list[dict], bar: float, expect_skew: bool
+) -> tuple[str, float | None]:
+    """An op's sweep status and its worst measured ratio, from the
+    :func:`_stage_ratios` rows of the stages it ran.
+
+    - ``skewed``: a measured stage is above ``bar`` and the op is not
+      ``expect_skew`` — even when another stage's summary is missing,
+      so a measured straggler never hides behind ``unknown``;
+    - ``unknown``: a qualifying stage has no task summary, so it was
+      not measured and must not read as in-bar by omission;
+    - ``unmeasured``: no stage passed the filter, so there is nothing
+      to judge (AQE coalesces small shuffles below 8 tasks);
+    - ``ok`` otherwise.
+
+    Every status but ``ok`` fails the sweep's exit code."""
+    measured = [s["ratio"] for s in stages if s["ratio"] is not None]
+    worst = max(measured) if measured else None
+    if worst is not None and worst > bar and not expect_skew:
+        return "skewed", worst
+    if any(s.get("summary_error") for s in stages):
+        return "unknown", worst
+    if not stages:
+        return "unmeasured", worst
+    return "ok", worst
 
 
 def _run_streaming_sessions(
@@ -304,21 +333,8 @@ def main() -> None:
         [run] = meter.runs(build)
         wall = round(run.seconds, 2)
         stages = _stage_ratios(meter.stages(run))
-        # a stage whose taskSummary never arrived (ratio=None,
-        # summary_error) is UNKNOWN, not in-bar: it must not launder a
-        # straggler into 'ok' by omission (r10 ADVICE) — report it as
-        # its own status and count it toward the exit-code gate
-        unknown = any(s.get("summary_error") for s in stages)
-        measured = [s["ratio"] for s in stages if s["ratio"] is not None]
-        worst = max(measured) if measured else None
-        # a MEASURED above-bar stage labels the row 'skewed' even when
-        # another stage's summary is missing — the measured straggler
-        # must not hide behind 'unknown' (r11 review)
-        skewed = (
-            worst is not None and worst > args.bar and not expect_skew
-        )
-        ok = not skewed and not unknown
-        if not ok:
+        status, worst = row_status(stages, args.bar, expect_skew)
+        if status != "ok":
             failed.append(name)
         row = {
             "query": name,
@@ -327,7 +343,7 @@ def main() -> None:
             "worst_task_ratio": worst,
             "bar": args.bar,
             "expect_skew": expect_skew,
-            "status": "ok" if ok else ("skewed" if skewed else "unknown"),
+            "status": status,
             "stages": stages,
         }
         rows.append(row)
@@ -339,8 +355,7 @@ def main() -> None:
     with open(args.out, "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")
-    n_skew = len(failed)
-    print(f"swept {len(rows)} ops, {n_skew} unexpected-skew: {failed}")
+    print(f"swept {len(rows)} ops, {len(failed)} not ok: {failed}")
     spark.stop()
     sys.exit(1 if failed else 0)
 

@@ -107,6 +107,18 @@ def _events_stream_schema(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a file-source stream, under ``load``'s session
+    settings (UTC + nanosAsLong)."""
+    from e_commerce_data_lakehouse_spark.streaming.pipeline import (
+        stream_events,
+    )
+
+    load(spark, sf_dir)
+    schema = _events_stream_schema(spark, sf_dir)
+    return stream_events(spark, sf_dir, schema, glob="events.parquet")
+
+
 # ---------------------------------------------------------------------------
 # Core analytics (SURVEY §2.2-2.6 over the TPC-H-ish tables)
 # ---------------------------------------------------------------------------
@@ -251,16 +263,17 @@ def top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tk.top_n(per_cust, "total_spent", 10, tiebreakers=["customer_id"])
 
 
-@register(
-    "dedup_latest_events",
-    """
+# one answer for the window and the aggregate keep-latest forms
+DEDUP_LATEST_EVENTS_ORACLE = """
 SELECT user_id, event_type, event_id, ts, value
 FROM events
 QUALIFY row_number() OVER (
     PARTITION BY user_id, event_type
     ORDER BY ts DESC, event_id DESC) = 1
-""",
-)
+"""
+
+
+@register("dedup_latest_events", DEDUP_LATEST_EVENTS_ORACLE)
 def dedup_latest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 dedup-keep-latest (``iot_bronze_to_silver.py:178-205``) with the
     deterministic tiebreaker the reference lacks (SURVEY §7.4-4)."""
@@ -270,19 +283,11 @@ def dedup_latest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("user_id", "event_type", "event_id", "ts", "value")
 
 
-@register(
-    "dedup_latest_events_agg",
-    """
-SELECT user_id, event_type, event_id, ts, value
-FROM events
-QUALIFY row_number() OVER (
-    PARTITION BY user_id, event_type
-    ORDER BY ts DESC, event_id DESC) = 1
-""",
-)
+@register("dedup_latest_events_agg", DEDUP_LATEST_EVENTS_ORACLE)
 def dedup_latest_events_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SKEW-ROBUST sibling of ``dedup_latest_events`` — same oracle
-    VERBATIM, so the hash proves ``dedup.keep_latest_agg``'s
+    """The SKEW-ROBUST sibling of ``dedup_latest_events`` — both are
+    registered with ``DEDUP_LATEST_EVENTS_ORACLE``, so the hash proves
+    ``dedup.keep_latest_agg``'s
     ``max(struct(ts, event_id, row))`` form picks the identical
     survivors.  The window form sorts every row of a key in ONE task
     (a 20%-hot key is a straggler/OOM at 100 TB — measured in
@@ -424,30 +429,11 @@ from e_commerce_data_lakehouse_spark.operators.union import (  # noqa: E402
 )
 
 
-@register(
-    "union_activity",
-    """
-WITH unioned AS (
-  SELECT o_custkey AS actor_id, o_orderkey AS activity_id,
-         'order' AS activity_type, o_orderdate AS activity_ts,
-         o_totalprice AS amount, CAST(NULL AS VARCHAR) AS props
-  FROM orders
-  UNION ALL
-  SELECT user_id, event_id, event_type, ts, value, props FROM events
-)
-SELECT actor_id, activity_id, activity_type, activity_ts, amount, props,
-       CAST(row_number() OVER (
-            PARTITION BY actor_id
-            ORDER BY activity_ts, activity_type, activity_id) AS INT)
-           AS activity_sequence
-FROM unioned
-""",
-)
-def union_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U1+W2: schema-conformed activity union (by NAME with typed null
-    padding — the reference aligns positionally, ``create_global_dw.py:
-    196-253``) plus the per-actor activity_sequence window
-    (``create_global_dw.py:256-258``)."""
+def _activity_union(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Orders and events projected to one activity schema and unioned by
+    NAME with typed null padding (U1 — the reference aligns positionally,
+    ``create_global_dw.py:196-253``): actor_id, activity_id,
+    activity_type, activity_ts, amount, props."""
     t = load(spark, sf_dir, "orders", "events")
     orders_act = t["orders"].select(
         F.col("o_custkey").alias("actor_id"),
@@ -464,20 +450,11 @@ def union_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("amount"),
         F.col("props"),
     )
-    from pyspark.sql import Window
-
-    unioned = union_conform([orders_act, events_act])
-    w = Window.partitionBy("actor_id").orderBy(
-        "activity_ts", "activity_type", "activity_id"
-    )
-    return unioned.withColumn(
-        "activity_sequence", F.row_number().over(w).cast("int")
-    )
+    return union_conform([orders_act, events_act])
 
 
-@register(
-    "union_activity_bucketed",
-    """
+# one answer for the window, bucketed and heat-routed sequence forms
+UNION_ACTIVITY_ORACLE = """
 WITH unioned AS (
   SELECT o_custkey AS actor_id, o_orderkey AS activity_id,
          'order' AS activity_type, o_orderdate AS activity_ts,
@@ -492,11 +469,29 @@ SELECT actor_id, activity_id, activity_type, activity_ts, amount, props,
             ORDER BY activity_ts, activity_type, activity_id) AS INT)
            AS activity_sequence
 FROM unioned
-""",
-)
+"""
+
+
+@register("union_activity", UNION_ACTIVITY_ORACLE)
+def union_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """U1+W2: the schema-conformed activity union (``_activity_union``)
+    plus the per-actor activity_sequence window
+    (``create_global_dw.py:256-258``)."""
+    from pyspark.sql import Window
+
+    unioned = _activity_union(spark, sf_dir)
+    w = Window.partitionBy("actor_id").orderBy(
+        "activity_ts", "activity_type", "activity_id"
+    )
+    return unioned.withColumn(
+        "activity_sequence", F.row_number().over(w).cast("int")
+    )
+
+
+@register("union_activity_bucketed", UNION_ACTIVITY_ORACLE)
 def union_activity_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SKEW-ROBUST sequence-numbering sibling (W2) —
-    ``union_activity``'s oracle VERBATIM, so the hash proves
+    """The SKEW-ROBUST sequence-numbering sibling (W2) — registered
+    with ``UNION_ACTIVITY_ORACLE``, so the hash proves
     ``aggregates.sequence_number_bucketed`` assigns the identical
     per-actor sequence.  The plain ``row_number`` window sorts every row
     of an actor in ONE task (1.24× task skew on the planted 20%-hot key
@@ -506,23 +501,7 @@ def union_activity_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(actor, bucket) prefix-sum offsets (≤1 row per actor·bucket)
     are added back — no task ever holds more than one bucket of one
     actor."""
-    t = load(spark, sf_dir, "orders", "events")
-    orders_act = t["orders"].select(
-        F.col("o_custkey").alias("actor_id"),
-        F.col("o_orderkey").alias("activity_id"),
-        F.lit("order").alias("activity_type"),
-        F.col("o_orderdate").alias("activity_ts"),
-        F.col("o_totalprice").alias("amount"),
-    )
-    events_act = t["events"].select(
-        F.col("user_id").alias("actor_id"),
-        F.col("event_id").alias("activity_id"),
-        F.col("event_type").alias("activity_type"),
-        F.col("ts").alias("activity_ts"),
-        F.col("value").alias("amount"),
-        F.col("props"),
-    )
-    unioned = union_conform([orders_act, events_act])
+    unioned = _activity_union(spark, sf_dir)
     out = agg.sequence_number_bucketed(
         unioned,
         "actor_id",
@@ -532,38 +511,15 @@ def union_activity_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket="1 day",
     )
     return out.select(
-        "actor_id",
-        "activity_id",
-        "activity_type",
-        "activity_ts",
-        "amount",
-        "props",
+        *unioned.columns,
         F.col("__seq").cast("int").alias("activity_sequence"),
     )
 
 
-@register(
-    "union_activity_hybrid",
-    """
-WITH unioned AS (
-  SELECT o_custkey AS actor_id, o_orderkey AS activity_id,
-         'order' AS activity_type, o_orderdate AS activity_ts,
-         o_totalprice AS amount, CAST(NULL AS VARCHAR) AS props
-  FROM orders
-  UNION ALL
-  SELECT user_id, event_id, event_type, ts, value, props FROM events
-)
-SELECT actor_id, activity_id, activity_type, activity_ts, amount, props,
-       CAST(row_number() OVER (
-            PARTITION BY actor_id
-            ORDER BY activity_ts, activity_type, activity_id) AS INT)
-           AS activity_sequence
-FROM unioned
-""",
-)
+@register("union_activity_hybrid", UNION_ACTIVITY_ORACLE)
 def union_activity_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The HEAT-ROUTED sequence-numbering form (W2, r11 VERDICT #1) —
-    ``union_activity``'s oracle VERBATIM, so the hash proves
+    registered with ``UNION_ACTIVITY_ORACLE``, so the hash proves
     ``aggregates.sequence_number_hybrid`` assigns the identical
     per-actor sequence with a MIXED routing: the thresholds here are
     tuned so some actors exceed them (bucketed path) and the rest take
@@ -573,23 +529,7 @@ def union_activity_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform data at 3.3× the window plan — the router pays one
     column-pruned counts pass and buckets only the keys that would
     actually straggle."""
-    t = load(spark, sf_dir, "orders", "events")
-    orders_act = t["orders"].select(
-        F.col("o_custkey").alias("actor_id"),
-        F.col("o_orderkey").alias("activity_id"),
-        F.lit("order").alias("activity_type"),
-        F.col("o_orderdate").alias("activity_ts"),
-        F.col("o_totalprice").alias("amount"),
-    )
-    events_act = t["events"].select(
-        F.col("user_id").alias("actor_id"),
-        F.col("event_id").alias("activity_id"),
-        F.col("event_type").alias("activity_type"),
-        F.col("ts").alias("activity_ts"),
-        F.col("value").alias("amount"),
-        F.col("props"),
-    )
-    unioned = union_conform([orders_act, events_act])
+    unioned = _activity_union(spark, sf_dir)
     out = agg.sequence_number_hybrid(
         unioned,
         "actor_id",
@@ -605,12 +545,7 @@ def union_activity_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_hot_keys=100_000,
     )
     return out.select(
-        "actor_id",
-        "activity_id",
-        "activity_type",
-        "activity_ts",
-        "amount",
-        "props",
+        *unioned.columns,
         F.col("__seq").cast("int").alias("activity_sequence"),
     )
 
@@ -1284,9 +1219,8 @@ def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 from e_commerce_data_lakehouse_spark.operators import similarity as sim  # noqa: E402
 
 
-@register(
-    "ann_cosine_topk",
-    """
+# exact cosine top-5: brute force and the every-cell IVF probe
+ANN_COSINE_TOPK_ORACLE = """
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
 SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
        ROUND(list_dot_product(q.v, c.v) /
@@ -1299,8 +1233,10 @@ SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                   c.vec_id ASC) AS INT) AS rank
 FROM e q JOIN e c ON q.vec_id < 20 AND c.vec_id != q.vec_id
 QUALIFY rank <= 5
-""",
-)
+"""
+
+
+@register("ann_cosine_topk", ANN_COSINE_TOPK_ORACLE)
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k (exact kNN baseline): small query set
     broadcast against the candidate table, map-side scoring, per-query top-k
@@ -1615,12 +1551,9 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
         hourly_event_counts,
         run_available_now_parquet,
-        stream_events,
     )
 
-    load(spark, sf_dir)  # session settings (UTC + nanosAsLong)
-    schema = _events_stream_schema(spark, sf_dir)
-    stream = stream_events(spark, sf_dir, schema, glob="events.parquet")
+    stream = _events_stream(spark, sf_dir)
     result = hourly_event_counts(stream, watermark="2 hours")
     out = run_available_now_parquet(
         result, scratch_dir("ckpt_"), scratch_dir("drain_"),
@@ -1799,27 +1732,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "ann_ivf_exhaustive_topk",
-    """
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       ROUND(list_dot_product(q.v, c.v) /
-             (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))),
-             6) AS cosine_sim,
-       CAST(row_number() OVER (
-            PARTITION BY q.vec_id
-            ORDER BY ROUND(list_dot_product(q.v, c.v) /
-                  (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 6) DESC,
-                  c.vec_id ASC) AS INT) AS rank
-FROM e q JOIN e c ON q.vec_id < 20 AND c.vec_id != q.vec_id
-QUALIFY rank <= 5
-""",
-)
+@register("ann_ivf_exhaustive_topk", ANN_COSINE_TOPK_ORACLE)
 def ann_ivf_exhaustive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with ``n_probe = n_centroids`` — every query probes every
-    cell, so the index answers EXACTLY brute force and can carry
-    ``ann_cosine_topk``'s oracle VERBATIM (r11 VERDICT #6): the
+    cell, so the index answers EXACTLY brute force and is registered
+    with ``ANN_COSINE_TOPK_ORACLE`` (r11 VERDICT #6): the
     hash-match proves the IVF machinery itself — sampled-k-means cell
     assignment, inverted-cell equi-join candidate generation, rerank
     scoring — loses nothing, rather than only pinning a recall bound.
@@ -2022,17 +1939,21 @@ def doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "asof_purchase_view",
-    """
-WITH v AS (
+# v: each user's views (one id per timestamp); p: the purchases
+_PURCHASE_VIEW_CTES = """WITH v AS (
     SELECT user_id, ts, MAX(event_id) AS view_event_id
     FROM events WHERE event_type = 'view'
     GROUP BY user_id, ts
 ), p AS (
     SELECT event_id AS purchase_id, user_id, ts AS purchase_ts
     FROM events WHERE event_type = 'purchase'
-)
+)"""
+
+
+@register(
+    "asof_purchase_view",
+    f"""
+{_PURCHASE_VIEW_CTES}
 SELECT p.purchase_id, p.user_id, p.purchase_ts,
        v.view_event_id, v.ts AS view_ts
 FROM p ASOF LEFT JOIN v
@@ -2044,6 +1965,15 @@ def asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's latest prior view.  Implemented as union + sort + last-ignorenulls
     window — one shuffle, O(n log n), never an inequality cross join (the
     naive range-join plan).  Oracle: DuckDB's native ASOF JOIN."""
+    return _purchase_view_asof(spark, sf_dir)
+
+
+def _purchase_view_asof(
+    spark: SparkSession, sf_dir: str, tolerance: str | None = None
+) -> DataFrame:
+    """Each purchase with the same user's latest view at or before it
+    (``jn.asof_join``; ``tolerance`` bounds how far back the view may
+    be)."""
     ev = load(spark, sf_dir, "events")["events"]
     views = (
         ev.filter(F.col("event_type") == "view")
@@ -2064,12 +1994,12 @@ def asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_ts="purchase_ts",
         right_ts="__rts",
         right_cols=["view_event_id", "view_ts"],
+        tolerance=tolerance,
     ).select("purchase_id", "user_id", "purchase_ts", "view_event_id", "view_ts")
 
 
-@register(
-    "user_sessions",
-    """
+# gaps-and-islands sessions: one answer for every batch session form
+USER_SESSIONS_ORACLE = """
 WITH marked AS (
     SELECT user_id, ts, value, event_id,
            CASE WHEN lag(ts) OVER w IS NULL
@@ -2090,8 +2020,10 @@ SELECT user_id,
        CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) AS sum_value
 FROM islands
 GROUP BY user_id, session_id
-""",
-)
+"""
+
+
+@register("user_sessions", USER_SESSIONS_ORACLE)
 def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization by 30-minute inactivity gap — the DEFAULT batch
     path, running the skew-robust bucket-and-stitch plan
@@ -2101,39 +2033,16 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch path defaults to the robust form and the native
     ``session_window`` form stays registered as ``user_sessions_window``
     (it is the streaming-parity form — the same expression runs under a
-    watermark).  All three session queries carry this gaps-and-islands
-    oracle VERBATIM, so the swap is hash-proven semantics-neutral."""
+    watermark).  All three session queries are registered with
+    ``USER_SESSIONS_ORACLE``, so the swap is hash-proven
+    semantics-neutral."""
     return _sessions_bucketed_impl(spark, sf_dir)
 
 
-@register(
-    "user_sessions_bucketed",
-    """
-WITH marked AS (
-    SELECT user_id, ts, value, event_id,
-           CASE WHEN lag(ts) OVER w IS NULL
-                     OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                THEN 1 ELSE 0 END AS new_session
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), islands AS (
-    SELECT user_id, ts, value, event_id,
-           SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS session_id
-    FROM marked
-)
-SELECT user_id,
-       MIN(ts) AS session_start,
-       MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) AS sum_value
-FROM islands
-GROUP BY user_id, session_id
-""",
-)
+@register("user_sessions_bucketed", USER_SESSIONS_ORACLE)
 def user_sessions_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The skew-robust sessionization form under its explicit name —
-    the same gaps-and-islands oracle VERBATIM, so the hash proves the
+    the same ``USER_SESSIONS_ORACLE``, so the hash proves the
     bucket-and-stitch plan (``aggregates.sessionize_bucketed``) assigns
     identical sessions.  Since r11 this is also what ``user_sessions``
     (the default consumed batch path) runs — both names share
@@ -2172,31 +2081,7 @@ def _sessions_bucketed_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "user_sessions_window",
-    """
-WITH marked AS (
-    SELECT user_id, ts, value, event_id,
-           CASE WHEN lag(ts) OVER w IS NULL
-                     OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                THEN 1 ELSE 0 END AS new_session
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), islands AS (
-    SELECT user_id, ts, value, event_id,
-           SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS session_id
-    FROM marked
-)
-SELECT user_id,
-       MIN(ts) AS session_start,
-       MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) AS sum_value
-FROM islands
-GROUP BY user_id, session_id
-""",
-)
+@register("user_sessions_window", USER_SESSIONS_ORACLE)
 def user_sessions_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The native ``F.session_window`` sessionization form, kept
     registered under its own name after ``user_sessions`` switched to
@@ -2205,7 +2090,7 @@ def user_sessions_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``readStream`` + watermark (``streaming/pipeline.py``) — so the
     streaming-parity semantics (incl. the INCLUSIVE merge at an
     exactly-``gap`` tie, defect class #9) stay hash-pinned against the
-    same verbatim gaps-and-islands oracle as the robust forms."""
+    robust forms' ``USER_SESSIONS_ORACLE``."""
     from e_commerce_data_lakehouse_spark.functions.exact import dsum
 
     ev = load(spark, sf_dir, "events")["events"]
@@ -3145,10 +3030,11 @@ def dag_corpus_pipeline_incremental(
     two delta-bounded decontamination gram joins (new docs × all
     benchmark grams, old docs × new benchmark grams — a late-arriving
     benchmark retroactively evicts stored docs).  The oracle is the
-    FULL-REBUILD catalog SQL verbatim (`dag_corpus_pipeline`), so the
-    hash-match proves the incremental maintenance converges to the
-    batch answer — the `incremental_dup_clusters` fixpoint pattern
-    applied to the whole pipeline."""
+    FULL-REBUILD catalog SQL (``_CORPUS_CATALOG_SQL``, as
+    `dag_corpus_pipeline`), so the hash-match proves the incremental
+    maintenance converges to the batch answer — the
+    `incremental_dup_clusters` fixpoint pattern applied to the whole
+    pipeline."""
 
     from e_commerce_data_lakehouse_spark.plans.corpus_medallion import (
         run_incremental,
@@ -3186,8 +3072,8 @@ def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch exactly-once via engine checkpoint + ``append_once``
     txn markers — the same two-layer story the orders side proves with
     ``streaming_merge_upsert``.  The oracle is the FULL-REBUILD catalog
-    SQL verbatim, so the hash proves the streamed curation converges to
-    the batch answer; the crash-replay pytest
+    SQL (``_CORPUS_CATALOG_SQL``), so the hash proves the streamed
+    curation converges to the batch answer; the crash-replay pytest
     (tests/test_streaming_corpus.py) proves a re-delivered micro-batch
     is a recorded no-op."""
 
@@ -3496,10 +3382,9 @@ def uniform_lang_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "bloom_contamination",
-    """
-WITH w AS (
+# bench: the 4-grams of the held-out docs (doc_id % 97 = 0); corpus: each
+# other doc's distinct 4-grams
+_BENCH_GRAM_CTES = """WITH w AS (
   SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws FROM documents
 ), g AS (
   SELECT doc_id, array_to_string(ws[i:i+3], ' ') AS gram
@@ -3509,7 +3394,13 @@ WITH w AS (
   SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0
 ), corpus AS (
   SELECT DISTINCT doc_id, gram FROM g WHERE doc_id % 97 <> 0
-)
+)"""
+
+
+@register(
+    "bloom_contamination",
+    f"""
+{_BENCH_GRAM_CTES}
 SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_confirmed_grams
 FROM corpus WHERE gram IN (SELECT gram FROM bench)
 GROUP BY doc_id
@@ -3533,18 +3424,8 @@ def bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "benchmark_contamination",
-    """
-WITH w AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws FROM documents
-), g AS (
-  SELECT doc_id, array_to_string(ws[i:i+3], ' ') AS gram
-  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 3)) AS i
-        FROM w WHERE len(ws) >= 4)
-), bench AS (
-  SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0
-), corpus AS (
-  SELECT DISTINCT doc_id, gram FROM g WHERE doc_id % 97 <> 0
-)
+    f"""
+{_BENCH_GRAM_CTES}
 SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shared_grams
 FROM corpus JOIN bench USING (gram)
 GROUP BY doc_id
@@ -4100,20 +3981,6 @@ comp AS (SELECT id, MIN(r) AS comp FROM walk GROUP BY id)
 """
 
 
-def _jaccard_pair_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The oracle-checkable near-dup pair source (same construction as
-    ``near_dup_token_jaccard``: blocking on (lang, first token), token-set
-    Jaccard >= 0.9)."""
-    docs = load(spark, sf_dir, "documents")["documents"]
-    toks = F.split(dd.normalize_text(F.col("text")), " ")
-    base = docs.select(
-        "doc_id", "lang", toks.getItem(0).alias("tok1"), F.col("text")
-    )
-    return dd.token_jaccard_pairs(
-        base, "doc_id", "text", ["lang", "tok1"], threshold=0.9
-    )
-
-
 @register(
     "dup_clusters_cc",
     f"""
@@ -4129,7 +3996,7 @@ def dup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubling, O(log n) rounds of pure shuffle ops).  cluster_id is the
     cluster's min doc_id — a deterministic representative.  The oracle
     replays the same fixpoint as a DuckDB recursive CTE."""
-    pairs = _jaccard_pair_edges(spark, sf_dir)
+    pairs = near_dup_token_jaccard(spark, sf_dir)
     return gr.cluster_members(pairs, "id_a", "id_b").select(
         F.col("id").alias("doc_id"),
         F.col("comp").alias("cluster_id"),
@@ -4154,7 +4021,7 @@ def corpus_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")["documents"].select(
         "doc_id", "lang", "n_chars"
     )
-    pairs = _jaccard_pair_edges(spark, sf_dir)
+    pairs = near_dup_token_jaccard(spark, sf_dir)
     return gr.dedup_by_components(docs, "doc_id", pairs, "id_a", "id_b")
 
 
@@ -4183,7 +4050,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")["documents"].select(
         "doc_id", "lang", "n_chars"
     )
-    pairs = _jaccard_pair_edges(spark, sf_dir)
+    pairs = near_dup_token_jaccard(spark, sf_dir)
     return gr.dedup_by_components_policy(
         docs,
         "doc_id",
@@ -5195,16 +5062,17 @@ def orders_at_dim_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "fuzzy_name_matches",
-    """
+# the all-pairs in-nation edit-distance answer, exact and blocked
+FUZZY_NAME_MATCHES_ORACLE = """
 SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
        CAST(levenshtein(a.c_name, b.c_name) AS INT) AS edit_distance
 FROM customer a JOIN customer b
   ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
 WHERE levenshtein(a.c_name, b.c_name) <= 2
-""",
-)
+"""
+
+
+@register("fuzzy_name_matches", FUZZY_NAME_MATCHES_ORACLE)
 def fuzzy_name_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity-resolution candidate pairs: customers in the same nation
     whose names are within edit distance 2 — the record-linkage primitive.
@@ -5213,7 +5081,8 @@ def fuzzy_name_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's agree exactly, so the pairs are value-checked.  This exact
     form is quadratic BY CONTRACT (~4.5e10 in-block pairs at gen-sf10);
     the implemented 100 TB sibling is ``fuzzy_name_matches_blocked``
-    (deletion-neighborhood candidate key, LOSSLESS — same oracle, linear
+    (deletion-neighborhood candidate key, LOSSLESS — the same
+    ``FUZZY_NAME_MATCHES_ORACLE``, linear
     row expansion; see ``operators/entity.py``).
 
     Two r8 sweep fixes, both result-identical: the nation key has ~25
@@ -5252,20 +5121,12 @@ def fuzzy_name_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "fuzzy_name_matches_blocked",
-    """
-SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-       CAST(levenshtein(a.c_name, b.c_name) AS INT) AS edit_distance
-FROM customer a JOIN customer b
-  ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-WHERE levenshtein(a.c_name, b.c_name) <= 2
-""",
-)
+@register("fuzzy_name_matches_blocked", FUZZY_NAME_MATCHES_ORACLE)
 def fuzzy_name_matches_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB sibling of ``fuzzy_name_matches`` (r8's one remaining
-    quadratic-by-contract sweep skip): SAME answer — the oracle SQL is
-    the exact all-pairs query verbatim, so the hash gate proves the
+    quadratic-by-contract sweep skip): SAME answer — both are
+    registered with ``FUZZY_NAME_MATCHES_ORACLE``, the exact all-pairs
+    query, so the hash gate proves the
     blocking lossless — but candidates come from the symmetric-delete
     neighborhood equi-join of ``operators/entity.py`` instead of the
     nation-block self-join.  Two names within edit distance 2 always
@@ -5361,12 +5222,9 @@ def segment_spend_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BM25_TERMS = ["spark", "join", "window"]
-
-
-@register(
-    "bm25_search_topk",
-    f"""
-WITH base AS (
+# base / stats / scored: per-doc BM25 over the query terms
+_BM25_CTES = f"""
+base AS (
   SELECT doc_id,
          string_split({NORM_SQL.format(c='text')}, ' ') AS toks,
          CAST(len(string_split({NORM_SQL.format(c='text')}, ' ')) AS DOUBLE)
@@ -5392,7 +5250,13 @@ scored AS (
              for i, t in enumerate(_BM25_TERMS)
          )}, 6) AS bm25_score
   FROM base b, stats s
-)
+)"""
+
+
+@register(
+    "bm25_search_topk",
+    f"""
+WITH {_BM25_CTES.lstrip()}
 SELECT doc_id, bm25_score FROM scored
 ORDER BY bm25_score DESC, doc_id ASC LIMIT 20
 """,
@@ -6812,10 +6676,9 @@ def event_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "quality_classifier_scores",
-    f"""
-WITH d AS (
+# d / chart / toks / stats / tot / votes: the weakly supervised
+# bag-of-words classifier's training and per-token votes
+_QUALITY_VOTES_CTES = f"""d AS (
   SELECT doc_id, n_chars,
          string_split({NORM_SQL.format(c='text')}, ' ') AS w
   FROM documents
@@ -6843,7 +6706,26 @@ votes AS (
                    < s.neg_cnt * (SELECT pt FROM tot) THEN -1
               ELSE 0 END AS v
   FROM toks t JOIN stats s USING (tok)
-)
+)"""
+
+
+def _weakly_labeled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Documents with the weak quality label ``__pos``: longer than the
+    corpus mean (``n_chars * n_docs > sum_chars``, exact integers)."""
+    docs = load(spark, sf_dir, "documents")["documents"]
+    totals = docs.agg(F.count("*"), F.sum("n_chars")).first()
+    n_docs, sum_chars = int(totals[0]), int(totals[1])  # bounded scalars
+    return docs.select(
+        "doc_id",
+        "text",
+        (F.col("n_chars") * F.lit(n_docs) > F.lit(sum_chars)).alias("__pos"),
+    )
+
+
+@register(
+    "quality_classifier_scores",
+    f"""
+WITH {_QUALITY_VOTES_CTES}
 SELECT doc_id,
        COUNT(*)::BIGINT AS n_tokens,
        SUM(CASE WHEN v = 1 THEN 1 ELSE 0 END)::BIGINT AS pos_votes,
@@ -6865,14 +6747,7 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate and a score-back join — see
     ``operators/corpus.py:quality_classifier_votes`` for the 100 TB plan
     notes."""
-    docs = load(spark, sf_dir, "documents")["documents"]
-    totals = docs.agg(F.count("*"), F.sum("n_chars")).first()
-    n_docs, sum_chars = int(totals[0]), int(totals[1])  # bounded scalars
-    labeled = docs.select(
-        "doc_id",
-        "text",
-        (F.col("n_chars") * F.lit(n_docs) > F.lit(sum_chars)).alias("__pos"),
-    )
+    labeled = _weakly_labeled_docs(spark, sf_dir)
     return cp.quality_classifier_votes(labeled, "doc_id", "text", "__pos")
 
 
@@ -7059,35 +6934,7 @@ def corpus_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "classifier_auc",
     f"""
-WITH d AS (
-  SELECT doc_id, n_chars,
-         string_split({NORM_SQL.format(c='text')}, ' ') AS w
-  FROM documents
-),
-chart AS (SELECT COUNT(*)::BIGINT AS nd, SUM(n_chars)::BIGINT AS sc FROM d),
-toks AS (
-  SELECT doc_id,
-         n_chars * (SELECT nd FROM chart) > (SELECT sc FROM chart) AS pos,
-         unnest(w) AS tok
-  FROM d
-),
-stats AS (
-  SELECT tok,
-         SUM(CASE WHEN pos THEN 1 ELSE 0 END)::BIGINT AS pos_cnt,
-         SUM(CASE WHEN pos THEN 0 ELSE 1 END)::BIGINT AS neg_cnt
-  FROM toks GROUP BY tok
-),
-tot AS (SELECT SUM(pos_cnt)::BIGINT AS pt, SUM(neg_cnt)::BIGINT AS nt
-        FROM stats),
-votes AS (
-  SELECT t.doc_id,
-         CASE WHEN s.pos_cnt * (SELECT nt FROM tot)
-                   > s.neg_cnt * (SELECT pt FROM tot) THEN 1
-              WHEN s.pos_cnt * (SELECT nt FROM tot)
-                   < s.neg_cnt * (SELECT pt FROM tot) THEN -1
-              ELSE 0 END AS v
-  FROM toks t JOIN stats s USING (tok)
-),
+WITH {_QUALITY_VOTES_CTES},
 cls AS (
   SELECT doc_id,
          SUM(CASE WHEN v = 1 THEN 1 ELSE 0 END)::BIGINT
@@ -7130,14 +6977,7 @@ def classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct score values, never prediction rows; exact integer rational
     output so engines agree bit-exactly).  Train + score + eval round
     trip, all oracle-checked.  See ``operators/corpus.py:binary_auc``."""
-    docs = load(spark, sf_dir, "documents")["documents"]
-    totals = docs.agg(F.count("*"), F.sum("n_chars")).first()
-    n_docs, sum_chars = int(totals[0]), int(totals[1])  # bounded scalars
-    labeled = docs.select(
-        "doc_id",
-        "text",
-        (F.col("n_chars") * F.lit(n_docs) > F.lit(sum_chars)).alias("__pos"),
-    )
+    labeled = _weakly_labeled_docs(spark, sf_dir)
     votes = cp.quality_classifier_votes(labeled, "doc_id", "text", "__pos")
     scored = votes.join(labeled.select("doc_id", "__pos"), "doc_id").select(
         (F.col("pos_votes") - F.col("neg_votes")).alias("score"), "__pos"
@@ -7721,12 +7561,9 @@ def streaming_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
         run_available_now_parquet,
-        stream_events,
     )
 
-    load(spark, sf_dir)  # session settings (UTC + nanosAsLong)
-    schema = _events_stream_schema(spark, sf_dir)
-    stream = stream_events(spark, sf_dir, schema, glob="events.parquet")
+    stream = _events_stream(spark, sf_dir)
     est = (
         stream.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -8169,40 +8006,12 @@ def robust_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _RRF_K = 60
-_RRF_BM25_CTES = f"""
-base AS (
-  SELECT doc_id,
-         string_split({NORM_SQL.format(c='text')}, ' ') AS toks,
-         CAST(len(string_split({NORM_SQL.format(c='text')}, ' ')) AS DOUBLE)
-             AS dl
-  FROM documents
-),
-stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(len(toks)) AS DOUBLE) / COUNT(*) AS avgdl,
-         {', '.join(
-             f"CAST(SUM(CASE WHEN list_contains(toks, '{t}') THEN 1 ELSE 0 END) AS BIGINT) AS df_{i}"
-             for i, t in enumerate(_BM25_TERMS)
-         )}
-  FROM base
-),
-scored AS (
-  SELECT b.doc_id,
-         ROUND(0.0 + {' + '.join(
-             f"((s.n_docs - s.df_{i} + 0.5) / (s.df_{i} + 0.5)) * "
-             f"(CAST(len(list_filter(b.toks, t -> t = '{t}')) AS DOUBLE) * 2.2) / "
-             f"(CAST(len(list_filter(b.toks, t -> t = '{t}')) AS DOUBLE)"
-             f" + 1.2 * (0.25 + (0.75 * b.dl) / s.avgdl))"
-             for i, t in enumerate(_BM25_TERMS)
-         )}, 6) AS bm25_score
-  FROM base b, stats s
-)"""
 
 
 @register(
     "hybrid_search_rrf",
     f"""
-WITH {_RRF_BM25_CTES},
+WITH {_BM25_CTES},
 lex AS (
   SELECT doc_id,
          CAST(row_number() OVER (ORDER BY bm25_score DESC, doc_id ASC)
@@ -8540,15 +8349,12 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
         run_available_now_parquet,
-        stream_events,
     )
     from e_commerce_data_lakehouse_spark.streaming.stateful import (
         streaming_dedup,
     )
 
-    load(spark, sf_dir)  # session settings (UTC + nanosAsLong)
-    schema = _events_stream_schema(spark, sf_dir)
-    stream = stream_events(spark, sf_dir, schema, glob="events.parquet")
+    stream = _events_stream(spark, sf_dir)
     keyed = stream.withColumn("day", F.to_date("ts"))
     deduped = streaming_dedup(
         keyed, ["user_id", "event_type", "day"], "ts", watermark="24 hours"
@@ -8677,7 +8483,7 @@ def leakage_safe_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``minhash_lsh_pairs`` (linear candidates; see ``cc_over_lsh_pairs``
     at 4.1×/100× in SCALE_BENCH), with only the pair stage swapped."""
     docs = load(spark, sf_dir, "documents")["documents"]
-    pairs = _jaccard_pair_edges(spark, sf_dir)
+    pairs = near_dup_token_jaccard(spark, sf_dir)
     comp = gr.connected_components(pairs, "id_a", "id_b")
     m = docs.join(comp, docs["doc_id"] == comp["id"], "left").select(
         "doc_id", F.coalesce("comp", "doc_id").alias("ck")
@@ -8797,35 +8603,7 @@ def winsorized_priority_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "classifier_decile_lift",
     f"""
-WITH d AS (
-  SELECT doc_id, n_chars,
-         string_split({NORM_SQL.format(c='text')}, ' ') AS w
-  FROM documents
-),
-chart AS (SELECT COUNT(*)::BIGINT AS nd, SUM(n_chars)::BIGINT AS sc FROM d),
-toks AS (
-  SELECT doc_id,
-         n_chars * (SELECT nd FROM chart) > (SELECT sc FROM chart) AS pos,
-         unnest(w) AS tok
-  FROM d
-),
-stats AS (
-  SELECT tok,
-         SUM(CASE WHEN pos THEN 1 ELSE 0 END)::BIGINT AS pos_cnt,
-         SUM(CASE WHEN pos THEN 0 ELSE 1 END)::BIGINT AS neg_cnt
-  FROM toks GROUP BY tok
-),
-tot AS (SELECT SUM(pos_cnt)::BIGINT AS pt, SUM(neg_cnt)::BIGINT AS nt
-        FROM stats),
-votes AS (
-  SELECT t.doc_id,
-         CASE WHEN s.pos_cnt * (SELECT nt FROM tot)
-                   > s.neg_cnt * (SELECT pt FROM tot) THEN 1
-              WHEN s.pos_cnt * (SELECT nt FROM tot)
-                   < s.neg_cnt * (SELECT pt FROM tot) THEN -1
-              ELSE 0 END AS v
-  FROM toks t JOIN stats s USING (tok)
-),
+WITH {_QUALITY_VOTES_CTES},
 scored AS (
   SELECT doc_id,
          SUM(CASE WHEN v = 1 THEN 1 ELSE 0 END)::BIGINT
@@ -8935,12 +8713,9 @@ def streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from e_commerce_data_lakehouse_spark.streaming import stateful as st
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
         run_available_now_parquet,
-        stream_events,
     )
 
-    load(spark, sf_dir)  # session settings (UTC + nanosAsLong)
-    schema = _events_stream_schema(spark, sf_dir)
-    stream = stream_events(spark, sf_dir, schema, glob="events.parquet")
+    stream = _events_stream(spark, sf_dir)
     totals = st.running_totals_per_key(stream, "user_id", "ts")
     return run_available_now_parquet(
         totals, scratch_dir("ckpt_"),
@@ -9407,6 +9182,16 @@ def repurchase_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _customer_spend_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """o_custkey, spend_cents: each customer's exact spend in cents."""
+    o = load(spark, sf_dir, "orders")["orders"]
+    return o.groupBy("o_custkey").agg(
+        F.sum(F.expr("CAST(o_totalprice * 100 AS DECIMAL(30,0))"))
+        .cast("long")
+        .alias("spend_cents")
+    )
+
+
 @register(
     "order_value_gini",
     """
@@ -9446,12 +9231,7 @@ def order_value_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     there are >10 customers)."""
     from e_commerce_data_lakehouse_spark.operators import ranking as rk
 
-    o = load(spark, sf_dir, "orders")["orders"]
-    per_cust = o.groupBy("o_custkey").agg(
-        F.sum(F.expr("CAST(o_totalprice * 100 AS DECIMAL(30,0))"))
-        .cast("long")
-        .alias("spend_cents")
-    )
+    per_cust = _customer_spend_cents(spark, sf_dir)
     ranked = rk.global_row_number(
         per_cust, [F.col("spend_cents"), F.col("o_custkey")], "rn"
     )
@@ -9815,9 +9595,46 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ft.covariance_fixed(emb, "embedding", dim=64, scale=10**6)
 
 
-@register(
-    "streaming_user_sessions",
-    """
+def _session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events stream sessionized by a 30-minute-gap
+    ``session_window`` under a 2-hour watermark: user_id, session_start,
+    session_end, n_events, sum_value (exact decimal sum as double)."""
+    return (
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "2 hours")
+        .groupBy(
+            "user_id", F.session_window("ts", "30 minutes").alias("__sw")
+        )
+        .agg(
+            F.count("*").cast("long").alias("n_events"),
+            F.sum(F.col("value").cast("decimal(30,6)"))
+            .cast("double")
+            .alias("sum_value"),
+        )
+        .select(
+            "user_id",
+            F.col("__sw.start").alias("session_start"),
+            F.col("__sw.end").alias("session_end"),
+            "n_events",
+            "sum_value",
+        )
+    )
+
+
+def _ntz_session_bounds(sessions: DataFrame) -> DataFrame:
+    """Drained sessions with their bounds as ``timestamp_ntz``, the type
+    the batch session queries return."""
+    return sessions.select(
+        "user_id",
+        F.col("session_start").cast("timestamp_ntz").alias("session_start"),
+        F.col("session_end").cast("timestamp_ntz").alias("session_end"),
+        "n_events",
+        "sum_value",
+    )
+
+
+# the batch gaps-and-islands fixpoint of both streaming session forms
+STREAMING_USER_SESSIONS_ORACLE = """
 WITH marked AS (
     SELECT user_id, ts, value, event_id,
            CASE WHEN lag(ts) OVER w IS NULL
@@ -9838,8 +9655,10 @@ SELECT user_id,
        CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) AS sum_value
 FROM islands
 GROUP BY user_id, session_id
-""",
-)
+"""
+
+
+@register("streaming_user_sessions", STREAMING_USER_SESSIONS_ORACLE)
 def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization as a GENUINE Structured Streaming query: the same
     30-minute-gap ``session_window`` expression as the batch
@@ -9854,41 +9673,13 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
         run_available_now_parquet,
-        stream_events,
     )
 
-    load(spark, sf_dir)  # session settings (UTC + nanosAsLong)
-    schema = _events_stream_schema(spark, sf_dir)
-    stream = stream_events(spark, sf_dir, schema, glob="events.parquet")
-    sessions = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(
-            "user_id", F.session_window("ts", "30 minutes").alias("__sw")
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("__sw.start").alias("session_start"),
-            F.col("__sw.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    sessions = _session_window_stream(spark, sf_dir)
     out = run_available_now_parquet(
         sessions, scratch_dir("ckpt_"), scratch_dir("drain_"),
     )
-    return out.select(
-        "user_id",
-        F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-        F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-        "n_events",
-        "sum_value",
-    )
+    return _ntz_session_bounds(out)
 
 
 @register(
@@ -9939,69 +9730,17 @@ def streaming_sessions_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     from e_commerce_data_lakehouse_spark.sources.sinks import ManagedTable
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
         run_available_now_append,
-        stream_events,
     )
 
-    load(spark, sf_dir)  # session settings (UTC + nanosAsLong)
-    schema = _events_stream_schema(spark, sf_dir)
-    stream = stream_events(spark, sf_dir, schema, glob="events.parquet")
-    sessions = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(
-            "user_id", F.session_window("ts", "30 minutes").alias("__sw")
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("__sw.start").alias("session_start"),
-            F.col("__sw.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    sessions = _session_window_stream(spark, sf_dir)
     target = ManagedTable(spark, scratch_dir("sess_append_"))
     run_available_now_append(
         sessions, scratch_dir("ckpt_"), target
     )
-    return target.read().select(
-        "user_id",
-        F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-        F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-        "n_events",
-        "sum_value",
-    )
+    return _ntz_session_bounds(target.read())
 
 
-@register(
-    "streaming_user_sessions_bucketed",
-    """
-WITH marked AS (
-    SELECT user_id, ts, value, event_id,
-           CASE WHEN lag(ts) OVER w IS NULL
-                     OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                THEN 1 ELSE 0 END AS new_session
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), islands AS (
-    SELECT user_id, ts, value, event_id,
-           SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS session_id
-    FROM marked
-)
-SELECT user_id,
-       MIN(ts) AS session_start,
-       MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) AS sum_value
-FROM islands
-GROUP BY user_id, session_id
-""",
-)
+@register("streaming_user_sessions_bucketed", STREAMING_USER_SESSIONS_ORACLE)
 def streaming_user_sessions_bucketed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -10016,8 +9755,9 @@ def streaming_user_sessions_bucketed(
     the drained LOCAL sessions then take the batch edge-stitch
     (``operators/aggregates.stitch_sessions``: only each (user, day)'s
     first/last session can merge across midnight, ≤ 2 rows per
-    user·day).  Carries the batch gaps-and-islands oracle VERBATIM —
-    the hash proves the two-pass plan assigns identical sessions."""
+    user·day).  Registered with ``STREAMING_USER_SESSIONS_ORACLE`` like
+    ``streaming_user_sessions`` — the hash proves the two-pass plan
+    assigns identical sessions."""
 
     from e_commerce_data_lakehouse_spark.operators import (
         aggregates as agg_ops,
@@ -10025,12 +9765,9 @@ def streaming_user_sessions_bucketed(
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
         bucketed_session_stream,
         run_available_now_parquet,
-        stream_events,
     )
 
-    load(spark, sf_dir)  # session settings (UTC + nanosAsLong)
-    schema = _events_stream_schema(spark, sf_dir)
-    stream = stream_events(spark, sf_dir, schema, glob="events.parquet")
+    stream = _events_stream(spark, sf_dir)
     local = bucketed_session_stream(
         stream,
         "user_id",
@@ -10151,15 +9888,8 @@ def retrieval_eval_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "asof_view_within_1h",
-    """
-WITH v AS (
-    SELECT user_id, ts, MAX(event_id) AS view_event_id
-    FROM events WHERE event_type = 'view'
-    GROUP BY user_id, ts
-), p AS (
-    SELECT event_id AS purchase_id, user_id, ts AS purchase_ts
-    FROM events WHERE event_type = 'purchase'
-)
+    f"""
+{_PURCHASE_VIEW_CTES}
 SELECT p.purchase_id, p.user_id, p.purchase_ts,
        CASE WHEN v.ts >= p.purchase_ts - INTERVAL 1 HOUR
             THEN v.view_event_id END AS view_event_id,
@@ -10178,30 +9908,7 @@ def asof_view_within_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``operators/joins.py:asof_join``); the bound is a projection on the
     carried match timestamp, not an extra join.  Oracle: DuckDB native
     ASOF JOIN with the window applied as a CASE."""
-    ev = load(spark, sf_dir, "events")["events"]
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("view_event_id"))
-        .withColumn("view_ts", F.col("ts"))
-        .select("user_id", F.col("ts"), "view_event_id", "view_ts")
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    return jn.asof_join(
-        purchases,
-        views.withColumnRenamed("ts", "__rts"),
-        on="user_id",
-        left_ts="purchase_ts",
-        right_ts="__rts",
-        right_cols=["view_event_id", "view_ts"],
-        tolerance="1 HOUR",
-    ).select(
-        "purchase_id", "user_id", "purchase_ts", "view_event_id", "view_ts"
-    )
+    return _purchase_view_asof(spark, sf_dir, tolerance="1 HOUR")
 
 
 @register(
@@ -10395,12 +10102,9 @@ def streaming_enriched_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     from e_commerce_data_lakehouse_spark.streaming.joins import enrich_with_dim
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
         run_available_now_parquet,
-        stream_events,
     )
 
-    load(spark, sf_dir)  # session settings (UTC + nanosAsLong)
-    schema = _events_stream_schema(spark, sf_dir)
-    stream = stream_events(spark, sf_dir, schema, glob="events.parquet")
+    stream = _events_stream(spark, sf_dir)
     purchases = stream.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", F.to_date("ts").alias("__d"), "value"
     )
@@ -10795,12 +10499,7 @@ def customer_global_spend_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is the proof the rank-based rewrite IS the window semantics."""
     from e_commerce_data_lakehouse_spark.operators import ranking as rk
 
-    o = load(spark, sf_dir, "orders")["orders"]
-    per_cust = o.groupBy("o_custkey").agg(
-        F.sum(F.expr("CAST(o_totalprice * 100 AS DECIMAL(30,0))"))
-        .cast("long")
-        .alias("spend_cents")
-    )
+    per_cust = _customer_spend_cents(spark, sf_dir)
     ranked = rk.global_row_number(
         per_cust,
         [F.col("spend_cents").desc(), F.col("o_custkey")],

@@ -268,14 +268,3 @@ def _delete_empty_parquet_files(path: str) -> None:
             if os.path.exists(crc):
                 os.remove(crc)
 
-
-def run_available_now(
-    result: DataFrame, checkpoint_dir: str, table_name: str,
-    output_mode: str = "complete",
-) -> None:
-    """Drain everything currently available and stop — the streaming
-    equivalent of the reference's nightly bounded Kafka read (T1).
-    ``complete`` suits windowed aggs; joins use ``append``."""
-    drain_available_now(
-        result, checkpoint_dir, "memory", output_mode, query_name=table_name
-    )

@@ -1,13 +1,19 @@
 from __future__ import annotations
 
-import duckdb
+import os
+import sys
+
 import pytest
 
-from e_commerce_data_lakehouse_spark.catalog import TESTDATA_TABLES
 from e_commerce_data_lakehouse_spark.session import get_spark
 
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+)
+
+from driver_sim import duck_views  # noqa: E402
+
 SF_SMALL = "/root/testdata/sf0.001"
-SF_ORACLE = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="session")
@@ -19,24 +25,6 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for name in TESTDATA_TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS "
-            f"SELECT * FROM read_parquet('{SF_SMALL}/{name}.parquet')"
-        )
-    yield con
-    con.close()
+    with duck_views(SF_SMALL) as con:
+        yield con
 
-
-@pytest.fixture(scope="session")
-def duck_oracle():
-    """DuckDB views at sf0.01 — the scale the driver's t2 gate uses."""
-    con = duckdb.connect()
-    for name in TESTDATA_TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS "
-            f"SELECT * FROM read_parquet('{SF_ORACLE}/{name}.parquet')"
-        )
-    yield con
-    con.close()

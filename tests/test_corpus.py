@@ -1010,7 +1010,7 @@ def test_leakage_safe_split_clusters_never_straddle(spark):
     from e_commerce_data_lakehouse_spark.operators import graph as gr
 
     docs = eq.load(spark, SF, "documents")["documents"]
-    pairs = eq._jaccard_pair_edges(spark, SF)
+    pairs = eq.near_dup_token_jaccard(spark, SF)
     comp = gr.connected_components(pairs, "id_a", "id_b")
     m = docs.join(comp, docs["doc_id"] == comp["id"], "left").select(
         "doc_id", F.coalesce("comp", "doc_id").alias("ck")

@@ -12,6 +12,7 @@ from __future__ import annotations
 import shutil
 
 import pytest
+from driver_sim import compare, duck_views
 
 import __spark_entry__ as entry_mod
 from tests.conftest import SF_SMALL
@@ -76,29 +77,13 @@ def test_null_group_queries_match_oracle_on_null_data(
     oracle SQL runs on the DEGRADED tables and must produce the same
     multiset — this is the test that catches an inner join silently
     dropping the NULL group on one side only (r10 review finding)."""
-    import duckdb
-
-    con = duckdb.connect()
-    for t in ("orders", "documents"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{degraded_sf}/{t}.parquet/*.parquet')"
-        )
-    res = con.execute(entry_mod.oracle_sql()[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
     sdf = QUERIES[name](spark, degraded_sf)
-    assert sorted(sdf.columns) == sorted(ocols)
-    order = sorted(range(len(ocols)), key=lambda i: ocols[i])
-    sorder = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    o = sorted(
-        (tuple(r[i] for i in order) for r in orows), key=repr
-    )
-    s = sorted(
-        (tuple(tuple(r)[i] for i in sorder) for r in sdf.collect()),
-        key=repr,
-    )
-    assert s == o
+    rows = [tuple(r) for r in sdf.collect()]
+    with duck_views(degraded_sf) as con:
+        problems = compare(
+            sdf.dtypes, rows, con, entry_mod.oracle_sql()[name]
+        )
+    assert not problems, "; ".join(problems)
 
 
 def test_dag_corpus_pipeline_incremental_empty_corpus(spark, degraded_sf):

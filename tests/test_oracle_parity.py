@@ -1,38 +1,16 @@
 """Replicates the driver's t2 correctness gate locally: every declared query
-runs in Spark AND in DuckDB (oracle SQL) on the same parquet; row count,
-column names, and the order-insensitive multiset of values must match
-exactly.
+runs in Spark AND in DuckDB (oracle SQL) on the same parquet, through
+``tools/driver_sim.compare`` — column names, canonical column types, row
+count and the order-insensitive multiset of values must match exactly.
 """
 
 from __future__ import annotations
 
-import datetime
-import math
-
 import pytest
+from driver_sim import compare
 
 import __spark_entry__ as entry_mod
 from tests.conftest import SF_SMALL
-
-
-def _norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    if isinstance(v, datetime.datetime):
-        return v.replace(tzinfo=None)
-    if isinstance(v, list):
-        return tuple(_norm_cell(x) for x in v)
-    return v
-
-
-def _normalize(rows, cols):
-    """Sort columns by name (like the driver), then sort rows."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm_cell(r[i]) for i in order) for r in rows]
-    return sorted(out, key=repr)
-
 
 ORACLES = entry_mod.oracle_sql()
 ALL_QUERIES = entry_mod.queries()
@@ -41,21 +19,9 @@ ALL_QUERIES = entry_mod.queries()
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(name, spark, duck):
     sdf = ALL_QUERIES[name](spark, SF_SMALL)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    res = duck.execute(ORACLES[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-
-    assert sorted(scols) == sorted(ocols), f"{name}: column names differ"
-    assert len(srows) == len(orows), f"{name}: row count {len(srows)} != {len(orows)}"
-    snorm = _normalize(srows, scols)
-    onorm = _normalize(orows, ocols)
-    mismatches = [
-        (i, a, b) for i, (a, b) in enumerate(zip(snorm, onorm)) if a != b
-    ]
-    assert not mismatches, f"{name}: first mismatches {mismatches[:3]}"
+    rows = [tuple(r) for r in sdf.collect()]
+    problems = compare(sdf.dtypes, rows, duck, ORACLES[name])
+    assert not problems, f"{name}: {'; '.join(problems)}"
 
 
 @pytest.mark.parametrize("name", sorted(set(ALL_QUERIES) - set(ORACLES)))

@@ -166,8 +166,8 @@ def test_run_available_now_parquet_matches_memory_sink(spark, tmp_path):
     import uuid
 
     from e_commerce_data_lakehouse_spark.streaming.pipeline import (
+        drain_available_now,
         hourly_event_counts,
-        run_available_now,
         run_available_now_parquet,
         stream_events,
     )
@@ -192,8 +192,12 @@ def test_run_available_now_parquet_matches_memory_sink(spark, tmp_path):
 
     table = f"ref_{uuid.uuid4().hex[:8]}"
     stream2 = stream_events(spark, src, schema, ts_from_nanos="ts")
-    run_available_now(
-        hourly_event_counts(stream2), str(tmp_path / "ckpt_ref"), table
+    drain_available_now(
+        hourly_event_counts(stream2),
+        str(tmp_path / "ckpt_ref"),
+        "memory",
+        "complete",
+        query_name=table,
     )
     ref = spark.table(table)
 

@@ -21,7 +21,6 @@ from e_commerce_data_lakehouse_spark.sources.sinks import ManagedTable
 from e_commerce_data_lakehouse_spark.streaming.pipeline import (
     drain_available_now,
     hourly_event_counts,
-    run_available_now,
     run_available_now_append,
     run_available_now_parquet,
 )
@@ -189,11 +188,12 @@ def test_windowed_append_drain_leaves_no_zero_row_file(spark, tmp_path):
     counts = _row_counts(drain)
     assert counts and 0 not in counts
 
-    run_available_now(
+    drain_available_now(
         hourly_event_counts(_stream(spark, src)),
         str(tmp_path / "ck_ref"),
-        "append_drain_ref",
-        output_mode="append",
+        "memory",
+        "append",
+        query_name="append_drain_ref",
     )
     ref = spark.table("append_drain_ref")
     assert sorted(map(tuple, got.collect())) == sorted(

@@ -3,8 +3,10 @@
 Creates a *vanilla* SparkSession (deliberately NOT the engine's factory — the
 driver owns its session), imports ``__spark_entry__``, smoke-checks
 ``entry()``, then runs every ``queries()`` entry at the given sf dir and
-compares row count / column names / order-insensitive value multiset against
-``oracle_sql()`` run in DuckDB.
+checks it with :func:`compare` against ``oracle_sql()`` run in DuckDB.
+
+:func:`compare` and :func:`duck_views` are the one Spark-vs-DuckDB check:
+``tools/oracle_gate.py`` and the tier-1 tests call them too.
 
 Usage: python tools/driver_sim.py [sf_dir] [query_name ...]
 (with query names given, only those queries are checked and entry() is
@@ -15,17 +17,15 @@ from __future__ import annotations
 
 import datetime
 import math
+import os
 import sys
 
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from e_commerce_data_lakehouse_spark.catalog import TESTDATA_TABLES  # noqa: E402
 
 
 def norm_cell(v):
@@ -69,6 +69,60 @@ def canon_type(t: str) -> str:
     return aliases.get(t, t)
 
 
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table in ``sf_dir``.
+    A table is ``<name>.parquet``, a file or a directory of part files;
+    a table the directory lacks gets no view (generator directories may
+    hold a subset)."""
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(p):
+            p += "/*.parquet"
+        elif not os.path.exists(p):
+            continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def compare(dtypes, rows, con, sql: str) -> list[str]:
+    """Check a Spark result against the oracle ``sql`` run on ``con``.
+
+    ``dtypes`` is the frame's ``(name, simpleString)`` list and ``rows``
+    its collected rows as tuples.  Checked: sorted column names, then
+    ``canon_type`` types, row count and the ``normalize``d value multiset.
+    Returns the problems found; an empty list is a hash-match.  An error
+    raised by the oracle propagates."""
+    res = con.execute(sql)
+    ocols = [d[0] for d in res.description]
+    orows = res.fetchall()
+    scols = [c for c, _ in dtypes]
+    problems = []
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"cols {sorted(scols)} != {sorted(ocols)}")
+    else:
+        otypes = {
+            r[0]: canon_type(r[1])
+            for r in con.execute(f"DESCRIBE {sql}").fetchall()
+        }
+        stypes = {c: canon_type(t) for c, t in dtypes}
+        mism = {
+            c: (stypes[c], otypes[c])
+            for c in stypes
+            if stypes[c] != otypes.get(c)
+        }
+        if mism:
+            problems.append(f"types spark!=oracle {mism}")
+    if len(rows) != len(orows):
+        problems.append(f"rowcount {len(rows)} != {len(orows)}")
+    if not problems:
+        a, b = normalize(rows, scols), normalize(orows, ocols)
+        if a != b:
+            diff = [(x, y) for x, y in zip(a, b) if x != y][:2]
+            problems.append(f"values differ, e.g. {diff}")
+    return problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = (
@@ -79,12 +133,7 @@ def main() -> int:
     )
     import __spark_entry__ as mod
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_views(sf_dir)
 
     only = set(sys.argv[2:])
     if not only:
@@ -103,7 +152,7 @@ def main() -> int:
     for name, fn in sorted(queries.items()):
         try:
             sdf = fn(spark, sf_dir)
-            scols = sdf.columns
+            dtypes = sdf.dtypes
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark raised {type(e).__name__}: {e}")
@@ -113,38 +162,11 @@ def main() -> int:
             print(f"ok    {name}: rows-only check, {len(srows)} rows")
             continue
         try:
-            res = con.execute(oracles[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
+            problems = compare(dtypes, srows, con, oracles[name])
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: oracle raised {type(e).__name__}: {e}")
             failed.append(name)
             continue
-        problems = []
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"cols {sorted(scols)} != {sorted(ocols)}")
-        else:
-            otypes = {
-                r[0]: canon_type(r[1])
-                for r in con.execute(
-                    f"DESCRIBE {oracles[name]}"
-                ).fetchall()
-            }
-            stypes = {c: canon_type(t) for c, t in sdf.dtypes}
-            mism = {
-                c: (stypes[c], otypes[c])
-                for c in stypes
-                if stypes[c] != otypes.get(c)
-            }
-            if mism:
-                problems.append(f"types spark!=oracle {mism}")
-        if len(srows) != len(orows):
-            problems.append(f"rowcount {len(srows)} != {len(orows)}")
-        if not problems:
-            a, b = normalize(srows, scols), normalize(orows, ocols)
-            if a != b:
-                diff = [(x, y) for x, y in zip(a, b) if x != y][:2]
-                problems.append(f"values differ, e.g. {diff}")
         if problems:
             print(f"FAIL  {name}: {'; '.join(problems)}")
             failed.append(name)

@@ -37,14 +37,12 @@ import sys
 import threading
 import time
 
-import duckdb
-
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, ROOT)
 sys.path.insert(0, HERE)
 
-from driver_sim import TABLES, canon_type, normalize  # noqa: E402
+from driver_sim import compare, duck_views  # noqa: E402
 
 # The scale-sensitive exact families (r6-r8 defect classes).  Entries
 # are (name, skip_reason_or_None): a reason marks a query whose ORACLE
@@ -151,13 +149,7 @@ def main() -> int:
     queries = mod.queries()
     oracles = mod.oracle_sql()
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{args.sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
+    con = duck_views(args.sf_dir)
 
     if args.queries:
         todo = [(n, None) for n in args.queries]
@@ -199,7 +191,7 @@ def main() -> int:
         rec: dict = {"q": name}
         try:
             sdf = queries[name](spark, args.sf_dir)
-            scols = sdf.columns
+            dtypes = sdf.dtypes
             # count BEFORE collect: an output-quadratic result must be
             # skipped without ever materializing on the driver
             n_rows = sdf.count()
@@ -245,13 +237,7 @@ def main() -> int:
         th = threading.Thread(target=watchdog, daemon=True)
         th.start()
         try:
-            res = con.execute(oracles[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
-            otypes = {
-                r[0]: canon_type(r[1])
-                for r in con.execute(f"DESCRIBE {oracles[name]}").fetchall()
-            }
+            problems = compare(dtypes, srows, con, oracles[name])
         except Exception as e:  # noqa: BLE001 — timeout or oracle error
             finished.set()
             interrupted = time.time() - t1 >= args.oracle_timeout - 1
@@ -278,25 +264,6 @@ def main() -> int:
             continue
         finished.set()
         rec["oracle_secs"] = round(time.time() - t1, 1)
-        problems = []
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"cols {sorted(scols)} != {sorted(ocols)}")
-        else:
-            stypes = {c: canon_type(t) for c, t in sdf.dtypes}
-            mism = {
-                c: (stypes[c], otypes[c])
-                for c in stypes
-                if stypes[c] != otypes.get(c)
-            }
-            if mism:
-                problems.append(f"types spark!=oracle {mism}")
-        if len(srows) != len(orows):
-            problems.append(f"rowcount {len(srows)} != {len(orows)}")
-        if not problems:
-            a, b = normalize(srows, scols), normalize(orows, ocols)
-            if a != b:
-                diff = [(x, y) for x, y in zip(a, b) if x != y][:1]
-                problems.append(f"values differ, e.g. {diff}"[:400])
         if problems:
             rec.update(status="fail", err="; ".join(problems)[:500])
             emit(rec)

@@ -1555,9 +1555,7 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = _events_stream(spark, sf_dir)
     result = hourly_event_counts(stream, watermark="2 hours")
-    out = run_available_now_parquet(
-        result, scratch_dir("ckpt_"), scratch_dir("drain_"),
-    )
+    out = run_available_now_parquet(result, scratch_dir("drain_"))
     return out.withColumn(
         "hour_start", F.col("hour_start").cast("timestamp_ntz")
     )
@@ -2815,8 +2813,7 @@ def streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_watermark="3 hours",
     ).select("purchase_id", "view_id", F.col("l.user_id").alias("user_id"))
     return run_available_now_parquet(
-        joined, scratch_dir("ckpt_"),
-        scratch_dir("drain_"), output_mode="append",
+        joined, scratch_dir("drain_"), output_mode="append",
     )
 
 
@@ -7574,9 +7571,7 @@ def streaming_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.hll_sketch_estimate("sketch").alias("approx_distinct"),
         )
     )
-    est_out = run_available_now_parquet(
-        est, scratch_dir("ckpt_"), scratch_dir("drain_"),
-    )
+    est_out = run_available_now_parquet(est, scratch_dir("drain_"))
     ev = load(spark, sf_dir, "events")["events"]
     # cast to ntz BEFORE the join/output: an LTZ hour would re-render in
     # the driver's host timezone at collect time (the TZ probe catches it)
@@ -8360,8 +8355,7 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         keyed, ["user_id", "event_type", "day"], "ts", watermark="24 hours"
     ).select("user_id", "event_type", "day")
     return run_available_now_parquet(
-        deduped, scratch_dir("ckpt_"),
-        scratch_dir("drain_"), output_mode="append",
+        deduped, scratch_dir("drain_"), output_mode="append",
     )
 
 
@@ -8718,8 +8712,7 @@ def streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir)
     totals = st.running_totals_per_key(stream, "user_id", "ts")
     return run_available_now_parquet(
-        totals, scratch_dir("ckpt_"),
-        scratch_dir("drain_"), output_mode="update",
+        totals, scratch_dir("drain_"), output_mode="update",
     )
 
 
@@ -9676,9 +9669,7 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sessions = _session_window_stream(spark, sf_dir)
-    out = run_available_now_parquet(
-        sessions, scratch_dir("ckpt_"), scratch_dir("drain_"),
-    )
+    out = run_available_now_parquet(sessions, scratch_dir("drain_"))
     return _ntz_session_bounds(out)
 
 
@@ -9786,9 +9777,7 @@ def streaming_user_sessions_bucketed(
     # frame is ~rows-of-sessions sized and the memory sink materializes
     # all of it on the driver (maxResultSize aborted the gen-sf10 run)
     sink = scratch_dir("sess_bkt_")
-    drained = run_available_now_parquet(
-        local, scratch_dir("ckpt_"), sink
-    )
+    drained = run_available_now_parquet(local, sink)
     stitched = agg_ops.stitch_sessions(
         drained,
         "user_id",
@@ -10124,8 +10113,7 @@ def streaming_enriched_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("double").alias("value"),
     )
     out = run_available_now_parquet(
-        enriched, scratch_dir("ckpt_"),
-        scratch_dir("drain_"), output_mode="append",
+        enriched, scratch_dir("drain_"), output_mode="append",
     )
     return out.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 

@@ -170,27 +170,11 @@ def ngram_overlap(
     standard decontamination shape (e.g. GPT-3 appendix C) with no pairwise
     document comparison anywhere.
     """
-
-    def grams(df: DataFrame) -> DataFrame:
-        # build gram strings per doc, explode only the strings — exploding
-        # an index and carrying the word array per gram row copies the
-        # whole array into each output row (see _gram_frame)
-        words = F.split(
-            F.regexp_replace(F.col(text_col), r"^\s+|\s+$", ""), r"\s+"
-        )
-        gram_arr = F.expr(
-            f"transform(sequence(1, size(ws) - {n - 1}),"
-            f" i -> concat_ws(' ', slice(ws, i, {n})))"
-        )
-        return (
-            df.select(id_col, words.alias("ws"))
-            .filter(F.size("ws") >= n)
-            .select(id_col, F.explode(gram_arr).alias("gram"))
-        )
-
-    bench_grams = grams(benchmark).select("gram").distinct()
+    bench_grams = _word_grams(benchmark, n, id_col, text_col).select(
+        "gram"
+    ).distinct()
     return (
-        grams(corpus)
+        _word_grams(corpus, n, id_col, text_col)
         .join(F.broadcast(bench_grams), "gram")
         .groupBy(id_col)
         .agg(F.count_distinct("gram").cast("long").alias("n_shared_grams"))
@@ -645,6 +629,29 @@ def quota_sample(
     )
 
 
+def _word_grams(
+    df: DataFrame, n: int, id_col: str, text_col: str
+) -> DataFrame:
+    """(id, gram) rows: every word ``n``-gram of each doc of ``df``
+    (words split on whitespace runs, gram words joined by one space)."""
+    words = F.split(
+        F.regexp_replace(F.col(text_col), r"^\s+|\s+$", ""), r"\s+"
+    )
+    # build the gram STRINGS per doc, then explode those — exploding the
+    # index and carrying the word array per gram row copies the whole
+    # array (hundreds of bytes) into each of the N-per-doc output rows,
+    # which dominated the stage at 28M grams (gen-sf10)
+    gram_arr = F.expr(
+        f"transform(sequence(1, size(ws) - {n - 1}),"
+        f" i -> concat_ws(' ', slice(ws, i, {n})))"
+    )
+    return (
+        df.select(id_col, words.alias("ws"))
+        .filter(F.size("ws") >= n)
+        .select(id_col, F.explode(gram_arr).alias("gram"))
+    )
+
+
 def _gram_frame(
     df: DataFrame, n: int, id_col: str, text_col: str, with_text: bool
 ) -> DataFrame:
@@ -657,26 +664,11 @@ def _gram_frame(
         ensure_parallelism,
     )
 
-    words = F.split(
-        F.regexp_replace(F.col(text_col), r"^\s+|\s+$", ""), r"\s+"
-    )
-    # build the gram STRINGS per doc, then explode those — exploding the
-    # index and carrying the word array per gram row copies the whole
-    # array (hundreds of bytes) into each of the N-per-doc output rows,
-    # which dominated the stage at 28M grams (gen-sf10)
-    gram_arr = F.expr(
-        f"transform(sequence(1, size(ws) - {n - 1}),"
-        f" i -> concat_ws(' ', slice(ws, i, {n})))"
-    )
     cols = [F.xxhash64(F.col("gram")).alias("gh")]
     if with_text:
         cols.append(F.col("gram"))
-    return (
-        ensure_parallelism(df)
-        .select(id_col, words.alias("ws"))
-        .filter(F.size("ws") >= n)
-        .select(id_col, F.explode(gram_arr).alias("gram"))
-        .select(id_col, *cols)
+    return _word_grams(ensure_parallelism(df), n, id_col, text_col).select(
+        id_col, *cols
     )
 
 

@@ -210,8 +210,8 @@ def _prefix_candidates(
     ``k = floor((1-win)·|A|) + 1`` globally RAREST tokens (document
     frequency ascending, token ascending — any total order is lossless,
     rarity minimizes candidates) at least one token is in B.  Candidates
-    = equi-join of A's k-rarest token stream against B's FULL token
-    stream on (blocks..., token).  The join key now includes the token,
+    = equi-join of A's k-rarest tokens (:func:`_prefix_index` of
+    ``base``) against B's FULL token stream on (blocks..., token).  The join key now includes the token,
     so the head block shatters across the cluster, and a pair is only
     generated when it shares a RARE token — the head-word pairs that
     made the block quadratic never meet.
@@ -221,41 +221,17 @@ def _prefix_candidates(
     score — callers re-join the token arrays for the exact verify, which
     is now O(candidates), not O(block²).
     """
-    from pyspark.sql import Window
-
-    tok_stream = base.select(
-        F.col(id_col),
+    pref = _prefix_index(base, id_col, block_cols, win).select(
+        F.col("__idb").alias("__ida"),
         *[F.col(c) for c in block_cols],
-        F.col("__nt"),
-        F.explode("toks").alias("__tok"),
+        F.col("__ntb").alias("__nta"),
+        "__tok",
     )
-    # document frequency over THIS df — O(distinct tokens) aggregate with
-    # map-side combine; joined back onto the exploded stream (AQE
-    # broadcasts it at test scale, shuffle-joins it when the vocab grows)
-    freq = tok_stream.groupBy("__tok").agg(F.count("*").alias("__tf"))
-    w = Window.partitionBy(id_col).orderBy("__tf", "__tok")
-    # k = floor((1-win)·|A|) + 1; +1e-9 guards the float product rounding
-    # DOWN across an integer boundary (under-k would drop true pairs,
-    # over-k only adds candidates)
-    k = (
-        F.floor((1.0 - win) * F.col("__nt") + 1e-9).cast("int") + 1
-    )
-    pref = (
-        tok_stream.join(freq, "__tok")
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            F.col(id_col).alias("__ida"),
-            *[F.col(c) for c in block_cols],
-            F.col("__nt").alias("__nta"),
-            "__tok",
-        )
-    )
-    full = tok_stream.select(
+    full = base.select(
         F.col(id_col).alias("__idb"),
         *[F.col(c) for c in block_cols],
         F.col("__nt").alias("__ntb"),
-        "__tok",
+        F.explode("toks").alias("__tok"),
     )
     return (
         pref.join(full, [*block_cols, "__tok"])

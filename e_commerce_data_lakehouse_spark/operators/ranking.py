@@ -1,25 +1,28 @@
 """Distributed global ranking without a single-task window.
 
-A global ``row_number() OVER (ORDER BY ...)`` puts EVERY row through one
-task — the one window shape that cannot scale past a single executor's
-throughput (the repo's plan sweep only admits it above bounded
-aggregates).  This module computes exact global row numbers the way
+A global ``row_number() OVER (ORDER BY ...)`` or running ``SUM() OVER
+(ORDER BY ...)`` puts EVERY row through one task — the one window shape
+that cannot scale past a single executor's throughput (the repo's plan
+sweep only admits it above bounded aggregates).  This module has ONE
+prefix machinery, :func:`global_cumsum`, computed the way
 ``RDD.zipWithIndex`` does, but Arrow-vectorized and order-aware:
 
 1. ``repartitionByRange`` on the order keys — each partition holds a
    contiguous, disjoint key range (one range shuffle; the sampled bounds
-   affect only partition SIZES, never the resulting ranks);
+   affect only partition SIZES, never the results);
 2. ``sortWithinPartitions`` — no shuffle;
-3. an Arrow ``mapInPandas`` pass assigns each row its partition-local
-   index (a running counter per partition — ``mapInPandas`` preserves
-   row order) and tags the partition id from the ``TaskContext``;
-4. per-partition row counts collect as BOUNDED driver metadata (one row
-   per partition), prefix-sum to offsets, and a broadcast join turns
-   local indexes into global ranks.
+3. an Arrow ``mapInPandas`` pass carries each row's partition-local
+   running sum (``mapInPandas`` preserves row order) and tags the
+   partition id from the ``TaskContext``;
+4. per-partition totals collect as BOUNDED driver metadata (one row per
+   partition), prefix-sum to offsets, and a broadcast join turns local
+   running sums into global ones.
 
-Two passes over the data (count + rank — inherent to the problem, same
-as ``zipWithIndex``), both embarrassingly parallel; the only global
-coordination is the #partitions-sized offset table.
+:func:`global_row_number` is that pass over a constant 1 — a row number
+is the running count.  Two passes over the data (totals + prefix —
+inherent to the problem, same as ``zipWithIndex``), both embarrassingly
+parallel; the only global coordination is the #partitions-sized offset
+table.
 """
 
 from __future__ import annotations
@@ -136,10 +139,47 @@ def global_row_number(
     equal-key rows get an arbitrary—though still valid—relative rank.
     Returns ``df``'s columns plus ``out_col``.
 
+    A row number is the running sum of a constant 1, so this is
+    :func:`global_cumsum` over a literal-1 column, dropped after.  A
+    caller-persisted ``df`` keeps its cache: the literal-1 projection is
+    a new frame, which the prefix pass persists and releases itself.
     ``total_col``: attach the TOTAL row count as a literal column — the
     driver already holds it exactly (the prefix-sum of the bounded
     per-partition counts), so NTILE-style callers that need ``n`` stop
     paying a separate ``count()`` job over the ranked frame.
+    """
+    return global_cumsum(
+        df.withColumn("__one", F.lit(1).cast("long")),
+        order_cols,
+        "__one",
+        out_col=out_col,
+        total_col=total_col,
+        num_partitions=num_partitions,
+    ).drop("__one")
+
+
+def global_cumsum(
+    df: DataFrame,
+    order_cols: list[Column | str],
+    value_col: str,
+    out_col: str = "cum",
+    total_col: str | None = None,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Exact global running sum of BIGINT ``value_col`` in ``order_cols``
+    order — ``SUM(v) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)``
+    without the single-task window.  The one prefix pass of this module
+    (see the module docstring); :func:`global_row_number` runs it over a
+    constant 1.  If ``total_col`` is given, the grand total (a
+    driver-side Python int summed exactly) is attached as a literal
+    column — callers that previously paid a second ``SUM(v) OVER ()``
+    global window (or a ``count()`` job) get it for free.
+
+    Contract: ``value_col`` is integral and the running sum stays inside
+    int64 (the same bound the SQL BIGINT window has); the per-partition
+    numpy cumsum wraps rather than throws past 2^63, but the driver-side
+    offset arithmetic is exact Python int and the final total is checked
+    against the int64 range.
     """
     import numpy as np
 
@@ -147,7 +187,7 @@ def global_row_number(
     # FULL upstream plan once before the real shuffle runs it again
     # (guide §5; profiled on rfm_segments — each of its three chained
     # rank passes re-ran its predecessor's join during sampling).
-    # Unpersisted after the ranked frame materializes below — but only
+    # Unpersisted after the prefix frame materializes below — but only
     # when WE persisted it: a caller-persisted input must keep its cache
     # (r12 ADVICE: the unconditional unpersist silently dropped it).
     own_persist = not (
@@ -164,91 +204,6 @@ def global_row_number(
     # copy the field list: StructType(fields) keeps the passed list by
     # reference, so .add() on it would MUTATE the source frame's cached
     # schema (observed: the source suddenly "grows" a __pid column)
-    out_schema = StructType(list(sdf.schema.fields)).add(
-        "__pid", IntegerType()
-    ).add("__lrn", LongType())
-
-    def assign(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        i = 0
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["__pid"] = np.int32(pid)
-            pdf["__lrn"] = np.arange(i, i + len(pdf), dtype=np.int64)
-            i += len(pdf)
-            yield pdf
-
-    local = tracked_persist(sdf.mapInPandas(assign, out_schema))
-    # bounded driver metadata: one (pid, count) row per partition
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in local.groupBy("__pid")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    if own_persist:
-        df.unpersist()  # ranked frame materialized — input not needed
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    spark = df.sparkSession
-    off = spark.createDataFrame(offsets, "__pid int, __off long")
-    out = (
-        local.join(F.broadcast(off), "__pid")
-        .withColumn(out_col, F.col("__off") + F.col("__lrn") + F.lit(1))
-        .drop("__pid", "__lrn", "__off")
-    )
-    if total_col is not None:
-        out = out.withColumn(total_col, F.lit(acc).cast("long"))
-    return out
-
-
-def global_cumsum(
-    df: DataFrame,
-    order_cols: list[Column | str],
-    value_col: str,
-    out_col: str = "cum",
-    total_col: str | None = None,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exact global running sum of BIGINT ``value_col`` in ``order_cols``
-    order — ``SUM(v) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)``
-    without the single-task window.
-
-    Same three-step machinery as :func:`global_row_number` (range shuffle
-    → local sort → Arrow pass), but the Arrow pass carries a running
-    per-partition cumulative sum and the bounded driver metadata is one
-    (pid, partition_sum) row per partition; the prefix-sum of those
-    becomes each partition's additive offset.  If ``total_col`` is given,
-    the grand total (a driver-side Python int summed exactly) is attached
-    as a literal column — callers that previously paid a second
-    ``SUM(v) OVER ()`` global window get it for free.
-
-    Contract: ``value_col`` is integral and the running sum stays inside
-    int64 (the same bound the SQL BIGINT window has); the per-partition
-    numpy cumsum wraps rather than throws past 2^63, but the driver-side
-    offset arithmetic is exact Python int and the final total is checked
-    against the int64 range.
-    """
-    import numpy as np
-
-    # same input-persist rationale (and caller-persist guard) as
-    # global_row_number: the range shuffle's sampling job would re-run
-    # the full upstream plan
-    own_persist = not (
-        df.storageLevel.useMemory or df.storageLevel.useDisk
-    )
-    if own_persist:
-        df = tracked_persist(df)
-    sdf = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        if num_partitions
-        else df.repartitionByRange(*order_cols)
-    ).sortWithinPartitions(*order_cols)
-
     out_schema = StructType(list(sdf.schema.fields)).add(
         "__pid", IntegerType()
     ).add("__lcum", LongType())
@@ -277,7 +232,7 @@ def global_cumsum(
         .collect()
     }
     if own_persist:
-        df.unpersist()  # cumsum frame materialized — input not needed
+        df.unpersist()  # prefix frame materialized — input not needed
     offsets, acc = [], 0
     for pid in sorted(sums):
         offsets.append((pid, acc))

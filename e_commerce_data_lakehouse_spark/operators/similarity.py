@@ -49,8 +49,23 @@ def _nearest_centroid(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
     return d.argmin(axis=1)
 
 
-def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
-    """Deterministic top-k: rank by (rounded sim desc, candidate id asc)."""
+def _exact_topk(pairs: DataFrame, dim: int, k: int) -> DataFrame:
+    """Exact cosine top-k of candidate ``pairs`` (``query_id``,
+    ``neighbor_id``, vectors ``__qv``/``__cv``, per-row norms
+    ``__qn``/``__cn``) — the scoring and ranking step every kNN operator
+    here ends with.
+
+    The unrolled fixed-dim cosine is the scoring loop; norms are
+    precomputed per ROW by the callers (n_q + n_c evaluations, not
+    n_q x n_c), so the pair stage holds one unrolled sum.  Top-k is
+    deterministic: rank by (rounded sim desc, candidate id asc)."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        cosine_prenormed("__qv", "__cv", "__qn", "__cn", dim).alias(
+            "cosine_sim"
+        ),
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
     )
@@ -94,17 +109,7 @@ def brute_force_topk(
     pairs = c.join(F.broadcast(q), how="cross")
     if not include_self:
         pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
-    # unrolled fixed-dim cosine: the scoring loop IS this operator's cost.
-    # Norms are precomputed per ROW above (n_q + n_c evaluations, not
-    # n_q x n_c), so the pair stage holds one unrolled sum.
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        cosine_prenormed("__qv", "__cv", "__qn", "__cn", dim).alias(
-            "cosine_sim"
-        ),
-    )
-    return _topk_per_query(scored, k)
+    return _exact_topk(pairs, dim, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, n_tables: int, seed: int = 42):
@@ -190,14 +195,7 @@ def lsh_topk(
     )
     if not include_self:
         cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        cosine_prenormed("__qv", "__cv", "__qn", "__cn", dim).alias(
-            "cosine_sim"
-        ),
-    )
-    return _topk_per_query(scored, k)
+    return _exact_topk(cand, dim, k)
 
 
 def near_dup_pairs(
@@ -302,9 +300,17 @@ def _train_centroids(
     sample (skips the count+collect jobs)."""
     if x is None:
         x = _sample_vectors(candidates, vec_col, seed, sample_size)
-    rng = np.random.RandomState(seed)
-    cents = x[rng.choice(len(x), size=min(n_centroids, len(x)), replace=False)]
-    for _ in range(iters):  # Lloyd iterations on the sample
+    return _kmeans_1sub(x, n_centroids, np.random.RandomState(seed), iters)
+
+
+def _kmeans_1sub(
+    x: np.ndarray, ks: int, rng: np.random.RandomState, iters: int
+) -> np.ndarray:
+    """Lloyd k-means of the rows of ``x``: ``min(ks, len(x))`` distinct
+    rows drawn by ``rng`` seed the centroids, then ``iters`` rounds of
+    assign + mean (an empty cell keeps its centroid)."""
+    cents = x[rng.choice(len(x), size=min(ks, len(x)), replace=False)]
+    for _ in range(iters):
         assign = _nearest_centroid(x, cents)
         sums = np.zeros_like(cents)
         np.add.at(sums, assign, x)
@@ -418,32 +424,13 @@ def ivf_topk(
     )
     if not include_self:
         cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        cosine_prenormed("__qv", "__cv", "__qn", "__cn", cents.shape[1]).alias(
-            "cosine_sim"
-        ),
-    )
-    return _topk_per_query(scored, k)
+    return _exact_topk(cand, cents.shape[1], k)
 
 
 # ---------------------------------------------------------------------------
 # IVF-PQ — product quantization inside IVF cells (Jégou et al., "Product
 # Quantization for Nearest Neighbor Search", public TPAMI 2011)
 # ---------------------------------------------------------------------------
-def _kmeans_1sub(x: np.ndarray, ks: int, rng: np.random.RandomState, iters: int) -> np.ndarray:
-    cents = x[rng.choice(len(x), size=min(ks, len(x)), replace=False)]
-    for _ in range(iters):
-        assign = _nearest_centroid(x, cents)
-        sums = np.zeros_like(cents)
-        np.add.at(sums, assign, x)
-        counts = np.bincount(assign, minlength=len(cents))
-        nz = counts > 0
-        cents[nz] = sums[nz] / counts[nz][:, None]
-    return cents
-
-
 def _train_pq_codebooks(
     candidates: DataFrame,
     vec_col: str,
@@ -602,14 +589,7 @@ def ivf_pq_topk(
         F.col(vec_col).alias("__cv"),
         norm_fixed(vec_col, coarse.shape[1]).alias("__cn"),
     )
-    exact = short.join(raw, "neighbor_id").select(
-        "query_id",
-        "neighbor_id",
-        cosine_prenormed("__qv", "__cv", "__qn", "__cn", coarse.shape[1]).alias(
-            "cosine_sim"
-        ),
-    )
-    return _topk_per_query(exact, k)
+    return _exact_topk(short.join(raw, "neighbor_id"), coarse.shape[1], k)
 
 
 # ---------------------------------------------------------------------------
@@ -746,14 +726,7 @@ def hard_negative_topk(
         norm_fixed(vec_col, dim).alias("__cn"),
     )
     pairs = c.join(F.broadcast(q), F.col("__ql") != F.col("__cl"))
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        cosine_prenormed("__qv", "__cv", "__qn", "__cn", dim).alias(
-            "cosine_sim"
-        ),
-    )
-    return _topk_per_query(scored, k)
+    return _exact_topk(pairs, dim, k)
 
 
 def mmr_rerank(
@@ -914,7 +887,7 @@ def index_recall_eval(
     owner reads before swapping an index into production).
 
     ``exact`` and every ``variants`` value are top-k frames in the
-    :func:`_topk_per_query` shape (``query_id, neighbor_id, rank``);
+    :func:`_exact_topk` shape (``query_id, neighbor_id, rank``);
     ``labels`` maps ``vec_id -> label`` for the label-relevance MRR.
     Returns ONE row per index name (plus an ``exact`` row scoring the
     baseline against itself = the trivial 1.0 recall / delta 0):

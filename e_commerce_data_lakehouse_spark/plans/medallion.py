@@ -44,7 +44,10 @@ from e_commerce_data_lakehouse_spark.sources.files import (
     with_lineage,
     with_partition_columns,
 )
-from e_commerce_data_lakehouse_spark.sources.incremental import FileLedger
+from e_commerce_data_lakehouse_spark.sources.incremental import (
+    FileLedger,
+    ingest_new_files,
+)
 from e_commerce_data_lakehouse_spark.sources.sinks import ManagedTable
 
 
@@ -58,21 +61,24 @@ class StageResult:
 
 
 def ingest_raw_to_bronze(
-    spark: SparkSession,
     ledger: FileLedger,
     discovered: list[str],
     read_fn: Callable[[list[str]], DataFrame],
     bronze: ManagedTable,
     ts_col: str,
 ) -> StageResult:
-    """Raw→bronze: ledger-gated ingest + lineage + partition columns
-    (``csv_to_deltalake_table.py`` minus the driver-side file loop)."""
-    new = ledger.new_files(discovered)
-    if not new:
+    """Raw→bronze: ledger-gated ingest (``ingest_new_files``) + lineage +
+    partition columns (``csv_to_deltalake_table.py`` minus the
+    driver-side file loop)."""
+    if not ingest_new_files(
+        ledger,
+        discovered,
+        read_fn,
+        lambda df: bronze.append(
+            with_partition_columns(with_lineage(df), ts_col)
+        ),
+    ):
         return StageResult(0)
-    df = with_partition_columns(with_lineage(read_fn(new)), ts_col)
-    bronze.append(df)
-    ledger.mark_processed(new)
     # row_count() = storage metadata (parquet footers / Delta txn-log
     # stats) — no Spark job for a number the storage layer knows
     return StageResult(bronze.row_count())
@@ -333,7 +339,6 @@ def orders_dag(
 
     def bronze() -> StageResult:
         return ingest_raw_to_bronze(
-            spark,
             ledger,
             state["raw_files"],
             lambda paths: read_csv(spark, paths, raw_schema),

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from e_commerce_data_lakehouse_spark.session import scratch_dir
+
 
 def stream_events(
     spark: SparkSession,
@@ -209,7 +211,6 @@ def run_available_now_append(
 
 def run_available_now_parquet(
     result: DataFrame,
-    checkpoint_dir: str,
     path: str,
     output_mode: str = "complete",
 ) -> DataFrame:
@@ -229,8 +230,8 @@ def run_available_now_parquet(
     executors, the returned frame reads ordinary parquet, and nothing
     outlives the caller's temp directory.
 
-    The one-shot checkpoint is deleted after the drain: each invocation
-    passes a FRESH checkpoint dir (the bounded replay is per-call), so
+    The checkpoint is this call's own: a fresh ``scratch_dir("ckpt_")``
+    (the bounded replay is per-call), deleted after the drain, since
     keeping it would only leak disk across a many-query session.  In
     append/update mode the zero-row files are deleted too, once, after
     the drain: the batch AvailableNow runs after the data to flush the
@@ -239,6 +240,7 @@ def run_available_now_parquet(
     """
     import shutil
 
+    checkpoint_dir = scratch_dir("ckpt_")
     mode = "overwrite" if output_mode == "complete" else "append"
     drain_available_now(
         result,

@@ -175,7 +175,9 @@ def test_whiten_partition_layout_independent(spark):
 
 def test_global_row_number_equals_window_row_number(spark):
     """The distributed two-pass ranking must equal the single-task global
-    window it replaces, and be independent of input partitioning."""
+    window it replaces, carry the exact row count as ``total_col``, and be
+    independent of input partitioning — also with NULL order keys, on an
+    empty frame and on a single row."""
     from pyspark.sql import Window
 
     from e_commerce_data_lakehouse_spark.caching import release_persisted
@@ -184,24 +186,27 @@ def test_global_row_number_equals_window_row_number(spark):
     df = spark.range(997).select(
         F.col("id"), ((F.col("id") * 131) % 97).alias("v")
     )
-    expect = {
-        r["id"]: r["rn"]
-        for r in df.select(
-            "id",
-            F.row_number()
-            .over(Window.orderBy(F.col("v").desc(), "id"))
-            .alias("rn"),
-        ).collect()
-    }
-    for layout in (df.coalesce(1), df.repartition(16)):
-        got = {
-            r["id"]: r["global_rank"]
-            for r in rk.global_row_number(
-                layout, [F.col("v").desc(), F.col("id")]
+    inputs = (
+        df,
+        df.withColumn("v", F.when(F.col("id") % 10 != 0, F.col("v"))),
+        df.filter(F.col("id") < 0),
+        df.filter(F.col("id") == 500),
+    )
+    w = Window.orderBy(F.col("v").desc(), "id")
+    for frame in inputs:
+        expect = {
+            r["id"]: r["rn"]
+            for r in frame.select(
+                "id", F.row_number().over(w).alias("rn")
             ).collect()
         }
-        assert got == expect
-        release_persisted()
+        for layout in (frame.coalesce(1), frame.repartition(16)):
+            rows = rk.global_row_number(
+                layout, [F.col("v").desc(), F.col("id")], total_col="n"
+            ).collect()
+            assert {r["id"]: r["global_rank"] for r in rows} == expect
+            assert all(r["n"] == len(expect) for r in rows)
+            release_persisted()
 
 
 def test_ntile_from_rank_matches_sql_ntile(spark):
@@ -228,36 +233,39 @@ def test_global_cumsum_equals_window_cumsum(spark):
     """The distributed prefix sum must equal the single-task cumulative
     window it replaces (SUM OVER ROWS UNBOUNDED PRECEDING), carry the
     exact grand total when asked, and be independent of input
-    partitioning — including negative values and a partition-straddling
-    layout."""
+    partitioning — including negative values, a partition-straddling
+    layout, NULL order keys, an empty frame and a single row."""
     from pyspark.sql import Window
 
     from e_commerce_data_lakehouse_spark.caching import release_persisted
     from e_commerce_data_lakehouse_spark.operators import ranking as rk
 
     df = spark.range(997).select(
-        F.col("id"),
-        (((F.col("id") * 131) % 97) - 48).cast("long").alias("v"),
+        F.col("id"), ((F.col("id") * 131) % 97).alias("k")
+    ).withColumn("v", (F.col("k") - 48).cast("long"))
+    inputs = (
+        df,
+        df.withColumn("k", F.when(F.col("id") % 10 != 0, F.col("k"))),
+        df.filter(F.col("id") < 0),
+        df.filter(F.col("id") == 500),
     )
-    w = Window.orderBy(F.col("v").desc(), "id").rowsBetween(
+    w = Window.orderBy(F.col("k").desc(), "id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    expect = {
-        r["id"]: r["cum"]
-        for r in df.select(
-            "id", F.sum("v").over(w).alias("cum")
+    for frame in inputs:
+        want = frame.select(
+            "id", "v", F.sum("v").over(w).alias("cum")
         ).collect()
-    }
-    total = sum((i * 131) % 97 - 48 for i in range(997))
-    for layout in (df.coalesce(1), df.repartition(16)):
-        rows = rk.global_cumsum(
-            layout,
-            [F.col("v").desc(), "id"],
-            "v",
-            out_col="cum",
-            total_col="tot",
-        ).collect()
-        got = {r["id"]: r["cum"] for r in rows}
-        assert got == expect
-        assert all(r["tot"] == total for r in rows)
-        release_persisted()
+        expect = {r["id"]: r["cum"] for r in want}
+        total = sum(r["v"] for r in want)
+        for layout in (frame.coalesce(1), frame.repartition(16)):
+            rows = rk.global_cumsum(
+                layout,
+                [F.col("k").desc(), "id"],
+                "v",
+                out_col="cum",
+                total_col="tot",
+            ).collect()
+            assert {r["id"]: r["cum"] for r in rows} == expect
+            assert all(r["tot"] == total for r in rows)
+            release_persisted()

@@ -77,7 +77,7 @@ def _build(spark, tmp, raw_files):
         return read_csv(spark, paths, RAW_SCHEMA)
 
     r1 = m.ingest_raw_to_bronze(
-        spark, ledger, raw_files, read_fn, bronze, "o_orderdate"
+        ledger, raw_files, read_fn, bronze, "o_orderdate"
     )
     r2 = m.bronze_to_silver(
         bronze,

@@ -186,9 +186,7 @@ def test_run_available_now_parquet_matches_memory_sink(spark, tmp_path):
 
     stream = stream_events(spark, src, schema, ts_from_nanos="ts")
     agg = hourly_event_counts(stream)
-    got = run_available_now_parquet(
-        agg, str(tmp_path / "ckpt"), str(tmp_path / "drain")
-    )
+    got = run_available_now_parquet(agg, str(tmp_path / "drain"))
 
     table = f"ref_{uuid.uuid4().hex[:8]}"
     stream2 = stream_events(spark, src, schema, ts_from_nanos="ts")
@@ -246,7 +244,6 @@ def test_run_available_now_parquet_append_mode(spark, tmp_path):
     ).select("user_id", "day")
     got = run_available_now_parquet(
         deduped,
-        str(tmp_path / "ckpt"),
         str(tmp_path / "drain"),
         output_mode="append",
     )

@@ -181,7 +181,6 @@ def test_windowed_append_drain_leaves_no_zero_row_file(spark, tmp_path):
     drain = str(tmp_path / "drain")
     got = run_available_now_parquet(
         hourly_event_counts(_stream(spark, src)),
-        str(tmp_path / "ck"),
         drain,
         output_mode="append",
     )
@@ -207,9 +206,7 @@ def test_all_empty_append_drain_returns_typed_empty_frame(spark, tmp_path):
     _deliver(spark, src, [(1, "a", 1.0, "2024-01-01 00:00:00")])
     result = hourly_event_counts(_stream(spark, src).filter("value < 0"))
     drain = str(tmp_path / "drain")
-    got = run_available_now_parquet(
-        result, str(tmp_path / "ck"), drain, output_mode="append"
-    )
+    got = run_available_now_parquet(result, drain, output_mode="append")
     assert _row_counts(drain) == []
     # the parquet reader relaxes nullability; names and types are kept
     assert [(f.name, f.dataType) for f in got.schema.fields] == [

@@ -336,7 +336,6 @@ def test_complete_parquet_drain_matches_memory_sink(spark, tmp_path):
     )
     drained = run_available_now_parquet(
         agg.sessionize(stream, "user_id", "ts", gap="30 minutes"),
-        str(tmp_path / "ck"),
         str(tmp_path / "sink"),
         output_mode="complete",
     )

@@ -198,7 +198,6 @@ def _streaming_stateful_totals(spark, sf_dir: str):
     # executor-side drain: no driver collect, no session-lifetime table
     return run_available_now_parquet(
         totals,
-        scratch_dir("ckpt_"),
         scratch_dir("stateful_scale_"),
         output_mode="update",
     )

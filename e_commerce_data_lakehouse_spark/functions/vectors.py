@@ -52,24 +52,11 @@ def dot_fixed_sql(a_sql: str, b_sql: str, dim: int) -> str:
     return f"(CAST(0 AS DOUBLE) + {terms})"
 
 
-def cosine_fixed(
-    a_sql: str, b_sql: str, dim: int, scale: int = 6
-) -> Column:
-    """Fixed-dimension :func:`cosine` as one parsed codegen expression —
-    same rounding, same association order, ~10× faster on wide pair
-    volumes.  ``a_sql``/``b_sql`` are column names (qualified ok)."""
-    d = dot_fixed_sql(a_sql, b_sql, dim)
-    na = dot_fixed_sql(a_sql, a_sql, dim)
-    nb = dot_fixed_sql(b_sql, b_sql, dim)
-    return F.expr(f"ROUND({d} / (SQRT({na}) * SQRT({nb})), {scale})")
-
-
 def norm_fixed(a_sql: str, dim: int) -> Column:
-    """Unrolled fixed-dimension L2 norm — same association order as the
-    norm inside :func:`cosine_fixed`, for precomputing per-ROW norms
-    before a pair join (norms cost n evaluations instead of n², and the
-    post-join stage shrinks to one unrolled sum — see
-    :func:`cosine_prenormed`)."""
+    """Unrolled fixed-dimension L2 norm (``SQRT`` of :func:`dot_fixed_sql`
+    of a vector with itself), for precomputing per-ROW norms before a
+    pair join (norms cost n evaluations instead of n², and the post-join
+    stage shrinks to one unrolled sum — see :func:`cosine_prenormed`)."""
     return F.expr(f"SQRT({dot_fixed_sql(a_sql, a_sql, dim)})")
 
 
@@ -77,15 +64,15 @@ def cosine_prenormed(
     a_sql: str, b_sql: str, na_sql: str, nb_sql: str, dim: int,
     scale: int = 6,
 ) -> Column:
-    """:func:`cosine_fixed` with the two norms read from precomputed
-    columns (built with :func:`norm_fixed` BEFORE the pair join).
-    Bit-identical result — ``ROUND(dot / (na * nb), scale)`` with the
-    same float op order — but the post-join expression holds ONE unrolled
-    sum instead of three.  That matters twice at scale: norms are
-    evaluated once per row instead of once per pair, and a predicate on
-    the cosine no longer blows the whole-stage-codegen method over
-    Janino's 64 KB limit when Catalyst duplicates the expression into
-    the pushed-down filter (observed: the label-blocked 64-dim pair
+    """Fixed-dimension :func:`cosine` as one parsed codegen expression,
+    with the two norms read from precomputed columns (built with
+    :func:`norm_fixed` BEFORE the pair join).  Same rounding and float
+    op order as :func:`cosine` — ``ROUND(dot / (na * nb), scale)`` —
+    and the post-join expression holds ONE unrolled sum instead of
+    three.  That matters twice at scale: norms are evaluated once per row
+    instead of once per pair, and a predicate on the cosine no longer
+    blows the whole-stage-codegen method over Janino's 64 KB limit when
+    Catalyst duplicates the expression into the pushed-down filter (observed: the label-blocked 64-dim pair
     stage compiled interpreted before this split).
     """
     d = dot_fixed_sql(a_sql, b_sql, dim)

@@ -293,7 +293,7 @@ def sessionize_bucketed(
     """
     _assert_temp_names_free(
         df,
-        ("__tm", "__bkt", "__new", "__sid", "__smin", "__smax", "__is_edge",
+        ("__tm", "__bkt", "__new", "__sid", "__smin", "__send", "__is_edge",
          "__chain"),
         "sessionize_bucketed",
     )
@@ -335,39 +335,18 @@ def sessionize_bucketed(
     partials = list(partial_aggs or [F.count("*").alias("n_events")])
     local = flagged.groupBy(key_col, "__bkt", "__sid").agg(
         F.min("__tm").alias("__smin"),
-        F.max("__tm").alias("__smax"),
+        (F.max("__tm") + gap_us).alias("__send"),
         *partials,
     )
-    reserved = {key_col, "__bkt", "__sid", "__smin", "__smax"}
+    reserved = {key_col, "__bkt", "__sid", "__smin", "__send"}
     names = [c for c in local.columns if c not in reserved]
-    pb = Window.partitionBy(key_col, "__bkt")
-    local = local.withColumn(
-        "__is_edge",
-        (F.col("__sid") == F.min("__sid").over(pb))
-        | (F.col("__sid") == F.max("__sid").over(pb)),
+    # phase 2 over microseconds: ``__send`` already carries ``+ gap``, the
+    # shape :func:`stitch_sessions` expects; distinct sessions of one key
+    # never share ``__smin``
+    out = stitch_sessions(
+        local, key_col, "__bkt", start_col="__smin", end_col="__send",
+        sum_cols=names,
     )
-    middle = local.filter(~F.col("__is_edge"))
-    boundary = local.filter(F.col("__is_edge"))
-    # chain-merge over the bounded boundary frame: ≤2 rows per (key,
-    # bucket); distinct sessions of one key never share __smin
-    wc = Window.partitionBy(key_col).orderBy("__smin")
-    chained = boundary.withColumn(
-        "__chain",
-        F.sum(
-            F.when(
-                F.lag("__smax").over(wc).isNull()
-                | (F.col("__smin") - F.lag("__smax").over(wc) > gap_us),
-                1,
-            ).otherwise(0)
-        ).over(wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-    merged = chained.groupBy(key_col, "__chain").agg(
-        F.min("__smin").alias("__smin"),
-        F.max("__smax").alias("__smax"),
-        *[F.sum(n).alias(n) for n in names],
-    )
-    out_cols = [key_col, "__smin", "__smax", *names]
-    out = middle.select(*out_cols).unionByName(merged.select(*out_cols))
     # return the INPUT column's timestamp flavor (an NTZ input yields NTZ
     # session bounds, matching what session_window does — and what the
     # driver's collect-side tz conversion expects)
@@ -377,7 +356,7 @@ def sessionize_bucketed(
         F.timestamp_micros(F.col("__smin")).cast(ts_type).alias(
             "session_start"
         ),
-        F.timestamp_micros(F.col("__smax") + gap_us).cast(ts_type).alias(
+        F.timestamp_micros(F.col("__send")).cast(ts_type).alias(
             "session_end"
         ),
         *names,
@@ -408,15 +387,8 @@ def stitch_sessions(
     ``next.start ≤ prev.end`` (``end`` already carries ``+ gap``; the
     tie is INCLUSIVE, matching ``session_window``'s merge of an event at
     exactly last + gap — defect class #9).  ``sum_cols``: partial
-    aggregate columns whose combine is SUM.
-
-    NOTE: :func:`sessionize_bucketed`'s phase 2 encodes this same
-    edge-flag/chain/merge algorithm over its internal ``__smin/__smax``
-    MICROSECOND columns (it never materializes timestamp sessions
-    mid-plan).  The inclusive-tie merge semantics (defect class #9)
-    lives in BOTH places — any change to the tie or edge rule here must
-    be mirrored there; each side is pinned by its own
-    equivalence/convergence pytest."""
+    aggregate columns whose combine is SUM.  :func:`sessionize_bucketed`
+    runs its phase 2 through this function over microsecond columns."""
     _assert_temp_names_free(
         df, ("__is_edge", "__chain"), "stitch_sessions"
     )

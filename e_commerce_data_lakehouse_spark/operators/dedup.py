@@ -1030,31 +1030,6 @@ def minhash_lsh_pairs_incremental(
 # ---------------------------------------------------------------------------
 # SimHash near-dup
 # ---------------------------------------------------------------------------
-def simhash64(text_col: Column) -> Column:
-    """64-bit SimHash of the token set, as pure Catalyst expressions.
-
-    For each bit position: sum over tokens of (+1 if hash bit set else -1);
-    bit = 1 if the vote is positive.  Uses xxhash64 token hashes and
-    aggregate() over the token array — map-only, no shuffle.
-    """
-    toks = F.array_distinct(F.split(normalize_text(text_col), " "))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    def _voter(mask):
-        # closure (not default arg): PySpark infers HOF arity from the
-        # lambda signature, so it must stay two-parameter
-        return lambda acc, h: acc + F.when(h.bitwiseAND(mask) != 0, 1).otherwise(-1)
-
-    bits = []
-    for bit in range(64):
-        mask = F.shiftleft(F.lit(1).cast("long"), bit)  # JVM shift: bit 63 ok
-        vote = F.aggregate(hashes, F.lit(0).cast("long"), _voter(mask))
-        bits.append(F.when(vote > 0, mask).otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
-
-
 def simhash_pairs(
     df: DataFrame,
     id_col: str,
@@ -1070,9 +1045,10 @@ def simhash_pairs(
     """
     width = 64 // bands
     # explode tokens → one xxhash64 per (doc, token) → 64 conditional-sum
-    # vote columns in ONE codegen hash aggregate (the array-expression form
-    # in :func:`simhash64` evaluates interpreted per element; this form's
-    # partial agg also collapses to one row per doc before the shuffle).
+    # vote columns in ONE codegen hash aggregate (an array-expression form
+    # with ``aggregate()`` over the token hashes evaluates interpreted per
+    # element; this form's partial agg also collapses to one row per doc
+    # before the shuffle).
     # Expressions as parsed SQL strings: the 64 vote aggregates + the
     # 64-term simhash reconstruction composed as Column operators cost
     # ~900 py4j round trips of pure DataFrame-construction time (~1.3 s/run

@@ -56,15 +56,6 @@ def exploded_trigrams(df: DataFrame, cols: list[str], text_col: str) -> DataFram
     )
 
 
-def trigram_counts(df: DataFrame, key_cols: list[str], text_col: str) -> DataFrame:
-    """Per-key character-trigram counts of lowercased text."""
-    return (
-        exploded_trigrams(df, key_cols, text_col)
-        .groupBy(*key_cols, "trigram")
-        .agg(F.count(F.lit(1)).alias("tg_count"))
-    )
-
-
 def language_profiles_from_corpus(
     df: DataFrame, lang_col: str, text_col: str, top_n: int = 50
 ) -> DataFrame:
@@ -93,35 +84,18 @@ def _rank_profiles(by_lang: DataFrame, lang_col: str, top_n: int) -> DataFrame:
     )
 
 
-def classify(
-    doc_trigrams: DataFrame, profiles: DataFrame, id_cols: list[str]
-) -> DataFrame:
-    """Assign each document the language whose profile it overlaps most,
-    from a per-doc trigram count table (see :func:`classify_corpus` for the
-    single-pass form).
-
-    Score = sum of the document's trigram multiplicities over trigrams in
-    that language's profile.  The profile side is broadcast (tiny); argmax
-    tiebreak is language name asc.  Documents sharing no trigram with any
-    profile drop out (inner join) — deterministic on both engines.
-    """
-    scores = (
-        doc_trigrams.join(F.broadcast(profiles), "trigram")
-        .groupBy(*id_cols, "profile_lang")
-        .agg(F.sum("tg_count").cast("long").alias("score"))
-    )
-    return _argmax(scores, id_cols)
-
-
 def classify_corpus(
     df: DataFrame, profiles: DataFrame, id_cols: list[str], text_col: str
 ) -> DataFrame:
-    """Single-pass classification: explode → broadcast-join the profile →
-    count matches per (doc, language) → argmax.  Equivalent to
-    :func:`classify` over :func:`trigram_counts` (counting occurrences that
-    hit a profile == summing per-doc multiplicities over profile trigrams)
-    but with no doc-keyed trigram shuffle: non-matching occurrences are
-    dropped map-side by the broadcast hash join."""
+    """Assign each document the language whose profile it overlaps most.
+
+    Single pass: explode → broadcast-join the profile → count matches per
+    (doc, language) → argmax.  Score = the number of the document's
+    trigram occurrences that hit that language's profile.  The profile
+    side is broadcast (tiny), so non-matching occurrences are dropped
+    map-side and no doc-keyed trigram table is shuffled; argmax tiebreak
+    is language name asc.  Documents sharing no trigram with any profile
+    drop out (inner join) — deterministic on both engines."""
     scores = (
         exploded_trigrams(df, id_cols, text_col)
         .join(F.broadcast(profiles.select("profile_lang", "trigram")), "trigram")

@@ -50,7 +50,10 @@ from e_commerce_data_lakehouse_spark.functions import text as tx
 from e_commerce_data_lakehouse_spark.operators import corpus as cp
 from e_commerce_data_lakehouse_spark.plans.medallion import StageResult
 from e_commerce_data_lakehouse_spark.plans.scheduler import Dag
-from e_commerce_data_lakehouse_spark.sources.sinks import ManagedTable
+from e_commerce_data_lakehouse_spark.sources.sinks import (
+    ManagedTable,
+    release_checkpoint,
+)
 from e_commerce_data_lakehouse_spark.streaming.pipeline import (
     drain_available_now,
 )
@@ -323,7 +326,9 @@ def ingest_corpus_batch(
     (eager ``localCheckpoint``) and counts it with ``DataFrame.observe``;
     the bronze append, ``curate_silver`` and ``decontaminate``'s
     new-benchmark side all read that checkpoint instead of re-running
-    the annotation over the batch lineage."""
+    the annotation over the batch lineage.  Every checkpoint the batch
+    makes (the annotated batch, the stored and new curated sets, the new
+    contaminated ids) is released once the DAG has run."""
     state: dict[str, object] = {}
 
     def ingest() -> StageResult:
@@ -397,6 +402,7 @@ def ingest_corpus_batch(
             new_ids = found.join(
                 ct.read(), "doc_id", "left_anti"
             ).localCheckpoint(eager=True)
+            state["new_ids"] = new_ids
             ct.append(new_ids)
         else:
             ct.overwrite(found)
@@ -453,7 +459,11 @@ def ingest_corpus_batch(
         deps=["publish_gold"],
         retries=0,
     )
-    return dag.run(spark)
+    try:
+        return dag.run(spark)
+    finally:
+        for name in ("delta", "prev_curated", "new_curated", "new_ids"):
+            release_checkpoint(state.get(name))
 
 
 def run_streaming(

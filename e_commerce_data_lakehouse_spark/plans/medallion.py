@@ -48,7 +48,10 @@ from e_commerce_data_lakehouse_spark.sources.incremental import (
     FileLedger,
     ingest_new_files,
 )
-from e_commerce_data_lakehouse_spark.sources.sinks import ManagedTable
+from e_commerce_data_lakehouse_spark.sources.sinks import (
+    ManagedTable,
+    release_checkpoint,
+)
 
 
 @dataclass
@@ -128,7 +131,8 @@ def bronze_to_silver(
     (n_in, n_out) before anything is committed, and the MERGE reads the
     checkpoint (:meth:`ManagedTable.merge_scd1` does not materialize it
     again).  bronze → clean → dedup runs once per increment instead of
-    once per count, gate and merge read."""
+    once per count, gate and merge read.  The checkpoint is released on
+    every exit: no new rows, a failed gate, or after the MERGE."""
     src = bronze.read()
     if silver.exists():
         batch = incremental_rows(src, silver.read(), ts_col)
@@ -149,11 +153,16 @@ def bronze_to_silver(
         .observe(kept, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    n_in, n_out = seen.get["n"], kept.get["n"]
-    if n_in == 0:
-        return StageResult(0)
-    q.retention_from_counts(n_in, n_out, warn_below=min_retention).expect()
-    silver.merge_scd1(deduped, key)
+    try:
+        n_in, n_out = seen.get["n"], kept.get["n"]
+        if n_in == 0:
+            return StageResult(0)
+        q.retention_from_counts(
+            n_in, n_out, warn_below=min_retention
+        ).expect()
+        silver.merge_scd1(deduped, key)
+    finally:
+        release_checkpoint(deduped)
     out = silver.read()
     q.uniqueness(out, key).expect()
     # metadata-only count of the just-committed snapshot (== out.count())

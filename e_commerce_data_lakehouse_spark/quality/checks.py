@@ -8,9 +8,7 @@ None of them fail the job.  The engine turns each into a
 raises, so pipelines can gate promotion (bronze→silver→gold) on data quality.
 
 Scale note: every check is a single distributed aggregate (one job, no
-``collect()`` of data rows — only the scalar results come back).  Multiple
-column checks are fused into ONE pass with conditional aggregation rather
-than a job per column.
+``collect()`` of data rows — only the scalar results come back).
 """
 
 from __future__ import annotations
@@ -56,41 +54,15 @@ def uniqueness(df: DataFrame, keys: list[str]) -> CheckResult:
     )
 
 
-def null_counts(df: DataFrame, columns: list[str]) -> CheckResult:
-    """Critical-column null audit (``verify_dbt_results.py:94-97``), fused
-    into one conditional-aggregation pass over all columns."""
-    aggs = [
-        F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(c) for c in columns
-    ]
-    row = df.agg(*aggs).collect()[0]
-    nulls = {c: row[c] or 0 for c in columns}
-    return CheckResult(
-        name=f"null_counts({','.join(columns)})",
-        passed=all(v == 0 for v in nulls.values()),
-        details=nulls,
-    )
-
-
-def retention_rate(
-    source: DataFrame,
-    target: DataFrame,
-    warn_below: float = 0.5,
-    ok_above: float = 0.95,
-) -> CheckResult:
-    """Silver/bronze retention thresholds (``verify_dbt_results.py:142-169``):
-    <50% fails (cleaning dropped too much), >95% is healthy, in between is a
-    pass-with-warning."""
-    return retention_from_counts(
-        source.count(), target.count(), warn_below, ok_above
-    )
-
-
 def retention_from_counts(
     s: int, t: int, warn_below: float = 0.5, ok_above: float = 0.95
 ) -> CheckResult:
-    """:func:`retention_rate` over row counts the caller already has
-    (e.g. ``DataFrame.observe`` metrics of the job that materialized
-    the target), so the gate costs no count job."""
+    """Silver/bronze retention thresholds over the source and target row
+    counts ``s`` and ``t`` (``verify_dbt_results.py:142-169``): <50% fails
+    (cleaning dropped too much), >95% is healthy, in between is a
+    pass-with-warning.  The counts come from the caller (e.g.
+    ``DataFrame.observe`` metrics of the job that materialized the
+    target), so the gate costs no count job."""
     rate = t / s if s else 1.0
     return CheckResult(
         name="retention_rate",
@@ -98,64 +70,6 @@ def retention_from_counts(
         details={"source": s, "target": t, "rate": round(rate, 4),
                  "healthy": rate >= ok_above},
     )
-
-
-def value_ranges(df: DataFrame, ranges: dict[str, tuple[float, float]]) -> CheckResult:
-    """Range validation (P4: month∈[1,12], temp∈[-50,150], …,
-    ``csv_to_deltalake_table.py:466-473``, ``iot_bronze_to_silver.py:146-165``)
-    — violations counted for all columns in one pass; nulls don't violate."""
-    aggs = [
-        F.sum(
-            F.when(
-                F.col(c).isNotNull() & ~F.col(c).between(lo, hi), 1
-            ).otherwise(0)
-        ).alias(c)
-        for c, (lo, hi) in ranges.items()
-    ]
-    row = df.agg(*aggs).collect()[0]
-    bad = {c: row[c] or 0 for c in ranges}
-    return CheckResult(
-        name="value_ranges",
-        passed=all(v == 0 for v in bad.values()),
-        details=bad,
-    )
-
-
-def extraction_coverage(
-    df: DataFrame, columns: list[str], min_rate: float = 0.5
-) -> CheckResult:
-    """Extraction coverage % (city/region regex hit-rate,
-    ``verify_dbt_results.py:100-104``): share of rows where the derived
-    column is non-null must clear ``min_rate``."""
-    aggs = [F.avg(F.col(c).isNotNull().cast("double")).alias(c) for c in columns]
-    row = df.agg(*aggs).collect()[0]
-    rates = {c: round(row[c] or 0.0, 4) for c in columns}
-    return CheckResult(
-        name="extraction_coverage",
-        passed=all(v >= min_rate for v in rates.values()),
-        details=rates,
-    )
-
-
-def sentinel_share(
-    df: DataFrame, key_col: str, sentinel=-1, max_rate: float = 0.05
-) -> CheckResult:
-    """-1 date-key sentinel budget (P10, ``silver_to_gold_transactions.py:113``):
-    unmatched dim lookups are allowed but bounded."""
-    row = df.agg(
-        F.avg((F.col(key_col) == F.lit(sentinel)).cast("double")).alias("rate")
-    ).collect()[0]
-    rate = row["rate"] or 0.0
-    return CheckResult(
-        name=f"sentinel_share({key_col})",
-        passed=rate <= max_rate,
-        details={"rate": round(rate, 4), "max_rate": max_rate},
-    )
-
-
-def run_all(*results: CheckResult) -> list[CheckResult]:
-    """Evaluate a batch of checks, raising on the first failure."""
-    return [r.expect() for r in results]
 
 
 def fk_orphan_stats(

@@ -1,11 +1,7 @@
-"""Sources & sinks layer (SURVEY §2.1 S1-S20)."""
+"""Sources & sinks layer (SURVEY §2.1 S6-S20)."""
 
 from e_commerce_data_lakehouse_spark.sources.files import (
-    discover_files,
     read_csv,
-    read_json,
-    read_text_envelope,
-    repair_partition_columns,
     with_lineage,
     with_partition_columns,
 )
@@ -13,33 +9,13 @@ from e_commerce_data_lakehouse_spark.sources.incremental import (
     FileLedger,
     ingest_new_files,
 )
-from e_commerce_data_lakehouse_spark.sources.kafka import (
-    OffsetCheckpoint,
-    decode_kafka_records,
-    read_kafka_batch,
-    read_kafka_stream,
-)
-from e_commerce_data_lakehouse_spark.sources.sinks import (
-    ManagedTable,
-    write_raw_csv,
-    write_raw_json,
-)
+from e_commerce_data_lakehouse_spark.sources.sinks import ManagedTable
 
 __all__ = [
     "FileLedger",
     "ManagedTable",
-    "OffsetCheckpoint",
-    "decode_kafka_records",
-    "discover_files",
     "ingest_new_files",
     "read_csv",
-    "read_json",
-    "read_kafka_batch",
-    "read_kafka_stream",
-    "read_text_envelope",
-    "repair_partition_columns",
     "with_lineage",
     "with_partition_columns",
-    "write_raw_csv",
-    "write_raw_json",
 ]

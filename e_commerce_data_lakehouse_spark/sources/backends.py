@@ -18,15 +18,18 @@ a config flip, not a rewrite:
   rows skip with that reason here and run unchanged on a cluster.
 
 The primitive surface is deliberately small — version listing, snapshot
-commit, file append, versioned read, metadata row count, restore — and
-everything relational (MERGE variants, delete/update, compaction policy,
-idempotent-append bookkeeping) stays in ``ManagedTable`` on top of it, so
-backends never re-implement semantics.
+commit, file append, versioned read, metadata row count — and everything
+relational (MERGE variants, idempotent-append bookkeeping) stays in
+``ManagedTable`` on top of it, so backends never re-implement semantics.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+# snapshot versions a parquet-backed table keeps; older ones are pruned
+# at each commit
+KEEP_VERSIONS = 3
 
 
 class BackendUnavailable(RuntimeError):
@@ -38,8 +41,8 @@ class ParquetSnapshotBackend:
 
     Each mutation that produces a new table state writes a NEW ``v=N``
     directory (atomic at the directory level via Spark's ``_SUCCESS``
-    commit marker), which yields history / time travel / restore with
-    plain parquet.  Appends add files to the CURRENT version directory —
+    commit marker), which yields history and time travel with plain
+    parquet.  Appends add files to the CURRENT version directory —
     O(new data), with the cache-refresh caveat documented on
     :meth:`ManagedTable.append`.
     """
@@ -47,12 +50,11 @@ class ParquetSnapshotBackend:
     name = "parquet"
 
     def __init__(self, spark: SparkSession, path: str,
-                 partition_by: tuple[str, ...] = (), keep_versions: int = 3,
+                 partition_by: tuple[str, ...] = (),
                  optimized_write: bool = False):
         self.spark = spark
         self.path = path.rstrip("/")
         self.partition_by = partition_by
-        self.keep_versions = keep_versions
         self.optimized_write = optimized_write
 
     # -- version bookkeeping ------------------------------------------------
@@ -181,7 +183,7 @@ class ParquetSnapshotBackend:
         import shutil
 
         for v in self.versions():
-            if v <= keep_from - self.keep_versions:
+            if v <= keep_from - KEEP_VERSIONS:
                 shutil.rmtree(self.vpath(v), ignore_errors=True)
 
 
@@ -207,15 +209,15 @@ class DeltaBackend:
       WRITE numOutputRows chain back to the last overwrite — metadata
       only); falls back to a count job over the snapshot when a foreign
       operation or missing stats interrupt the chain
-    - pruning        → Delta retains history until ``VACUUM``; the
-      ``keep_versions`` knob maps to a retention policy, not per-commit
+    - pruning        → Delta retains history until ``VACUUM``;
+      :data:`KEEP_VERSIONS` maps to a retention policy, not per-commit
       deletion, so it is a no-op here.
     """
 
     name = "delta"
 
     def __init__(self, spark: SparkSession, path: str,
-                 partition_by: tuple[str, ...] = (), keep_versions: int = 3,
+                 partition_by: tuple[str, ...] = (),
                  optimized_write: bool = False):
         try:
             from delta.tables import DeltaTable  # noqa: F401
@@ -228,7 +230,6 @@ class DeltaBackend:
         self.spark = spark
         self.path = path.rstrip("/")
         self.partition_by = partition_by
-        self.keep_versions = keep_versions
         self.optimized_write = optimized_write
 
     def _delta_table(self):
@@ -324,7 +325,7 @@ _BACKENDS = {
 
 
 def make_backend(kind: str, spark: SparkSession, path: str,
-                 partition_by: tuple[str, ...] = (), keep_versions: int = 3,
+                 partition_by: tuple[str, ...] = (),
                  optimized_write: bool = False):
     try:
         cls = _BACKENDS[kind]
@@ -333,4 +334,4 @@ def make_backend(kind: str, spark: SparkSession, path: str,
             f"unknown backend {kind!r}; available: {sorted(_BACKENDS)}"
         ) from None
     return cls(spark, path, partition_by=partition_by,
-               keep_versions=keep_versions, optimized_write=optimized_write)
+               optimized_write=optimized_write)

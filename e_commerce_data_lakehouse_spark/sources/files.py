@@ -1,22 +1,18 @@
-"""File sources: schema-bound CSV/JSON, text+envelope parse, discovery, lineage.
+"""File sources: schema-bound CSV, lineage, derived partition columns.
 
-Covers SURVEY §2.1 S6-S9 and S20.  Reference behaviors re-expressed
+Covers SURVEY §2.1 S6 and S20.  Reference behaviors re-expressed
 Spark-first:
 
 - S6 CSV with explicit schema (``csv_to_deltalake_table.py:236-268``): the
   reference disables ``inferSchema`` and binds a 22-field StructType — we keep
   schema-on-read explicit (an inference pass is a full extra scan at 100 TB).
-- S7 schema-bound JSON (``transactions_processor.py:58-65``).
-- S8 text + double ``from_json`` envelope parse
-  (``sensor_to_deltalake_table.py:186-292``): the reference loops file-by-file
-  on the driver with a ``count()`` per file — at 100 TB that is thousands of
-  sequential Spark jobs.  Here ONE distributed ``spark.read.text`` over the
-  whole glob does it, with ``input_file_name()`` replacing the per-file
-  ``lit(path)`` tag; gzip is handled transparently by the text source.
-- S9 recursive discovery (``csv_to_deltalake_table.py:127-218``).
 - S20 lineage column (``csv_to_deltalake_table.py:271``).
-- P8 derived partition columns with fallback chain + null repair/range
-  validation (``csv_to_deltalake_table.py:333-362, 420-480``).
+- P8 derived partition columns with a fallback chain
+  (``csv_to_deltalake_table.py:333-362``).
+
+JSON and text-envelope reads are one ``spark.read`` call each and need no
+wrapper: the ``envelope_parse`` query runs the double ``from_json`` parse
+inline.
 """
 
 from __future__ import annotations
@@ -41,70 +37,6 @@ def read_csv(
     return reader.csv(paths)
 
 
-def read_json(
-    spark: SparkSession, paths: str | list[str], schema: StructType, **options: str
-) -> DataFrame:
-    """S7: schema-bound JSON-lines read."""
-    reader = spark.read.schema(schema)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.json(paths)
-
-
-def read_text_envelope(
-    spark: SparkSession,
-    paths: str | list[str],
-    envelope_schema: StructType,
-    payload_field: str,
-    payload_schema: StructType,
-    keep_raw: bool = False,
-) -> DataFrame:
-    """S8: read raw text (gzip-aware), parse the Kafka envelope with
-    ``from_json``, then parse the nested payload string with a second
-    ``from_json``, flattening both levels.
-
-    One distributed scan replaces the reference's driver-side per-file loop
-    (``sensor_to_deltalake_table.py:180-238``).  Rows whose envelope fails to
-    parse (from_json -> null) are dropped, matching the reference's
-    ``filter(col("json_data").isNotNull())``.
-    """
-    lines = spark.read.text(paths).withColumn("source_file", F.input_file_name())
-    env = (
-        lines.withColumn("envelope", F.from_json("value", envelope_schema))
-        .select("source_file", "envelope.*")
-        .filter(F.col(payload_field).isNotNull())
-    )
-    parsed = env.withColumn("payload", F.from_json(F.col(payload_field), payload_schema))
-    keep = [c for c in env.columns if c != payload_field]
-    if keep_raw:
-        keep.append(F.col(payload_field).alias("raw_payload"))
-    return parsed.select(*keep, "payload.*")
-
-
-def discover_files(
-    spark: SparkSession, root: str, extensions: tuple[str, ...] = ()
-) -> list[str]:
-    """S9: recursive file discovery.  The reference globs Hive patterns then
-    filters ``df.inputFiles()`` by extension — same approach, but with
-    ``recursiveFileLookup`` so it needs no assumed directory depth.
-
-    NOTE: returns a driver-side list because the *ledger* logic needs file
-    paths, not data; the listing itself is performed by the distributed
-    in-memory file index, and only paths (not rows) come back.
-    """
-    df = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*")
-        .load(root)
-        .select("path")
-    )
-    paths = [r.path for r in df.collect()]
-    if extensions:
-        paths = [p for p in paths if p.endswith(extensions)]
-    return sorted(paths)
-
-
 def with_lineage(df: DataFrame) -> DataFrame:
     """S20: tag every row with its source file (audit/debug lineage)."""
     return df.withColumn("source_file", F.input_file_name())
@@ -123,24 +55,3 @@ def with_partition_columns(
         .withColumn(f"{prefix}day", F.dayofmonth(ts))
     )
 
-
-def repair_partition_columns(
-    df: DataFrame,
-    year_col: str = "year",
-    month_col: str = "month",
-    day_col: str = "day",
-    fallback_ts: str | None = None,
-) -> DataFrame:
-    """P4/P5 partition null-repair + range validation before writes
-    (``csv_to_deltalake_table.py:420-480``): null partitions are repaired
-    from a fallback timestamp (or current_date), and out-of-range rows
-    (month not in [1,12], day not in [1,31]) are dropped."""
-    fb = F.col(fallback_ts) if fallback_ts else F.current_date()
-    df = (
-        df.withColumn(year_col, F.coalesce(F.col(year_col), F.year(fb)))
-        .withColumn(month_col, F.coalesce(F.col(month_col), F.month(fb)))
-        .withColumn(day_col, F.coalesce(F.col(day_col), F.dayofmonth(fb)))
-    )
-    return df.filter(
-        F.col(month_col).between(1, 12) & F.col(day_col).between(1, 31)
-    )

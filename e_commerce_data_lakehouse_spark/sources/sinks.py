@@ -1,18 +1,11 @@
-"""Sinks + managed-table ops: S4/S5 raw sinks, S11-S18 table lifecycle.
+"""Managed-table ops: the S11-S17 table lifecycle.
 
-Raw sinks (S4 CSV, S5 JSON): the reference ``coalesce(1)``s every raw write
-(``transactions_processor.py:295-306``, ``iot_sensors_processor.py:216-228``)
-— a single-task write that serializes the whole dataset through one core; at
-100 TB it simply never finishes.  The engine never coalesces: it bounds file
-count with ``maxRecordsPerFile`` and lets AQE coalesce partitions, which
-keeps writes parallel AND files right-sized.
-
-Managed tables (S11-S18): the container has no Delta runtime, so
-:class:`ManagedTable` provides the same lifecycle over parquet —
-create/append/overwrite/merge/compact — with the Delta call noted per method
-as the drop-in physical replacement on a cluster.  MERGE is a full-table
-rewrite here (the relational definition); Delta/Iceberg MERGE rewrites only
-matched files, which is why it's the scale path.
+The container has no Delta runtime, so :class:`ManagedTable` provides the
+same lifecycle over parquet — create/append/overwrite/merge — with the
+Delta call noted per method as the drop-in physical replacement on a
+cluster.  MERGE is a full-table rewrite here (the relational definition);
+Delta/Iceberg MERGE rewrites only matched files, which is why it's the
+scale path.
 
 A MERGE reads its ``updates`` twice (the uniqueness probe, then the
 snapshot commit, whose union and anti join each scan it), so
@@ -26,17 +19,16 @@ is false by default), so a cached ``updates`` keeps all
 writes that many more files — on one gen-sf1 orders increment, silver
 4 -> 34 parquet files and ``dim_customer_ids`` 1 -> 32.  The
 checkpoint keeps the AQE-coalesced partitioning (4 and 1, as without
-materialization).
+materialization).  Whoever makes such a checkpoint releases it after its
+last consumer (:func:`release_checkpoint`): its blocks otherwise stay in
+executor storage until the JVM happens to collect the RDD.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from e_commerce_data_lakehouse_spark.operators.merge import (
-    insert_only_merge,
-    scd1_merge,
-)
+from e_commerce_data_lakehouse_spark.operators.merge import scd1_merge
 
 
 def _materialized(df: DataFrame) -> DataFrame:
@@ -53,41 +45,13 @@ def _materialized(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def write_raw_csv(
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...] = ("year", "month", "day"),
-    max_records_per_file: int = 10_000,
-) -> None:
-    """S4: partitioned CSV raw-layer sink (``transactions_processor.py:295-306``),
-    minus the ``coalesce(1)`` anti-pattern."""
-    (
-        df.write.mode("append")
-        .option("header", "true")
-        .option("quote", '"')
-        .option("escape", '"')
-        .option("maxRecordsPerFile", str(max_records_per_file))
-        .partitionBy(*partition_by)
-        .csv(path)
-    )
-
-
-def write_raw_json(
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...] = ("year", "month", "day"),
-    max_records_per_file: int = 10_000,
-    compression: str = "gzip",
-) -> None:
-    """S5: partitioned gzip JSON raw-layer sink
-    (``iot_sensors_processor.py:216-228``), parallel write."""
-    (
-        df.write.mode("append")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", str(max_records_per_file))
-        .partitionBy(*partition_by)
-        .json(path)
-    )
+def release_checkpoint(df: DataFrame | None) -> None:
+    """Drop the executor blocks of ``df``, an eager ``localCheckpoint``
+    (the plan :func:`_materialized` makes), now rather than when the JVM
+    collects its RDD.  Call it after the checkpoint's last consumer; a
+    later read of ``df`` fails."""
+    if df is not None:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(True)
 
 
 class ManagedTable:
@@ -97,14 +61,15 @@ class ManagedTable:
     per Spark job; for multi-writer ACID use Delta/Iceberg on the cluster.
 
     Versioning (S17): every mutation writes a new ``v=N`` snapshot directory
-    and the table reads resolve to the latest — which gives ``history()``,
-    ``versionAsOf`` time travel, and ``restore`` with plain parquet
-    (`delta_reader.py:156, 162, 74-88` use the Delta equivalents).  Old
-    snapshots are pruned beyond ``keep_versions`` (Delta: ``VACUUM``).
+    and the table reads resolve to the latest — which gives ``history()``
+    and ``versionAsOf`` time travel with plain parquet
+    (`delta_reader.py:156, 162` use the Delta equivalents).  Snapshots
+    older than the newest :data:`backends.KEEP_VERSIONS` are pruned (Delta:
+    ``VACUUM``).
     """
 
     def __init__(self, spark: SparkSession, path: str,
-                 partition_by: tuple[str, ...] = (), keep_versions: int = 3,
+                 partition_by: tuple[str, ...] = (),
                  backend: str = "parquet", optimized_write: bool = False):
         from e_commerce_data_lakehouse_spark.sources.backends import (
             make_backend,
@@ -113,19 +78,17 @@ class ManagedTable:
         self.spark = spark
         self.path = path.rstrip("/")
         self.partition_by = partition_by
-        self.keep_versions = keep_versions
         # the storage seam (r10 VERDICT ask #5): everything physical —
         # version listing, snapshot commit, file append, versioned read,
         # metadata row count — goes through the backend; everything
-        # relational (MERGE variants, delete/update, idempotent append,
-        # compaction policy) stays here on top of it.  backend="delta"
-        # flips to real Delta on a cluster (import-gated in-sandbox);
-        # the contract suite (tests/test_table_backends.py) runs the
-        # same assertions against every available backend.
+        # relational (MERGE variants, idempotent append) stays here on
+        # top of it.  backend="delta" flips to real Delta on a cluster
+        # (import-gated in-sandbox); the contract suite
+        # (tests/test_table_backends.py) runs the same assertions against
+        # every available backend.
         self._backend = make_backend(
             backend, spark, self.path,
-            partition_by=partition_by, keep_versions=keep_versions,
-            optimized_write=optimized_write,
+            partition_by=partition_by, optimized_write=optimized_write,
         )
 
     # -- version bookkeeping ------------------------------------------------
@@ -165,10 +128,6 @@ class ManagedTable:
         ``create_global_dw.py:451-540``)."""
         return self._backend.row_count(self._resolve_version(version_as_of))
 
-    def restore_to_version(self, version: int) -> None:
-        """S17: ``restoreToVersion`` — re-commit an old snapshot as newest."""
-        self._commit(self.read(version_as_of=version))
-
     def _commit(self, df: DataFrame) -> None:
         self._backend.commit(df)
 
@@ -183,7 +142,7 @@ class ManagedTable:
         into the CURRENT version directory — a parallel file-level append,
         never a table rewrite (at 100 TB an append must be O(new data)).
         Time-travel granularity for appends therefore comes from the next
-        snapshot-producing op (merge/overwrite/compact), matching how one
+        snapshot-producing op (merge/overwrite), matching how one
         would checkpoint batches; Delta versions every append.
 
         CAVEAT (because append writes into the CURRENT version dir): if
@@ -220,12 +179,18 @@ class ManagedTable:
         ~``spark.sql.shuffle.partitions`` extra files (silver 4 -> 34,
         ``dim_customer_ids`` 1 -> 32 on a gen-sf1 orders increment; see
         the module docstring).  The first commit has one consumer and
-        writes ``updates`` as is."""
+        writes ``updates`` as is.  A checkpoint this call made is
+        released after the commit; one the caller made stays the
+        caller's to release."""
         if not self.exists():
             self._commit(updates)
             return
-        updates = _materialized(updates)
-        self._commit(scd1_merge(self.read(), updates, keys))
+        materialized = _materialized(updates)
+        try:
+            self._commit(scd1_merge(self.read(), materialized, keys))
+        finally:
+            if materialized is not updates:
+                release_checkpoint(materialized)
 
     def merge_latest(
         self, updates: DataFrame, keys: list[str], ts_col: str
@@ -275,57 +240,3 @@ class ManagedTable:
         import os
 
         return os.path.exists(f"{self.path}/_txn/{txn_id}")
-
-    def delete_where(self, condition) -> int:
-        """Delta ``DELETE FROM table WHERE cond`` — the GDPR-erasure /
-        bad-batch-removal path.  Returns the number of rows deleted and
-        commits a new snapshot, so the deletion is itself versioned
-        (auditable, and reversible until vacuum via time travel — exactly
-        Delta's contract).  Snapshot rewrite here; Delta rewrites only the
-        files whose stats overlap the predicate.
-
-        SQL semantics: a row whose ``condition`` is NULL is kept, as in
-        ``DELETE`` (``~condition`` alone would drop it too)."""
-        from pyspark.sql import functions as _F
-
-        cur = self.read()
-        deleted = cur.filter(condition).count()
-        if deleted:
-            self._commit(cur.filter(~_F.coalesce(condition, _F.lit(False))))
-        return deleted
-
-    def update_where(self, condition, assignments: dict) -> int:
-        """Delta ``UPDATE table SET ... WHERE cond``: conditional column
-        rewrite, committed as a new version.  ``assignments`` maps column
-        name -> Column expression applied only where ``condition`` holds."""
-        from pyspark.sql import functions as _F
-
-        cur = self.read()
-        touched = cur.filter(condition).count()
-        out = cur
-        for col, expr in assignments.items():
-            out = out.withColumn(
-                col, _F.when(condition, expr).otherwise(_F.col(col))
-            )
-        if touched:
-            self._commit(out)
-        return touched
-
-    def merge_insert_only(self, updates: DataFrame, keys: list[str]) -> None:
-        """S15: insert-if-absent for immutable dims
-        (``silver_to_gold_customer_images.py:77-79``)."""
-        merged = (
-            insert_only_merge(self.read(), updates, keys)
-            if self.exists()
-            else updates
-        )
-        self._commit(merged)
-
-    def compact(self, target_partitions: int | None = None) -> None:
-        """S18: OPTIMIZE-equivalent small-file compaction — rewrite at a
-        bounded partition count (Delta: ``OPTIMIZE delta.`path```)."""
-        df = self.read()
-        if target_partitions:
-            df = df.repartition(target_partitions, *self.partition_by) \
-                if self.partition_by else df.repartition(target_partitions)
-        self._commit(df)

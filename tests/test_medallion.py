@@ -429,3 +429,67 @@ def test_fact_orders_partitions_are_order_months(spark, tmp_path):
     want = dated.filter(F.col("oy") == y).select("o_orderkey")
     assert keys.count() == want.count() > 0
     assert keys.exceptAll(want).count() == 0
+
+
+def _storage_bytes(spark) -> int:
+    """Memory plus disk of every persisted or checkpointed RDD block."""
+    return sum(
+        info.memSize() + info.diskSize()
+        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    )
+
+
+def _storage_back_to(spark, level: int) -> int:
+    """Storage once it falls to ``level``, or after ~5 s; a plain
+    ``unpersist()`` (the gold star's cached silver) drops its blocks
+    asynchronously, a leaked checkpoint never within that time."""
+    import time
+
+    for _ in range(50):
+        now = _storage_bytes(spark)
+        if now <= level:
+            break
+        time.sleep(0.1)
+    return now
+
+
+def test_increments_release_their_checkpoints(spark, tmp_path):
+    """An orders increment (silver delta, merged dimension updates) and
+    an incremental corpus batch leave no checkpoint blocks behind in
+    executor storage."""
+    from e_commerce_data_lakehouse_spark.entry_queries import load
+    from e_commerce_data_lakehouse_spark.plans.corpus_medallion import (
+        ingest_corpus_batch,
+        run_incremental,
+    )
+
+    start = _storage_bytes(spark)
+    work = str(tmp_path / "orders")
+    m.e2e_orders_pipeline(spark, SF, work)
+    # a later delivery: new orders past silver's watermark, new customers
+    spark.read.parquet(f"{SF}/orders.parquet").limit(50).select(
+        (F.col("o_orderkey") + 10_000_000).alias("o_orderkey"),
+        (F.col("o_custkey") + 10_000_000).alias("o_custkey"),
+        "o_orderstatus",
+        "o_totalprice",
+        F.lit("2001-10-15").cast("date").alias("o_orderdate"),
+    ).write.option("header", "true").csv(f"{work}/raw/drop_c")
+    n_orders = spark.read.parquet(f"{SF}/orders.parquet").count()
+    runs, tables = m.e2e_orders_pipeline(spark, SF, work)
+    assert runs[2].result.rows_written == n_orders + 50
+    assert tables["dim_customer_ids"].read().filter(
+        F.col("o_custkey") >= 10_000_000
+    ).count() > 0
+    assert _storage_back_to(spark, start) <= start
+
+    docs = load(spark, SF, "documents")["documents"]
+    mid = docs.agg(F.percentile_approx("doc_id", 0.5)).first()[0]
+    _, corpus = run_incremental(
+        spark, str(tmp_path / "corpus"), [docs.filter(F.col("doc_id") <= mid)]
+    )
+    runs = ingest_corpus_batch(
+        spark, corpus, docs.filter(F.col("doc_id") > mid), "b2"
+    )
+    assert [r.status for r in runs] == ["success"] * 5
+    assert runs[0].result.rows_written > 0
+    assert _storage_back_to(spark, start) <= start

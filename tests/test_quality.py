@@ -19,45 +19,14 @@ def test_uniqueness(spark):
         r.expect()
 
 
-def test_null_counts_fused_single_pass(spark):
-    cust = spark.read.parquet(f"{SF}/customer.parquet")
-    r = q.null_counts(cust, ["c_custkey", "c_name", "c_nationkey"])
-    assert r.passed and set(r.details) == {"c_custkey", "c_name", "c_nationkey"}
-
-
-def test_retention_rate(spark):
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    kept = orders.sample(0.8, seed=1)
-    r = q.retention_rate(orders, kept)
-    assert r.passed and 0.7 < r.details["rate"] < 0.9
-    almost_empty = orders.limit(10)
-    assert not q.retention_rate(orders, almost_empty).passed
-
-
-def test_value_ranges(spark):
-    line = spark.read.parquet(f"{SF}/lineitem.parquet")
-    assert q.value_ranges(line, {"l_discount": (0.0, 0.2)}).passed
-    assert not q.value_ranges(line, {"l_quantity": (0.0, 5.0)}).passed
-
-
-def test_extraction_coverage_and_sentinel(spark):
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    assert q.extraction_coverage(orders, ["o_orderstatus"], min_rate=0.5).passed
-    df = spark.createDataFrame(
-        [(1,), (-1,), (2,), (3,)], ["date_key"]
-    )
-    assert not q.sentinel_share(df, "date_key", max_rate=0.05).passed
-    assert q.sentinel_share(df, "date_key", max_rate=0.5).passed
-
-
-def test_run_all_raises_on_failure(spark):
-    cust = spark.read.parquet(f"{SF}/customer.parquet")
-    ok = q.uniqueness(cust, ["c_custkey"])
-    bad = q.uniqueness(
-        spark.read.parquet(f"{SF}/lineitem.parquet"), ["l_orderkey"]
-    )
-    with pytest.raises(AssertionError):
-        q.run_all(ok, bad)
+def test_retention_rate():
+    r = q.retention_from_counts(1000, 800)
+    assert r.passed and r.details["rate"] == 0.8
+    assert not r.details["healthy"]
+    assert q.retention_from_counts(1000, 960).details["healthy"]
+    assert not q.retention_from_counts(1000, 10).passed
+    # an empty source retains everything
+    assert q.retention_from_counts(0, 0).passed
 
 
 def test_approx_count_distinct_within_tolerance(spark):

@@ -85,33 +85,6 @@ def test_merge_scd1_upserts(make_table, spark):
     assert got == {1: "a", 2: "B", 3: "c"}
 
 
-def test_merge_insert_only_keeps_existing(make_table, spark):
-    t = make_table()
-    t.create(_df(spark, [(1, "a", 10)]))
-    t.merge_insert_only(_df(spark, [(1, "A", 11), (2, "b", 20)]), ["k"])
-    got = dict((r.k, r.v) for r in t.read().collect())
-    assert got == {1: "a", 2: "b"}
-
-
-def test_delete_update_where(make_table, spark):
-    t = make_table()
-    t.create(_df(spark, [(1, "a", 10), (2, "b", 20), (3, "c", 30)]))
-    assert t.delete_where(F.col("k") == 2) == 1
-    assert t.update_where(F.col("k") == 3, {"v": F.lit("C")}) == 1
-    got = dict((r.k, r.v) for r in t.read().collect())
-    assert got == {1: "a", 3: "C"}
-
-
-def test_delete_where_keeps_rows_whose_condition_is_null(make_table, spark):
-    """SQL/Delta ``DELETE``: only rows whose condition is TRUE go; a NULL
-    condition keeps the row and is not counted as deleted."""
-    t = make_table()
-    t.create(_df(spark, [(1, "a", 10), (2, None, 20), (3, "c", 30)]))
-    assert t.delete_where(F.col("v") == "a") == 1
-    assert sorted(r.k for r in t.read().collect()) == [2, 3]
-    assert t.delete_where(F.col("v") == "zzz") == 0
-
-
 def test_merge_scd1_evaluates_updates_once(make_table, spark):
     """The duplicate probe and the commit both read one materialization
     of ``updates``: every row of its lineage is evaluated exactly once
@@ -131,15 +104,6 @@ def test_merge_scd1_evaluates_updates_once(make_table, spark):
     assert evaluated.value == 3
     got = dict((r.k, r.v) for r in t.read().collect())
     assert got == {1: "a", 2: "B", 3: "c", 4: "d"}
-
-
-def test_restore_to_version(make_table, spark):
-    t = make_table()
-    t.create(_df(spark, [(1, "a", 10)]))
-    v0 = t.history()[-1]
-    t.overwrite(_df(spark, [(2, "b", 20)]))
-    t.restore_to_version(v0)
-    assert [r.k for r in t.read().collect()] == [1]
 
 
 def test_row_count_matches_data(make_table, spark):
@@ -168,14 +132,6 @@ def test_partitioned_write_and_empty_commit(make_table, spark):
     t.overwrite(_df(spark, []).filter("1=0"))
     assert t.read().count() == 0
     assert t.read().columns == ["k", "v", "ts"]
-
-
-def test_compact_preserves_rows(make_table, spark):
-    t = make_table()
-    t.create(_df(spark, [(i, "x", i) for i in range(50)]).repartition(8))
-    before = sorted(r.k for r in t.read().collect())
-    t.compact(target_partitions=2)
-    assert sorted(r.k for r in t.read().collect()) == before
 
 
 def test_unknown_backend_rejected(spark, tmp_path):

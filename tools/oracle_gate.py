@@ -23,9 +23,13 @@ rather than silently half-compared.
 
 Usage:
   SPARK_DRIVER_MEMORY=16g python tools/oracle_gate.py \
-      [--sf-dir .scaledata/sf1] [--out artifacts/oracle_gen_sf1.jsonl] \
+      [--sf-dir .scaledata/sf1] [--out .scaledata/oracle_gen_sf1.jsonl] \
       [--queries n1 n2 ... | default scale-sensitive set] \
       [--oracle-timeout 900] [--max-rows 3000000]
+
+Records append to ``--out``, by default under the gitignored
+``.scaledata/``; a run meant for a committed artifact names its
+``artifacts/...`` file with an explicit ``--out``.
 """
 
 from __future__ import annotations
@@ -113,7 +117,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.path.join(ROOT, ".scaledata/sf1"))
     ap.add_argument(
-        "--out", default=os.path.join(ROOT, "artifacts/oracle_gen_sf1.jsonl")
+        "--out", default=os.path.join(ROOT, ".scaledata/oracle_gen_sf1.jsonl")
     )
     ap.add_argument("--queries", nargs="+", default=None)
     ap.add_argument(
@@ -173,6 +177,7 @@ def main() -> int:
                 ) in ("ok", "fail", "skip"):
                     done.add(rec["q"])
     todo = [(n, r) for n, r in todo if n not in done]
+    os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
     out = open(args.out, "a")
 
     def emit(rec: dict) -> None:
